@@ -1,7 +1,7 @@
 """Seeded input generator for the benchmark.
 
-Writes the corpus tables the workloads read (`documents` and `embeddings`,
-with the names, column types and value domains of the repository's corpus),
+Writes the corpus tables the workloads read (the ten tables of the
+repository's corpus, with their names, column types and value domains),
 the Wistia-shaped raw payloads of the nightly pipeline (derived from
 generated `events` and `part` rows), and the advance pools of the store
 workload. The same seed always gives the same bytes of input data; another
@@ -23,6 +23,11 @@ VOCAB = [
 PART_ADJ = ["red", "new", "hot", "small", "cold", "large", "old", "blue"]
 PART_NOUN = ["bolt", "anvil", "ring", "rod", "plate", "gear", "widget", "gizmo"]
 PART_TYPES = ["LARGE", "ECONOMY", "STANDARD", "SMALL", "MEDIUM", "PROMO"]
+REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
+SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+          "events", "documents", "embeddings"]
 EVENT_TYPES = ["signup", "click", "error", "view", "purchase"]
 LANGS = ["en", "zh", "de", "fr", "es"]
 LANG_P = [0.41, 0.15, 0.14, 0.15, 0.15]
@@ -30,6 +35,7 @@ LANG_P = [0.41, 0.15, 0.14, 0.15, 0.15]
 DAYS = 30
 EPOCH_2024_US = 1704067200 * 1_000_000  # 2024-01-01T00:00:00Z in micros
 DAY_US = 86_400 * 1_000_000
+ORDER_DAY0 = 9131  # 1995-01-01 in days since the epoch
 N_MEDIA = 40
 FILES_PER_RUN = 3
 MAX_NIGHTS = 10  # raw payloads are written for the first MAX_NIGHTS days
@@ -43,7 +49,9 @@ def sizes(sf):
     sf0.001/sf0.01/sf0.1 corpora)."""
     return {
         "part": int(200_000 * sf), "events": int(1_000_000 * sf),
-        "users": int(15_000 * sf),
+        "users": int(15_000 * sf), "customer": int(150_000 * sf),
+        "supplier": int(10_000 * sf), "orders": int(1_500_000 * sf),
+        "lineitem": int(6_000_000 * sf),
         "documents": 500 if sf <= 0.01 else int(50_000 * sf),
         "embeddings": 500 if sf <= 0.01 else int(20_000 * sf),
     }
@@ -93,12 +101,68 @@ def _embeddings(rng, n, first_id):
     })
 
 
+def _days(days):
+    return pa.array(days.astype("int64") * DAY_US, pa.int64()).cast(pa.timestamp("us"))
+
+
+def _money(g, lo, hi, m):
+    return pa.array(np.round(g.uniform(lo, hi, m), 2))
+
+
 def corpus(seed, sf, tables):
-    """The corpus tables named in `tables` (of part, events, documents and
-    embeddings), as pyarrow tables."""
+    """The corpus tables named in `tables` (any of TABLES), as pyarrow
+    tables. Every column is drawn independently and uniformly over the value
+    domain the repository's corpus has, and keys reference existing rows."""
     n = sizes(sf)
-    r = _rngs(seed, ["part", "events", "documents", "embeddings"])
+    r = _rngs(seed, TABLES)
     out = {}
+    if "region" in tables:
+        out["region"] = pa.table({
+            "r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
+            "r_name": pa.array(REGIONS)})
+    if "nation" in tables:
+        out["nation"] = pa.table({
+            "n_nationkey": pa.array(np.arange(25, dtype=np.int32)),
+            "n_name": pa.array([f"NATION_{i}" for i in range(25)]),
+            "n_regionkey": pa.array(np.arange(25, dtype=np.int32) % 5)})
+    if "customer" in tables:
+        g, m = r["customer"], n["customer"]
+        out["customer"] = pa.table({
+            "c_custkey": pa.array(np.arange(m, dtype=np.int64)),
+            "c_name": pa.array([f"Customer#{i:09d}" for i in range(m)]),
+            "c_nationkey": pa.array(g.integers(0, 25, m).astype(np.int32)),
+            "c_acctbal": _money(g, -999.99, 9999.99, m),
+            "c_mktsegment": pa.array([SEGMENTS[i] for i in g.integers(0, 5, m)])})
+    if "supplier" in tables:
+        g, m = r["supplier"], n["supplier"]
+        out["supplier"] = pa.table({
+            "s_suppkey": pa.array(np.arange(m, dtype=np.int64)),
+            "s_name": pa.array([f"Supplier#{i:09d}" for i in range(m)]),
+            "s_nationkey": pa.array(g.integers(0, 25, m).astype(np.int32)),
+            "s_acctbal": _money(g, -999.99, 9999.99, m)})
+    if "orders" in tables:
+        g, m = r["orders"], n["orders"]
+        out["orders"] = pa.table({
+            "o_orderkey": pa.array(np.arange(m, dtype=np.int64)),
+            "o_custkey": pa.array(g.integers(0, n["customer"], m)),
+            "o_orderstatus": pa.array([("F", "O", "P")[i] for i in g.integers(0, 3, m)]),
+            "o_totalprice": _money(g, 1000.0, 500000.0, m),
+            "o_orderdate": _days(ORDER_DAY0 + g.integers(0, 2404, m)),
+            "o_orderpriority": pa.array([PRIORITIES[i] for i in g.integers(0, 5, m)])})
+    if "lineitem" in tables:
+        g, m = r["lineitem"], n["lineitem"]
+        out["lineitem"] = pa.table({
+            "l_orderkey": pa.array(g.integers(0, n["orders"], m)),
+            "l_partkey": pa.array(g.integers(0, n["part"], m)),
+            "l_suppkey": pa.array(g.integers(0, n["supplier"], m)),
+            "l_linenumber": pa.array(g.integers(1, 8, m).astype(np.int32)),
+            "l_quantity": pa.array(g.integers(1, 51, m).astype(np.float64)),
+            "l_extendedprice": _money(g, 900.0, 105000.0, m),
+            "l_discount": pa.array(g.integers(0, 11, m) / 100.0),
+            "l_tax": pa.array(g.integers(0, 9, m) / 100.0),
+            "l_returnflag": pa.array([("A", "N", "R")[i] for i in g.integers(0, 3, m)]),
+            "l_linestatus": pa.array([("F", "O")[i] for i in g.integers(0, 2, m)]),
+            "l_shipdate": _days(ORDER_DAY0 + 1 + g.integers(0, 2499, m))})
     if "part" in tables:
         g, m = r["part"], n["part"]
         adj, noun = g.integers(0, 8, m), g.integers(0, 8, m)
@@ -209,6 +273,12 @@ def wistia(seed, sf, out_dir):
             "medias": hashed, "events": int(keep.sum())}
 
 
+# Layout of the store advance pools: ADVANCE_BATCHES batches of
+# ADVANCE_BATCH new ids each, from ADVANCE_ID_BASE on. The harness reads it
+# from the manifest.
+POOL = {"batch": ADVANCE_BATCH, "batches": ADVANCE_BATCHES, "id_base": ADVANCE_ID_BASE}
+
+
 def store_pools(seed, sf):
     """New documents and vectors for the store advances (ids above the corpus)."""
     g = _rngs(seed, ["pool_docs", "pool_vecs"])
@@ -220,6 +290,7 @@ def store_pools(seed, sf):
 WORKLOAD_TABLES = {
     "store_serving": ["documents", "embeddings"],
     "wistia_nights": [],
+    "query_registry": TABLES,
 }
 
 
@@ -237,6 +308,7 @@ def write(workload, seed, sf, out_dir):
         pq.write_table(vecs, os.path.join(out_dir, "advance_pool", "embeddings.parquet"))
         manifest["tables"]["advance_docs"] = docs.num_rows
         manifest["tables"]["advance_vecs"] = vecs.num_rows
+        manifest["pool"] = POOL
     if workload == "wistia_nights":
         manifest["wistia"] = wistia(seed, sf, os.path.join(out_dir, "wistia"))
     with open(os.path.join(out_dir, "manifest.json"), "w") as f:

@@ -9,7 +9,7 @@ END_TO_END = {"setup_s": "s", "ops_per_s": "1/s", "op_p50_s": "s", "retained_hea
 SPARK = ["spark.jobs", "spark.stages", "spark.tasks", "spark.task_s", "spark.cpu_s",
          "spark.gc_s", "spark.shuffle_read_mb", "spark.shuffle_write_mb",
          "spark.spill_mb", "spark.input_mb", "spark.output_mb", "spark.idle_s"]
-STORAGE = ["storage.persisted_rdds", "storage.persisted_mb"]
+STORAGE = ["storage.persisted_rdds", "storage.persisted_mb", "storage.released_rdds"]
 SOURCES = ["rawzone.land_s", "rawzone.runs_listed", "warehouse.files", "warehouse.mb",
            "pipeline.batch_gated_s", "pipeline.stream_gated_s", "streaming.triggers",
            "retention.s", "retention.units", "runlog.dq_gate_ms", "runlog.dim_media_ms",
@@ -18,8 +18,14 @@ SOURCES = ["rawzone.land_s", "rawzone.runs_listed", "warehouse.files", "warehous
 STORE = ["serve.text_s", "serve.vector_s", "advance.rag_s", "advance.vec_s",
          "snapshots.depth_rag", "snapshots.depth_vec", "snapshots.mb", "recall_probe_s",
          "recall", "text_p50_s", "vector_p50_s"]
-RUN = ["fail_ratio", "trace.overhead", "trace.harness_s", "trace.coverage", "host.calib_s"]
-PER_LAYER = SPARK + STORAGE + SOURCES + STORE + RUN
+# the objects Registry.all concatenates
+MODULES = ["Relational", "GraphOps", "TextOps", "TrainPrep", "Dedup", "Similarity",
+           "VecStore", "Multimodal", "EventOps", "AsOf", "Skew", "WistiaGate"]
+REGISTRY = [f"registry.{m}_{x}" for m in MODULES for x in ("s", "jobs")]
+RUN = ["fail_ratio", "trace.harness_s", "trace.coverage", "host.calib_s"]
+PER_LAYER = SPARK + STORAGE + SOURCES + STORE + REGISTRY + RUN
+# the request kinds of store_serving, about 1.4x apart in latency
+REQUEST_KINDS = ("text", "vector")
 
 # counters the harness records per op, averaged per op
 PER_OP_COUNTERS = SPARK[:-1] + STORAGE + [
@@ -32,9 +38,6 @@ SPAN_METRIC = {"rawzone.land": "rawzone.land_s",
                "pipeline.stream_gated": "pipeline.stream_gated_s",
                "retention": "retention.s",
                "serve.text": "serve.text_s", "serve.vector": "serve.vector_s"}
-# the op kinds a failed output check makes wrong
-CHECK_KINDS = {"text": ("text",), "vector": ("vector",)}
-DEFAULT_CHECK_KINDS = ("night",)
 
 
 def unit(name):
@@ -46,7 +49,7 @@ def unit(name):
         return "s"
     if name.endswith("_mb") or name.endswith(".mb"):
         return "MB"
-    if name in ("recall", "fail_ratio", "trace.overhead", "trace.coverage"):
+    if name in ("recall", "fail_ratio", "trace.coverage"):
         return "ratio"
     return "count"
 
@@ -105,17 +108,14 @@ def growth_ratio(latencies):
 
 
 def apply_checks(art):
-    """Mark every op whose output a failed check shows wrong as failed.
-
-    A check named `<kind>_...` covers the ops of that kind (text or vector
-    requests); any other check covers the nights.
-    """
+    """Mark every op a failed check covers (its `ops`) as failed."""
+    by_id = {o["id"]: o for o in art["ops"]}
     for c in art["checks"]:
         if c["ok"]:
             continue
-        kinds = CHECK_KINDS.get(c["name"].split("_")[0], DEFAULT_CHECK_KINDS)
-        for o in art["ops"]:
-            if o["kind"] in kinds and o["ok"]:
+        for i in c["ops"]:
+            o = by_id[i]
+            if o["ok"]:
                 o["ok"], o["error"] = False, f"wrong output: {c['name']}"
 
 
@@ -133,35 +133,53 @@ def latencies(art, kinds=None):
             if o["ok"] and (kinds is None or o["kind"] in kinds)]
 
 
+def op_p50(art):
+    """Median op latency; on store_serving the mean of the median text and
+    the median vector request, so the figure does not jump between the two
+    kinds with the mix of ok requests."""
+    if art["workload"] == "store_serving":
+        return sum(median(latencies(art, {k})) for k in REQUEST_KINDS) / len(REQUEST_KINDS)
+    return median(latencies(art))
+
+
 def end_to_end(art):
     """Every end-to-end metric of one untraced run."""
-    lat = latencies(art)
     return {
         "setup_s": art["session_s"] + art["prepare_s"],
-        "ops_per_s": len(lat) / art["loop_s"],
-        "op_p50_s": median(lat),
+        "ops_per_s": len(latencies(art)) / art["loop_s"],
+        "op_p50_s": op_p50(art),
         "retained_heap_mb": art["retained_heap_mb"],
     }
 
 
+def growth(art):
+    """growth_ratio of the nights, or the mean of that of each request kind;
+    None on query_registry, whose ops are different queries."""
+    if art["workload"] == "store_serving":
+        rs = [growth_ratio(latencies(art, {k})) for k in REQUEST_KINDS]
+        return None if None in rs else sum(rs) / len(rs)
+    if art["workload"] == "wistia_nights":
+        return growth_ratio(latencies(art))
+    return None
+
+
 def figures(art):
     """Workload figures recorded in every artifact beside the metrics."""
-    lat = latencies(art)
-    value, pct, n = tail(lat)
+    value, pct, n = tail(latencies(art))
     attempted = len(art["ops"])
     failed = sum(1 for o in art["ops"] if not o["ok"])
     return {
         "op_tail_s": value, "tail_percentile": pct, "n": n,
         "text_p50_s": median(latencies(art, {"text"})),
         "vector_p50_s": median(latencies(art, {"vector"})),
-        "growth_ratio": growth_ratio(lat),
+        "growth_ratio": growth(art),
         "recall": art.get("extras", {}).get("recall"),
         "fail_ratio": failed / attempted if attempted else 1.0,
         "attempted": attempted, "failed": failed,
     }
 
 
-def per_layer(art, untraced_p50=None):
+def per_layer(art):
     """Every per-layer metric of one traced run. Per-op counters and self
     times are averaged over the ops; layers a workload does not call read 0."""
     ops = art["ops"]
@@ -174,8 +192,10 @@ def per_layer(art, untraced_p50=None):
 
     for k in PER_OP_COUNTERS:
         out[k] = sum(of(o).get(k, 0.0) for o in ops) / n
+    tasks = art.get("tasks", {})
     out["spark.idle_s"] = sum(
-        max(0.0, (o["end"] - o["start"]) - of(o).get("spark.busy_s", 0.0)) for o in ops) / n
+        (o["end"] - o["start"]) - covered(tasks.get(str(o["id"]), []), o["start"], o["end"])
+        for o in ops) / n
 
     spans = art.get("spans", [])
     by_op = {}
@@ -185,6 +205,13 @@ def per_layer(art, untraced_p50=None):
             layer[s["name"]] = layer.get(s["name"], 0.0) + st
     for span, metric in SPAN_METRIC.items():
         out[metric] = median([m[span] for m in by_op.values() if span in m])
+    for m in MODULES:
+        mine = [o for o in ops if f"registry.{m}" in by_op.get(o["id"], {})]
+        if mine:
+            out[f"registry.{m}_s"] = statistics.fmean(by_op[o["id"]][f"registry.{m}"]
+                                                      for o in mine)
+            out[f"registry.{m}_jobs"] = statistics.fmean(of(o).get("spark.jobs", 0.0)
+                                                         for o in mine)
     for kind in ("rag", "vec"):
         out[f"advance.{kind}_s"] = median([s["end"] - s["start"] for s in spans
                                           if s["op"] < 0 and s["name"] == f"advance.{kind}"])
@@ -205,6 +232,4 @@ def per_layer(art, untraced_p50=None):
     for k in ("text_p50_s", "vector_p50_s", "recall", "fail_ratio"):
         out[k] = float(f[k] or 0.0)
     out["host.calib_s"] = art["host_calib_s"]
-    p50 = median(latencies(art))
-    out["trace.overhead"] = p50 / untraced_p50 if untraced_p50 else 0.0
     return out

@@ -28,11 +28,14 @@ sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
 import metrics  # noqa: E402
+import oracle  # noqa: E402
 
 WORK = os.path.join(HERE, ".work")
-CLASSES = os.path.join(HERE, "target", "scala-2.13", "classes")
+TARGET = os.path.join(HERE, "target", "scala-2.13")
+# class data sharing archive of the harness JVM's classes, made at build time
+CDS = os.path.join(WORK, "classes.jsa")
 # scale factor of each workload's generated inputs
-WORKLOADS = {"wistia_nights": 0.1, "store_serving": 0.01}
+WORKLOADS = {"wistia_nights": 0.1, "store_serving": 0.01, "query_registry": 0.01}
 CPUS = 4
 HEAP = "4g"
 RUN_LIMIT_S = 170
@@ -76,11 +79,18 @@ def tree_hash():
 
 
 def commit():
+    """The source tree's identity: its git commit when the repository root
+    is a git work tree with no changes to the sources, else a hash of them."""
     try:
-        out = subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True,
-                             text=True, timeout=10)
-        if out.returncode == 0:
-            return out.stdout.strip()
+        top = subprocess.run(["git", "rev-parse", "--show-toplevel"], cwd=ROOT,
+                             capture_output=True, text=True, timeout=10)
+        if top.returncode == 0 and os.path.realpath(top.stdout.strip()) == os.path.realpath(ROOT):
+            dirty = subprocess.run(["git", "status", "--porcelain", "--", "src", "perfbench"],
+                                   cwd=ROOT, capture_output=True, text=True, timeout=10)
+            head = subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT,
+                                  capture_output=True, text=True, timeout=10)
+            if dirty.returncode == 0 and not dirty.stdout.strip() and head.returncode == 0:
+                return head.stdout.strip()
     except (OSError, subprocess.SubprocessError):
         pass
     return "tree:" + tree_hash()[:12]
@@ -103,30 +113,70 @@ def run_bounded(cmd, cwd, log, timeout, env=None):
             raise
 
 
+def jar():
+    found = glob.glob(os.path.join(TARGET, "perfbench_*.jar"))
+    return found[0] if len(found) == 1 else None
+
+
+def java(args, jvm=()):
+    """The harness JVM command. The class path names every jar (no
+    wildcard), as class data sharing requires."""
+    jars = sorted(glob.glob(os.path.join(spark_home(), "jars", "*.jar")))
+    return (["java", f"-Xmx{HEAP}", "-XX:+UseG1GC", *jvm]
+            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+            + ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+               "-cp", os.pathsep.join([jar()] + jars), "graft.perfbench.Main", *args])
+
+
 def build():
+    """Package the program and the harness, then record a class data sharing
+    archive from a short run on tiny inputs: it takes class loading out of
+    every later JVM start."""
     stamp = os.path.join(WORK, "build.stamp")
     want = tree_hash()
-    if os.path.isdir(CLASSES) and os.path.exists(stamp) and open(stamp).read() == want:
+    if jar() and os.path.exists(stamp) and open(stamp).read() == want:
         return
     log = os.path.join(WORK, "build.log")
-    rc = run_bounded(["sbt", "-batch", "-Dsbt.server.autostart=false", "compile"],
-                     HERE, log, 840, env=dict(os.environ, SPARK_HOME=spark_home()))
-    if rc != 0:
+    shutil.rmtree(TARGET, ignore_errors=True)
+    rc = run_bounded(["sbt", "-batch", "-Dsbt.server.autostart=false", "package"],
+                     HERE, log, 600, env=dict(os.environ, SPARK_HOME=spark_home()))
+    if rc != 0 or not jar():
         sys.stderr.write(open(log).read()[-4000:])
         die("build failed", 3)
+    train = os.path.join(WORK, "cds-train")
+    shutil.rmtree(train, ignore_errors=True)
+    if os.path.exists(CDS):
+        os.remove(CDS)
+    try:
+        os.makedirs(os.path.join(train, "work", "tmp"))
+        gen.write("wistia_nights", 0, 0.001, os.path.join(train, "data"))
+        run_bounded(java(["--workload", "wistia_nights", "--data", os.path.join(train, "data"),
+                          "--work", os.path.join(train, "work"), "--seconds", "0",
+                          "--trace", "0", "--seed", "0", "--out", os.path.join(train, "a.json")],
+                         [f"-XX:ArchiveClassesAtExit={CDS}",
+                          f"-Djava.io.tmpdir={os.path.join(train, 'work', 'tmp')}"]),
+                    train, os.path.join(WORK, "cds.log"), 240)
+    finally:
+        shutil.rmtree(train, ignore_errors=True)
     with open(stamp, "w") as f:
         f.write(want)
 
 
-def last_untraced_p50(workload):
-    path = os.path.join(WORK, "artifacts", f"{workload}-untraced-latest.json")
-    if os.path.exists(path):
-        return json.load(open(path)).get("metrics", {}).get("op_p50_s")
-    return None
+def trace_overhead(a, art, rev):
+    """Traced over untraced op_p50_s, when this checkout holds an untraced
+    run of the same commit, workload, seed and length; otherwise None."""
+    path = os.path.join(WORK, "artifacts", f"{a.workload}-untraced-seed{a.seed}.json")
+    if not os.path.exists(path):
+        return None
+    base = json.load(open(path))
+    if base["context"].get("commit") != rev or base.get("seconds") != a.seconds:
+        return None
+    return metrics.op_p50(art) / base["metrics"]["op_p50_s"]
 
 
-def run_harness(a, sf, run_dir, t_start):
-    """Generate the inputs and run the harness JVM; returns its artifact."""
+def run_harness(a, sf, run_dir, t_start, rev):
+    """Generate the inputs, run the harness JVM and the output checks that
+    need DuckDB; returns the artifact."""
     shutil.rmtree(run_dir, ignore_errors=True)
     data, scratch = os.path.join(run_dir, "data"), os.path.join(run_dir, "work")
     os.makedirs(os.path.join(scratch, "tmp"))
@@ -134,21 +184,25 @@ def run_harness(a, sf, run_dir, t_start):
     manifest = gen.write(a.workload, a.seed, sf, data)
     gen_s = time.time() - t_gen
     out = os.path.join(run_dir, "artifact.json")
-    cmd = (["java", f"-Xmx{HEAP}", "-XX:+UseG1GC"]
-           + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-           + [f"-Djava.io.tmpdir={scratch}/tmp", "-Dspark.ui.enabled=false",
-              "-Dspark.sql.session.timeZone=UTC",
-              "-cp", f"{CLASSES}{os.pathsep}{os.path.join(spark_home(), 'jars', '*')}",
-              "graft.perfbench.Main",
-              "--workload", a.workload, "--data", data, "--work", scratch,
-              "--seconds", str(a.seconds), "--trace", str(a.trace), "--seed", str(a.seed),
-              "--sf", str(sf), "--cpus", str(CPUS), "--commit", commit(), "--out", out])
+    cds = [f"-XX:SharedArchiveFile={CDS}"] if os.path.exists(CDS) else []
+    cmd = java(["--workload", a.workload, "--data", data, "--work", scratch,
+                "--seconds", str(a.seconds), "--trace", str(a.trace), "--seed", str(a.seed),
+                "--sf", str(sf), "--cpus", str(CPUS), "--commit", rev, "--out", out],
+               cds + [f"-Djava.io.tmpdir={scratch}/tmp"])
     log = os.path.join(run_dir, "harness.log")
+    t_jvm = time.time()
     rc = run_bounded(cmd, run_dir, log, RUN_LIMIT_S - (time.time() - t_start))
     if rc != 0 or not os.path.exists(out):
         sys.stderr.write(open(log).read()[-4000:])
         die(f"harness {'timed out' if rc is None else f'exited {rc}'}", 4)
-    return json.load(open(out)), manifest, gen_s
+    art = json.load(open(out))
+    t_oracle = time.time()
+    if "registry" in art["extras"]:
+        art["checks"] += oracle.check(data, art["extras"]["registry"])
+        for e in art["extras"]["registry"]:
+            del e["oracle"], e["output"]
+    art["wall"] = {"gen_s": gen_s, "jvm_s": t_oracle - t_jvm, "oracle_s": time.time() - t_oracle}
+    return art, manifest
 
 
 def main():
@@ -169,8 +223,9 @@ def main():
     t_start = time.time()  # the run's time limit starts after the build
     sf = WORKLOADS[a.workload]
     run_dir = os.path.join(WORK, f"run-{a.workload}-{a.seed}-{os.getpid()}")
+    rev = commit()
     try:
-        art, manifest, gen_s = run_harness(a, sf, run_dir, t_start)
+        art, manifest = run_harness(a, sf, run_dir, t_start, rev)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
 
@@ -179,16 +234,19 @@ def main():
     summary = {
         "workload": a.workload, "seed": a.seed, "seconds": a.seconds, "trace": a.trace,
         "correct": correct, "attempted": attempted, "failed": failed,
-        "context": dict(art["context"], host_calib_s=art["host_calib_s"], gen_s=gen_s,
+        "context": dict(art["context"], host_calib_s=art["host_calib_s"],
+                        class_sharing=os.path.exists(CDS),
                         inputs=manifest["tables"] or manifest.get("wistia", {}).get("events")),
         "metrics": e2e, "figures": metrics.figures(art),
         "setup": {"session_s": art["session_s"], "prepare_s": art["prepare_s"],
                   "loop_s": art["loop_s"]},
+        "wall": art["wall"],
         "checks": art["checks"], "extras": art["extras"],
         "ops": [[o["kind"], o["end"] - o["start"], o["ok"], o["error"]] for o in art["ops"]],
     }
     if a.trace:
-        summary["per_layer"] = metrics.per_layer(art, last_untraced_p50(a.workload))
+        summary["figures"]["trace_overhead"] = trace_overhead(a, art, rev)
+        summary["per_layer"] = metrics.per_layer(art)
         summary["spans"] = art["spans"]
         summary["counters"] = art["counters"]
     tag = "traced" if a.trace else "untraced"

@@ -12,23 +12,31 @@ final class Ctx(val spark: SparkSession, val rec: Recorder, val data: String,
   def sc = spark.sparkContext
   /** Per-run artifact values; some feed the per-layer metrics. */
   val extras = mutable.LinkedHashMap[String, Any]()
-  /** Output checks: (name, passed, detail). */
-  val checks = mutable.ArrayBuffer[(String, Boolean, String)]()
-  def check(name: String, ok: Boolean, detail: String = ""): Unit =
-    checks += ((name, ok, detail))
+  /** Output checks: (name, passed, detail, ids of the ops it covers). A
+    * failed check makes every op it covers a failed op.
+    */
+  val checks = mutable.ArrayBuffer[(String, Boolean, String, Seq[Int])]()
+  def check(name: String, ok: Boolean, detail: String, ops: Seq[Int]): Unit =
+    checks += ((name, ok, detail, ops))
+
+  /** The generator's description of the inputs (`manifest.json`). */
+  lazy val manifest: com.fasterxml.jackson.databind.JsonNode =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$data/manifest.json"))
 
   def persistedRdds: Int = sc.getPersistentRDDs.size
   def persistedMb: Double =
     sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum / 1e6
 
-  /** Evaluate independent, untimed Spark actions side by side (the output
-    * checks), in the order given.
+  /** Evaluate independent, untimed Spark actions side by side (set-up and
+    * output checks), at most `threads` at a time; results in the order given.
     */
-  def concurrently[A](actions: (() => A)*): Seq[A] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(actions.size)
+  def inParallel[A](threads: Int, actions: Seq[() => A]): Seq[A] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try actions.map(a => pool.submit(() => a())).map(_.get())
     finally pool.shutdown()
   }
+  def concurrently[A](actions: (() => A)*): Seq[A] = inParallel(actions.size, actions)
 
   /** Storage left behind by op `id` (traced runs only). */
   def storageAfter(id: Int): Unit =
@@ -71,6 +79,10 @@ object Main {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // room for the generated classes of every plan a run repeats: with the
+      // default 100 entries a pass over the registry queries evicts its own
+      // classes, and every timed query compiles again
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.warehouse.dir", s"$work/spark-warehouse")
       .config("spark.local.dir", s"$work/spark-local")
       .getOrCreate()
@@ -84,6 +96,7 @@ object Main {
     val w: Workload = workload match {
       case "wistia_nights" => new WistiaNights(ctx)
       case "store_serving" => new StoreServing(ctx)
+      case "query_registry" => new QueryRegistry(ctx)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
     def log(msg: String): Unit = System.err.println(f"[perfbench ${rec.now()}%8.2f s] $msg")
@@ -100,11 +113,14 @@ object Main {
     w.finish()
     log("checks done")
 
+    // per op: engine counters and the intervals its tasks ran in
+    val tasks = mutable.LinkedHashMap[String, Seq[Seq[Double]]]()
     listener.foreach { l =>
       org.apache.spark.perfbench.BusDrain(spark.sparkContext)
       rec.ops.foreach { o =>
-        l.window(rec.epochMs(o.start), rec.epochMs(o.end))
-          .foreach { case (k, v) => rec.count(o.id, k, v) }
+        val (counts, spans) = l.window(rec.epochMs(o.start), rec.epochMs(o.end))
+        counts.foreach { case (k, v) => rec.count(o.id, k, v) }
+        tasks(o.id.toString) = spans.map { case (a, b) => Seq(rec.fromEpochMs(a), rec.fromEpochMs(b)) }
       }
     }
     val rt = Runtime.getRuntime
@@ -129,10 +145,15 @@ object Main {
       "spans" -> rec.spans.map(s => Map("name" -> s.name, "start" -> s.start,
         "end" -> s.end, "parent" -> s.parent, "op" -> s.op)),
       "counters" -> rec.counters.map { case (k, m) => k.toString -> m.toMap }.toMap,
-      "checks" -> ctx.checks.map { case (n, ok, d) => Map("name" -> n, "ok" -> ok, "detail" -> d) },
+      "tasks" -> tasks.toMap,
+      "checks" -> ctx.checks.map { case (n, ok, d, ops) =>
+        Map("name" -> n, "ok" -> ok, "detail" -> d, "ops" -> ops) },
       "extras" -> ctx.extras.toMap)
     Json.write(args("out"), out)
-    spark.stop()
+    // the artifact is written and the run's directory is removed after
+    // exit, so the JVM ends without Spark's orderly shutdown
+    System.err.flush()
+    Runtime.getRuntime.halt(0)
   }
 }
 

@@ -24,6 +24,7 @@ final class Recorder(val tracing: Boolean) {
 
   def now(): Double = (System.nanoTime() - origin) / 1e9
   def epochMs(t: Double): Double = epochOrigin + t * 1000.0
+  def fromEpochMs(ms: Double): Double = (ms - epochOrigin) / 1000.0
 
   val spans = mutable.ArrayBuffer[Span]()
   val ops = mutable.ArrayBuffer[OpRec]()
@@ -58,10 +59,6 @@ final class Recorder(val tracing: Boolean) {
     r.toOption
   }
 
-  /** Mark an op that returned normally but produced a wrong output. */
-  def fail(id: Int, why: String): Unit =
-    ops(id) = ops(id).copy(ok = false, error = why.take(300))
-
   /** The op in progress, or -1 between ops. */
   def current: Int = currentOp
 
@@ -94,13 +91,15 @@ final class EngineListener extends SparkListener {
       m.inputMetrics.bytesRead, m.outputMetrics.bytesWritten))
   }
 
-  /** Engine counters of the work started in [a, b] (epoch ms). */
-  def window(a: Double, b: Double): Seq[(String, Double)] = {
+  /** Engine counters of the work started in [a, b] (epoch ms), and the
+    * [launch, finish] interval of each task among it.
+    */
+  def window(a: Double, b: Double): (Seq[(String, Double)], Seq[(Double, Double)]) = {
     import scala.jdk.CollectionConverters._
     def in(t: Double) = t >= a && t <= b
     val ts = tasks.asScala.filter(t => in(t.launch.toDouble)).toSeq
     val mb = 1e6
-    Seq(
+    (Seq(
       "spark.jobs" -> jobs.asScala.count(t => in(t.toDouble)).toDouble,
       "spark.stages" -> stages.asScala.count(t => in(t.toDouble)).toDouble,
       "spark.tasks" -> ts.size.toDouble,
@@ -111,27 +110,7 @@ final class EngineListener extends SparkListener {
       "spark.shuffle_write_mb" -> ts.map(_.shuffleWrite).sum / mb,
       "spark.spill_mb" -> ts.map(_.spill).sum / mb,
       "spark.input_mb" -> ts.map(_.input).sum / mb,
-      "spark.output_mb" -> ts.map(_.output).sum / mb,
-      "spark.busy_s" -> Intervals.covered(
-        ts.map(t => (t.launch.toDouble, t.finish.toDouble)), a, b) / 1e3)
-  }
-}
-
-object Intervals {
-  /** Length of [a, b] covered by the union of `xs`. */
-  def covered(xs: Seq[(Double, Double)], a: Double, b: Double): Double = {
-    val clipped = xs.map { case (s, e) => (math.max(s, a), math.min(e, b)) }
-      .filter { case (s, e) => e > s }.sortBy(_._1)
-    var total = 0.0
-    var curS = Double.NaN
-    var curE = Double.NaN
-    clipped.foreach { case (s, e) =>
-      if (curE.isNaN || s > curE) {
-        if (!curE.isNaN) total += curE - curS
-        curS = s; curE = e
-      } else curE = math.max(curE, e)
-    }
-    if (!curE.isNaN) total += curE - curS
-    total
+      "spark.output_mb" -> ts.map(_.output).sum / mb),
+      ts.map(t => (t.launch.toDouble, t.finish.toDouble)))
   }
 }

@@ -23,9 +23,15 @@ final class StoreServing(c: Ctx) extends Workload {
   private val vec = s"${c.work}/vec_store"
   private var ragV0 = 0L
   private var vecV0 = 0L
-  private val atPublish = scala.collection.mutable.Map[String, Seq[Row]]()
-  /** Rows of each timed request: (cycle, kind, rows). */
-  private val served = scala.collection.mutable.ArrayBuffer[(Int, String, Seq[Row])]()
+  private var atPublish = Map[String, Seq[Row]]()
+  /** Each timed request: (op id, cycle, kind, rows). */
+  private val served = scala.collection.mutable.ArrayBuffer[(Int, Int, String, Seq[Row])]()
+  /** The advance pools: `batches` batches of `batch` ids from `idBase`. */
+  private lazy val pool = c.manifest.get("pool")
+  private lazy val batch = pool.get("batch").asLong
+  private lazy val idBase = pool.get("id_base").asLong
+  /** Cycles a run may take; the last batch is the set-up advance. */
+  private lazy val cycles = pool.get("batches").asInt - 1
   private lazy val advDocs = c.spark.read.parquet(s"${c.data}/advance_docs.parquet")
   private lazy val advVecs = Similarity.labeledVectors(c.spark, s"${c.data}/advance_pool")
   private var cycle = 0
@@ -34,22 +40,33 @@ final class StoreServing(c: Ctx) extends Workload {
   private def vector(): DataFrame = VecStore.sim17FromStore(c.spark, c.data, vec)
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
-  /** Publish both stores, serve each request kind once at the publish
-    * version (the rows are kept for the twin check) and advance each store
-    * once, so the timed loop starts warm on both the read and write side.
+  /** For each store, side by side: publish it, serve its request kind once
+    * at the publish version (the rows are kept for the twin check) and
+    * advance it once, so the timed loop starts warm on both the read and
+    * the write side.
     */
   def prepare(): Unit = {
-    ragV0 = TrainPrep.publishRagStore(c.spark, c.data, rag)
-    vecV0 = VecStore.publish(c.spark, c.data, vec)
-    atPublish("text") = rows(text())
-    atPublish("vector") = rows(vector())
-    advanceRag(cycles)
-    advanceVec(cycles)
+    val Seq((r, textRows), (v, vecRows)) = c.concurrently(
+      () => {
+        val v0 = TrainPrep.publishRagStore(c.spark, c.data, rag)
+        val first = rows(text())
+        advanceRag(cycles)
+        (v0, first)
+      },
+      () => {
+        val v0 = VecStore.publish(c.spark, c.data, vec)
+        val first = rows(vector())
+        advanceVec(cycles)
+        (v0, first)
+      })
+    ragV0 = r
+    vecV0 = v
+    atPublish = Map("text" -> textRows, "vector" -> vecRows)
   }
 
   /** Batch `k` of a pool: ids [base + k·batch, base + (k+1)·batch). */
   private def slice(df: DataFrame, id: String, k: Int): DataFrame =
-    df.filter(col(id) >= poolBase + k * batch && col(id) < poolBase + (k + 1) * batch)
+    df.filter(col(id) >= idBase + k * batch && col(id) < idBase + (k + 1) * batch)
 
   private def advanceRag(k: Int): Long =
     TrainPrep.advanceRagStore(c.spark, slice(advDocs, "doc_id", k), rag)
@@ -61,7 +78,7 @@ final class StoreServing(c: Ctx) extends Workload {
       rng.shuffle(Seq.fill(perKind)("text") ++ Seq.fill(perKind)("vector")).foreach { k =>
         val id = c.rec.ops.size
         c.rec.op(k)(c.rec.span(s"serve.$k")(rows(if (k == "text") text() else vector())))
-          .foreach(r => served += ((cycle, k, r)))
+          .foreach(r => served += ((id, cycle, k, r)))
         c.storageAfter(id)
       }
       c.rec.span("advance.rag")(advanceRag(cycle))
@@ -79,27 +96,28 @@ final class StoreServing(c: Ctx) extends Workload {
 
   def finish(): Unit = {
     c.extras("advances") = cycle
-    c.extras("depth_rag") = depth(rag)
-    c.extras("depth_vec") = depth(vec)
-    c.extras("snapshots_mb") = mb(rag) + mb(vec)
     if (c.rec.tracing) {
+      c.extras("depth_rag") = depth(rag)
+      c.extras("depth_vec") = depth(vec)
+      c.extras("snapshots_mb") = mb(rag) + mb(vec)
       val t0 = c.rec.now()
       c.extras("recall") = VecStore.recallProbe(c.spark, vec, sampleN = 64)
       c.extras("recall_probe_s") = c.rec.now() - t0
     }
     // every request of a kind within one cycle (one store version) returns
     // the same rows; at the publish version each kind equals its registry twin
-    for (((cyc, kind), rs) <- served.groupBy(r => (r._1, r._2)))
+    for (((cyc, kind), rs) <- served.groupBy(r => (r._2, r._3)))
       c.check(s"${kind}_repeatable_cycle_$cyc",
-        rs.forall(_._3 == rs.head._3) && rs.head._3.nonEmpty,
-        s"${rs.size} requests, ${rs.map(_._3).distinct.size} distinct results")
+        rs.forall(_._4 == rs.head._4) && rs.head._4.nonEmpty,
+        s"${rs.size} requests, ${rs.map(_._4).distinct.size} distinct results", rs.map(_._1).toSeq)
     val Seq(textTwin, vecTwin) = c.concurrently(
       () => rows(SparkEntry.queries("search7_rag_context")(c.spark, c.data)),
       () => rows(SparkEntry.queries("sim17_filtered_residual")(c.spark, c.data)))
     for ((kind, twin) <- Seq("text" -> textTwin, "vector" -> vecTwin)) {
       val first = atPublish(kind)
+      // the timed requests of a kind run the code path the twin checks
       c.check(s"${kind}_twin_at_publish", first == twin && first.nonEmpty,
-        s"${first.size} vs ${twin.size} rows")
+        s"${first.size} vs ${twin.size} rows", c.rec.ops.filter(_.kind == kind).map(_.id).toSeq)
     }
     c.extras("publish_versions") = Map("rag" -> ragV0, "vec" -> vecV0)
   }
@@ -107,10 +125,4 @@ final class StoreServing(c: Ctx) extends Workload {
 
 object StoreServing {
   val perKind = 3
-  val batch = 20
-  /** Cycles a run may take; the pools hold `cycles + 1` batches of each
-    * kind (the last one is the set-up advance), with ids from `poolBase`.
-    */
-  val cycles = 20
-  val poolBase = 1000000L
 }

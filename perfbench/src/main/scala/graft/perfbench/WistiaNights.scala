@@ -109,13 +109,16 @@ final class WistiaNights(c: Ctx) extends Workload {
     val got = RawZone.warehouse(c.spark, lake.batch.fact).drop("ingestion_timestamp")
       .withColumn("date", col("date").cast("date")).select(cols: _*)
     val exp = expected.select(cols: _*)
-    val Seq(landed, differ, perEvent, nEvents) = c.concurrently(
+    val logs = Seq(s"${lake.batch.root}/run_log", s"${lake.stream.root}/run_log", lake.retentionLog)
+    val Seq(landedN, differN, perEventN, nEventsN, logRows) = c.concurrently[Any](
       () => got.count(),
       () => got.exceptAll(exp).unionAll(exp.exceptAll(got)).count(),
       () => RawZone.warehouse(c.spark, lake.stream.fact).count(),
-      () => allEvents.count())
-    val log = Seq(s"${lake.batch.root}/run_log", s"${lake.stream.root}/run_log", lake.retentionLog)
-      .map(RunLog.read(c.spark, _)).reduce(_ unionByName _).collect()
+      () => allEvents.count(),
+      () => logs.map(RunLog.read(c.spark, _)).reduce(_ unionByName _).collect())
+    val Seq(landed, differ, perEvent, nEvents) =
+      Seq(landedN, differN, perEventN, nEventsN).map(_.asInstanceOf[Long])
+    val log = logRows.asInstanceOf[Array[org.apache.spark.sql.Row]]
     timed.foreach { case (id, n) =>
       val rows = log.filter(_.getAs[Timestamp]("run_ts") == ingestionTs(n))
       def stage(p: String) = rows.filter(_.getAs[String]("stage").startsWith(p))
@@ -124,8 +127,8 @@ final class WistiaNights(c: Ctx) extends Workload {
         "dq_gate_dim", "fact_trigger_", "dq_gate_trigger_", "prune_raw")
       val missing = need.filter(stage(_).isEmpty)
       val bad = rows.filter(_.getAs[String]("status") != "ok").map(_.getAs[String]("stage"))
-      if (c.rec.ops(id).ok && (missing.nonEmpty || bad.nonEmpty))
-        c.rec.fail(id, s"run log: missing ${missing.mkString(",")} not-ok ${bad.mkString(",")}")
+      c.check(f"run_log_night_$n%02d", missing.isEmpty && bad.isEmpty,
+        s"missing ${missing.mkString(",")}; not ok ${bad.mkString(",")}", Seq(id))
       c.rec.count(id, "runlog.dq_gate_ms", ms("dq_gate") - ms("dq_gate_dim") - ms("dq_gate_trigger_"))
       c.rec.count(id, "runlog.dim_media_ms", ms("dim_media"))
       c.rec.count(id, "runlog.dim_visitor_ms", ms("dim_visitor"))
@@ -134,17 +137,18 @@ final class WistiaNights(c: Ctx) extends Workload {
       c.rec.count(id, "runlog.trigger_fact_ms", ms("fact_trigger_"))
       c.rec.count(id, "streaming.triggers", stage("fact_trigger_").length.toDouble)
     }
+    val all = timed.map(_._1).toSeq
     c.check("fact_union_equals_full_fact", differ == 0 && landed > 0,
-      s"$landed rows landed, $differ rows differ")
-    c.check("per_event_rows", perEvent == nEvents, s"$perEvent rows for $nEvents events")
+      s"$landed rows landed, $differ rows differ", all)
+    c.check("per_event_rows", perEvent == nEvents, s"$perEvent rows for $nEvents events", all)
     c.extras("fact_rows") = landed
     c.extras("per_event_rows") = perEvent
   }
 }
 
 object WistiaNights {
-  val setupNights = 1
-  val groupNights = 2
+  val setupNights = 2
+  val groupNights = 3
 
   /** One lake: raw zone, the batch and streaming warehouses, the stream
     * checkpoint and the retention log, under `root`.

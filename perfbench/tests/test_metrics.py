@@ -13,6 +13,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import gen  # noqa: E402
 import metrics  # noqa: E402
+import oracle  # noqa: E402
+import run  # noqa: E402
 
 
 def span(name, start, end, parent=-1, op=0):
@@ -79,6 +81,10 @@ class SelfTime(unittest.TestCase):
         self.assertAlmostEqual(m["trace.coverage"], 0.7)
 
 
+def check(name, ok, ops):
+    return {"name": name, "ok": ok, "detail": "", "ops": ops}
+
+
 class FailRatio(unittest.TestCase):
     def art(self, checks):
         return {"workload": "store_serving",
@@ -87,21 +93,29 @@ class FailRatio(unittest.TestCase):
                 "checks": checks, "extras": {}}
 
     def test_all_good(self):
-        a = self.art([{"name": "text_twin_at_publish", "ok": True, "detail": ""}])
+        a = self.art([check("text_twin_at_publish", True, [0, 2])])
         self.assertEqual(metrics.verdict(a), (True, 4, 0))
         self.assertEqual(metrics.figures(a)["fail_ratio"], 0.0)
 
     def test_output_mismatch_fails_the_ops_it_covers(self):
-        a = self.art([{"name": "vector_twin_at_publish", "ok": False, "detail": "300 vs 299"},
-                      {"name": "text_repeatable", "ok": True, "detail": ""}])
+        a = self.art([check("vector_twin_at_publish", False, [1, 3]),
+                      check("text_repeatable_cycle_0", True, [0, 2])])
         self.assertEqual(metrics.verdict(a), (False, 4, 2))
         self.assertEqual(metrics.figures(a)["fail_ratio"], 0.5)
         self.assertEqual([o["ok"] for o in a["ops"]], [True, False, True, False])
 
-    def test_night_checks_cover_nights(self):
+    def test_a_night_check_covers_its_night(self):
         a = {"workload": "wistia_nights", "extras": {},
-             "ops": [op(0, "night", 0, 5), op(1, "night", 5, 9, ok=False)],
-             "checks": [{"name": "fact_union_equals_full_fact", "ok": False, "detail": ""}]}
+             "ops": [op(0, "night", 0, 5), op(1, "night", 5, 9), op(2, "night", 9, 12)],
+             "checks": [check("run_log_night_02", False, [1])]}
+        self.assertEqual(metrics.verdict(a), (False, 3, 1))
+        self.assertAlmostEqual(metrics.figures(a)["fail_ratio"], 1 / 3)
+
+    def test_an_op_failed_twice_counts_once(self):
+        a = {"workload": "query_registry", "extras": {},
+             "ops": [op(0, "q1", 0, 1, ok=False), op(1, "q2", 1, 2)],
+             "checks": [check("oracle_q1", False, [0]), check("oracle_q2", False, [1]),
+                        check("oracle_q2_again", False, [1])]}
         self.assertEqual(metrics.verdict(a), (False, 2, 2))
 
     def test_failed_ops_leave_the_latencies(self):
@@ -111,20 +125,133 @@ class FailRatio(unittest.TestCase):
         self.assertAlmostEqual(metrics.end_to_end(a)["ops_per_s"], 0.75)
 
 
+class Latency(unittest.TestCase):
+    def test_store_median_is_the_mean_of_the_kind_medians(self):
+        a = {"workload": "store_serving", "checks": [], "extras": {},
+             "ops": [op(0, "text", 0, 2), op(1, "vector", 2, 5), op(2, "text", 5, 7.5),
+                     op(3, "vector", 7.5, 10.5), op(4, "vector", 10.5, 14.5)]}
+        # text median 2.25, vector median 3: a mixed median would read 3
+        self.assertAlmostEqual(metrics.op_p50(a), (2.25 + 3.0) / 2)
+
+    def test_other_workloads_take_the_plain_median(self):
+        a = {"workload": "query_registry", "checks": [], "extras": {},
+             "ops": [op(0, "q1", 0, 1), op(1, "q2", 1, 4), op(2, "q3", 4, 6)]}
+        self.assertEqual(metrics.op_p50(a), 2)
+
+    def test_growth_ratio(self):
+        self.assertIsNone(metrics.growth_ratio([1.0, 2.0]))
+        self.assertAlmostEqual(metrics.growth_ratio([1.0, 5.0, 3.0, 2.0, 9.0, 4.0]), 6.5 / 3.0)
+
+
+class Layers(unittest.TestCase):
+    def test_idle_time_is_op_wall_without_a_task(self):
+        art = {"workload": "wistia_nights", "host_calib_s": 0.1, "checks": [], "extras": {},
+               "ops": [op(0, "night", 10.0, 20.0)], "spans": [], "counters": {},
+               "tasks": {"0": [[11.0, 13.0], [12.0, 14.0], [16.0, 17.0], [19.5, 21.0]]}}
+        # busy 11-14, 16-17, 19.5-20 (clipped): 4.5 of 10 s
+        self.assertAlmostEqual(metrics.per_layer(art)["spark.idle_s"], 5.5)
+
+    def test_registry_layers_by_module(self):
+        art = {"workload": "query_registry", "host_calib_s": 0.1, "checks": [],
+               "extras": {}, "tasks": {},
+               "ops": [op(0, "q50", 0, 2), op(1, "gr2", 2, 3), op(2, "q50", 3, 6)],
+               "spans": [span("q50", 0, 2, op=0), span("registry.Relational", 0.1, 1.9, 0, 0),
+                         span("gr2", 2, 3, op=1), span("registry.GraphOps", 2.0, 3.0, 2, 1),
+                         span("q50", 3, 6, op=2), span("registry.Relational", 3.1, 5.9, 4, 2)],
+               "counters": {"0": {"spark.jobs": 4, "storage.released_rdds": 2},
+                            "1": {"spark.jobs": 9}, "2": {"spark.jobs": 6}}}
+        m = metrics.per_layer(art)
+        self.assertAlmostEqual(m["registry.Relational_s"], (1.8 + 2.8) / 2)
+        self.assertAlmostEqual(m["registry.Relational_jobs"], 5.0)
+        self.assertAlmostEqual(m["registry.GraphOps_s"], 1.0)
+        self.assertAlmostEqual(m["registry.GraphOps_jobs"], 9.0)
+        self.assertEqual(m["registry.Skew_s"], 0.0)
+        self.assertAlmostEqual(m["storage.released_rdds"], 2 / 3)
+        self.assertAlmostEqual(m["trace.harness_s"], 0.4 / 3)
+
+    def test_benchmark_declares_every_metric(self):
+        root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        with open(os.path.join(root, "BENCHMARK.json")) as f:
+            b = json.load(f)
+        self.assertEqual({m["name"] for m in b["end_to_end"]}, set(metrics.END_TO_END))
+        self.assertEqual([m["name"] for m in b["per_layer"]], metrics.PER_LAYER)
+        for m in b["end_to_end"] + b["per_layer"]:
+            self.assertEqual(m["unit"], metrics.unit(m["name"]), m["name"])
+
+
+class OracleCompare(unittest.TestCase):
+    def frames(self, a, b):
+        import pandas as pd
+        return oracle.canon(pd.DataFrame(a)), oracle.canon(pd.DataFrame(b))
+
+    def test_row_and_column_order_do_not_matter(self):
+        got, exp = self.frames({"b": [2, 1], "a": ["y", "x"]}, {"a": ["x", "y"], "b": [1, 2]})
+        self.assertIsNone(oracle.differences(got, exp))
+
+    def test_nulls_match_nulls(self):
+        got, exp = self.frames({"a": ["x", None]}, {"a": [None, "x"]})
+        self.assertIsNone(oracle.differences(got, exp))
+
+    def test_floats_compare_exactly(self):
+        got, exp = self.frames({"v": [0.1 + 0.2]}, {"v": [0.3]})
+        self.assertIn("column v", oracle.differences(got, exp))
+
+    def test_row_count_and_columns(self):
+        got, exp = self.frames({"a": [1, 2]}, {"a": [1]})
+        self.assertEqual(oracle.differences(got, exp), "2 rows vs 1")
+        got, exp = self.frames({"a": [1]}, {"b": [1]})
+        self.assertIn("columns", oracle.differences(got, exp))
+
+
+class TraceOverhead(unittest.TestCase):
+    def test_only_a_matching_untraced_run_counts(self):
+        import types
+        art = {"workload": "query_registry", "checks": [], "extras": {},
+               "ops": [op(0, "q1", 0, 1.2), op(1, "q2", 1.2, 2.4)]}
+        a = types.SimpleNamespace(workload="query_registry", seed=9, seconds=5.0)
+        with tempfile.TemporaryDirectory() as t:
+            os.makedirs(os.path.join(t, "artifacts"))
+            old, run.WORK = run.WORK, t
+            try:
+                self.assertIsNone(run.trace_overhead(a, art, "rev1"))
+                with open(os.path.join(t, "artifacts", "query_registry-untraced-seed9.json"),
+                          "w") as f:
+                    json.dump({"seconds": 5.0, "context": {"commit": "rev1"},
+                               "metrics": {"op_p50_s": 1.0}}, f)
+                self.assertAlmostEqual(run.trace_overhead(a, art, "rev1"), 1.2)
+                self.assertIsNone(run.trace_overhead(a, art, "rev2"))
+                a.seconds = 8.0
+                self.assertIsNone(run.trace_overhead(a, art, "rev1"))
+            finally:
+                run.WORK = old
+
+
 class SeedDeterminism(unittest.TestCase):
     def test_same_seed_same_corpus(self):
-        a = gen.corpus(7, 0.001, ["documents", "embeddings", "events", "part"])
-        b = gen.corpus(7, 0.001, ["documents", "embeddings", "events", "part"])
+        a = gen.corpus(7, 0.001, gen.TABLES)
+        b = gen.corpus(7, 0.001, gen.TABLES)
+        self.assertEqual(sorted(a), sorted(gen.TABLES))
         for name in a:
             self.assertTrue(a[name].equals(b[name]), name)
 
     def test_other_seed_same_sizes(self):
-        a = gen.corpus(7, 0.001, ["documents", "embeddings", "events"])
-        b = gen.corpus(8, 0.001, ["documents", "embeddings", "events"])
+        a = gen.corpus(7, 0.001, gen.TABLES)
+        b = gen.corpus(8, 0.001, gen.TABLES)
         for name in a:
             self.assertEqual(a[name].num_rows, b[name].num_rows, name)
             self.assertEqual(a[name].schema, b[name].schema, name)
-            self.assertFalse(a[name].equals(b[name]), name)
+            if name not in ("region", "nation"):  # fixed tables
+                self.assertFalse(a[name].equals(b[name]), name)
+
+    def test_keys_reference_rows(self):
+        t = gen.corpus(7, 0.001, gen.TABLES)
+        for child, key, parent, pkey in [("lineitem", "l_orderkey", "orders", "o_orderkey"),
+                                         ("lineitem", "l_partkey", "part", "p_partkey"),
+                                         ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
+                                         ("orders", "o_custkey", "customer", "c_custkey"),
+                                         ("customer", "c_nationkey", "nation", "n_nationkey")]:
+            keys = set(t[parent].column(pkey).to_pylist())
+            self.assertTrue(set(t[child].column(key).to_pylist()) <= keys, key)
 
     def test_generated_files(self):
         def files(seed, root):
@@ -147,6 +274,13 @@ class SeedDeterminism(unittest.TestCase):
         self.assertNotEqual(f1, f3)
         self.assertEqual(m1["wistia"]["nights"], m3["wistia"]["nights"])
         self.assertEqual(m1["wistia"]["events"], m3["wistia"]["events"])
+
+    def test_pool_layout_in_manifest(self):
+        with tempfile.TemporaryDirectory() as t:
+            m = gen.write("store_serving", 5, 0.001, t)
+        p = m["pool"]
+        self.assertEqual(m["tables"]["advance_docs"], p["batch"] * p["batches"])
+        self.assertEqual(m["tables"]["advance_vecs"], p["batch"] * p["batches"])
 
     def test_store_pools(self):
         d1, v1 = gen.store_pools(5, 0.01)
