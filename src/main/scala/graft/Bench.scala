@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Execution is forced through the `noop` sink so
   * the full plan (all output columns, not just a count) materializes —
@@ -10,17 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // warm every query once at the smallest sf so measured numbers are
     // steady-state (codegen compilation + JIT are one-time JVM costs, not
     // per-query work at scale)
@@ -34,15 +22,6 @@ object Bench {
     // same-session Bench runs agree per-query where best-of-2 could
     // latch a lucky minimum (runs interleave whole passes so cache
     // effects even out across queries)
-    // queries that localCheckpoint intermediates (dd2/dd7/dd11/dd12…)
-    // leak their blocks — nothing downstream unpersists them. Left
-    // alone they accumulate across the pass and push the block manager
-    // into eviction/GC churn, inflating every query measured after them
-    // (observed: dd12 back-to-back 60 s → 170 s in one JVM; flat once
-    // dropped). Clearing between queries keeps each measurement
-    // independent of suite order.
-    def dropPersisted(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     // failure-honest: a query that throws contributes NO timing — its
     // elapsed time is the time-to-crash, not the query's cost, and a ~0.05 s
     // analysis failure would otherwise read as a 100× speedup in any
@@ -61,7 +40,7 @@ object Bench {
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        dropPersisted()
+        Session.dropPersisted(spark)
         if (ok) Some(name -> dt) else None
       }.toMap
     // stall-resistant capture: this VM intermittently stalls Spark jobs at
@@ -113,7 +92,7 @@ object Bench {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      dropPersisted()
+      Session.dropPersisted(spark)
       if (ok) Some(dt) else None
     }
     val samples: Map[String, Seq[Double]] = okKeys.toSeq.sorted.map { k =>

@@ -17,8 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    headline: Boolean = false)
+    oracle: Option[String])
 
 /** DuckDB oracle-side physical hints (results unchanged). */
 object OracleHints {
@@ -65,6 +64,4 @@ object Registry {
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  def headlines: Seq[Q] = all.filter(_.headline)
 }

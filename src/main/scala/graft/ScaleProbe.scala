@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev harness: materialize a key-remapped ~10× copy of the sf0.1 corpus
-  * under /tmp and re-run representative queries, to measure how each
-  * plan's runtime scales with input size (evidence for the 100 TB design
-  * claims — a plan that goes super-linear at 10× is a plan that dies at
-  * 1000×).
+  * under /tmp and run queries through the shared dev timing loop
+  * ([[tools.ProfJobs.run]]: warm, drop persisted blocks, one timed pass
+  * with job/stage/task counts) at 1× and then at 10×, to measure how
+  * each plan's runtime scales with input size (evidence for the 100 TB
+  * design claims — a plan that goes super-linear at 10× is a plan that
+  * dies at 1000×). `sbt "runMain graft.ScaleProbe [query ...]"`; no
+  * argument runs the whole sweep list.
   *
   * Copies are entity-remapped so join/group cardinalities scale
   * realistically (keys offset per copy — no artificial ×copies² key
@@ -44,11 +47,6 @@ import org.apache.spark.sql.functions._
   * the band join, so candidates are O(docs·valueDegree·k)) beats
   * aggregating the full 78.7M-pair list by >10×.
   *
-  * q10 top-k-per-group, custom bounded TopKPairs aggregate vs the
-  * row_number window twin (`skew:dd10` sibling probe `q10_window`):
-  * aggregate 0.80→1.36 s, window 0.98→2.16 s at 1×→10× — the partial
-  * top-k forwards ≤k pairs per group per map task where the window
-  * shuffles and sorts every row, so the gap grows with data volume.
   *
   * Round-6 additions (measured, local[32], warm, 1×→10×): q35 TPC-H-Q21
   * decorrelation 1.1→4.2 s; dd11 incremental index probe 1.3→6.7 s
@@ -87,10 +85,8 @@ import org.apache.spark.sql.functions._
   * outliers were re-measured with repeated same-JVM passes):
   * q34 TPC-H-Q4 1.7→2.3 s (the textbook semi-join plan, linear);
   * q36 TPC-H-Q22 1.0→1.8 s; dd12 inline 5.5→38.8 s — dominated, as
-  * designed, by recomputing dd2+dd7 for the labels; the production
-  * shape `Dedup.keepBest` on MATERIALIZED labels (`dd12_labels` mode)
-  * is FLAT 0.6→0.8 s at 1×→10×, confirming cluster labels belong in a
-  * stored table written once by the clustering job.
+  * designed, by recomputing dd2+dd7 for the labels (keep-best alone on
+  * materialized labels is flat: see [[operators.Dedup.keepBest]]).
   *
   * dd14 residual corpus: settled 3.2→~9–13 s at 1×→10× (anti-join cut;
   * see the dd14 plan note for the HOF-variant A/B). q37 TPC-H-Q17
@@ -108,15 +104,6 @@ import org.apache.spark.sql.functions._
   * (doc, dim) shuffle); sim8 PQ 3.3→5.9 s (ADC over 8-byte codes).
   *
   * Round-8 (measured, local[32], settled same-JVM passes):
-  * - skew:dd15 adversarial corpus (20k docs, EVERY token df ≈ n/8, 200
-  *   distinct shingle sets × 100 copies — the round-7 verdict's
-  *   degenerate case): 9.2 s, vs 10.7 s for the all-unique same-shape
-  *   twin — the distinct-set collapse makes the degenerate corpus run
-  *   at par (candidates are rep-level, ~20k rows where the unguarded
-  *   probe×posting-list join would have materialized ~200M), and
-  *   costs nothing when it buys nothing. With round 9's
-  *   fingerprint-first verify: hot 6.26 s / uniform 3.97 s — both
-  *   faster, still at par.
   * - dd15 with the guards on the regular corpus: 1× settled 4.9–5.2 s
   *   (pre-guard 2.4 s — the collapse/fingerprint machinery is a ~2×
   *   constant at 1×); 10× 87–190 s across settled passes on a machine
@@ -262,9 +249,7 @@ import org.apache.spark.sql.functions._
   * row-per-(vector, subspace) ADC join carried 8× the rows and
   * measured 44.8 s at 10× (round-11 re-measure with the TRAINED PQ
   * codebook: 6.69→20.21 s; NOTE the 10× probe's corpus side is 16000
-  * vectors — still ≤ the 16384 sample budget, so the trainer thinning
-  * stays inert here; the sampled path runs live in skew:sim14 at
-  * n=30k, rate 2); pipe4 pack-emit
+  * stays inert here); pipe4 pack-emit
   * 5.27→15.09 s (2.9× at 10× — the token regroup-by-chunk_id is the
   * linear term, everything upstream is pipe2's sub-linear manifest);
   * pipe3 incremental prep 4.34→12.95 s —
@@ -273,190 +258,17 @@ import org.apache.spark.sql.functions._
   * index, so the nightly cost is only the batch-sized slice: signatures
   * for the batch, candidate joins bounded by bucket degree, and the
   * 8-scalar stored-aggregate read).
-  *
-  * Round-13 probes (measured, local[32], warm):
-  * - prod:search6 (the RAG SERVING side of the from-store convention):
-  *   stores published through Snapshots (untimed — a rebuild cost, not
-  *   a query cost), per-query serving timed against the pinned version.
-  *   search6 rederive-in-plan 3.66 s vs from-store 1.14 s at 1× and
-  *   1.33 s at 10× STORE growth — near-FLAT; search7 6.02 s vs 3.20 s
-  *   at 1×, 4.82 s at 10× — sublinear, the floor being the K=8 bounded
-  *   MMR argmax actions. Parity with the registry twins asserted
-  *   in-run (numbers from the collision-free 10× corpus after the
-  *   review-pass remap fix).
-  * - skew:mine1 (the degenerate-vocabulary q×N quadratic the r12
-  *   verdict flagged): every doc = 1 rare word (df=10) + 20 words from
-  *   a 60-word shared vocab. Uncapped 4.86 s at n=10k → 274.1 s at
-  *   n=100k (the quadratic); mine1Capped(1000) 2.05 → 2.30 s,
-  *   near-FLAT — a 119× speedup at 10× on identical inputs, gate-corpus
-  *   output untouched by a loose cap (Mine1CapSpec).
-  *
-  * Round-11 adversarial probes (measured, local[32], warm):
-  * - skew:sim14 (one-cell IVFPQ degeneracy, n=30k, batch 6k, corpus
-  *   24k, k=155, nprobe=19): a one-blob corpus defeats the coarse
-  *   quantizer — every vector assigns to ONE cell, so each query's ADC
-  *   scan touches the whole corpus (Q·N = 144M ADC rows vs ~28M
-  *   balanced). Measured: uniform 29.2 s, hot-1cell 12.9 s (re-run
-  *   round 12 with the pool-100 rerank: 23.9 s / 12.9 s — same
-  *   shape; the wider rerank is invisible next to the scan) — the
-  *   degenerate case is ABSORBED (faster, even: the scan is 8
-  *   codegen'd element_at lookups per row and AQE's skew handling
-  *   splits the hot cell join), so no guard is wired; the at-scale
-  *   remedies if a production corpus ever concentrates (cell re-split
-  *   or a recall-lossy per-cell scan cap) stay documented, not coded.
-  *   corpus 24000 > the 16384 sample budget ⇒ the SAMPLED trainer
-  *   (rate 2) runs live in both probe corpora.
-  *
-  * Round-10 adversarial probes (measured, local[32], warm):
-  * - skew:pipe3 (the incremental-prep fan-out contract, n=10k docs):
-  *   uniform all-distinct corpus 3.11 s / 1286 accepted; hot-batch
-  *   (whole batch near-copies of ONE stored doc) 4.08 s / 0 accepted —
-  *   candidates are batch×1, the gate absorbs the worst clean-store
-  *   input at O(batch) cost; hot-store (the store ITSELF near-copies)
-  *   measured 17.89 s UNGUARDED — the B×S candidate quadratic a dirty
-  *   store buys, 5.8× baseline at just 10k docs. CLOSED round 11: the
-  *   store-side bucket cap (TrainPrep.pipe3MaxStoreBucket = 400,
-  *   mirrored in the oracle's `sbk` CTE) drops non-discriminating
-  *   band buckets before the candidate join — hot-store re-measures
-  *   2.32 s (vs 3.73 s uniform same session), accepted-set unchanged
-  *   (the skew batch still dies at decontamination against the
-  *   held-out near-copies), pipe3's sf0.01 CORRECTNESS row still green
-  *   bit-identical (cap 30–130× above the clean-store max bucket of
-  *   3/13 at sf0.01/sf0.1).
-  * - skew:q55 (the r9 verdict's exact-percentile memory risk — 20M
-  *   bit-mixed ≈all-distinct values, ONE group vs 1009 groups):
-  *   exact `percentile` (imperative, per-group value buffer) uniform
-  *   9.27 s → hot 242.9 s — a 26× per-group degradation partitioning
-  *   cannot split, and the buffer (20M×16 B+overhead in one task)
-  *   is one 10× step from OOM; `approx_percentile` GK-1000 sketch
-  *   4.03 → 3.07 s FLAT (constant-size mergeable summary — THE 100 TB
-  *   path, p50+p90 within 0.04% here); exact-windowsort fallback
-  *   (row_number over a per-group sort + bracketing order statistics)
-  *   4.92 → 80.8 s — one single-task EXTERNAL sort, so it degrades to
-  *   disk where the imperative buffer degrades to OOM; both exact
-  *   formulations agree bit-for-bit on both corpora. Verdict: q29/q55
-  *   keep exact semantics at gate scale; at 100 TB swap percentile →
-  *   approx_percentile (q32's pairing), or windowsort when the answer
-  *   must be exact and one group is huge.
-  * - skew:t17 (hub word at every other position of 50k docs — max-
-  *   degree co-occurrence node): uniform 12.75 s, hot-hub 7.99 s — the
-  *   hub corpus is FASTER (half its token positions collapse to one
-  *   word, so pairs.distinct() and the per-round contrib aggregation
-  *   both combine map-side on the hot key; fewer distinct edges
-  *   survive). Confirms the (doc_id, i)-equi-join edge build has no
-  *   per-doc quadratic and the PageRank loop no skew cliff. No guard
-  *   needed.
-  * - skew:dd16 (10k embeddings in one tight cosine blob — k-means
-  *   defeated, within-cluster verify degenerates to C(n,2)): before
-  *   4.01 s uniform / 13.29 s blob (the quadratic, ~50M pair dots);
-  *   after the round-10 ANCHOR-FIRST verify (keeper of v is the MIN
-  *   lower id ≥ 0.45, and the cluster's lowest-id member is the min
-  *   POSSIBLE keeper — one broadcast comparison resolves any v that
-  *   matches its anchor; only anchor-misses enter the pair join's
-  *   right side) 4.48 s uniform / 3.36 s blob — the degenerate corpus
-  *   now runs FASTER than uniform (everything resolves on the anchor
-  *   pass), output bit-identical (oracle re-verified both SFs, Dd16Spec
-  *   containment invariant green).
   */
 object ScaleProbe {
   val Copies = 10
 
-  /** Versioned /tmp cache root for the synthetic skew corpora. The
-    * caches are keyed on file existence only, so if a corpus-generator
-    * expression changed in a later round, stale parquet from the OLD
-    * generator would silently measure the old corpus and the published
-    * probe numbers would mislead. Bump [[SkewGenVersion]] whenever any
-    * skew generator changes — the new path misses the cache and the
-    * corpus rebuilds from the current expression. The same rule covers
-    * cached PUBLISHED STORES (prod:vecstore / skew:vecstore roots):
-    * they memoize a store LAYOUT, not just a corpus — v3 forces the
-    * r18 (cell, vec_id)-sorted vec_vecs rebuild so serve measurements
-    * actually exercise the layout the round claims.
-    */
-  private val SkewGenVersion = 3
-  private def skewCache(name: String): String =
-    s"/tmp/sfprobe_$name-v$SkewGenVersion"
-
-  /** Throwaway-copy helpers for the advance probe arms (an advance
-    * mutates latest, so each timed arm runs on a copy of the cached
-    * store, deleted after).
-    */
-  private def copyDir(from: String, to: String): Unit = {
-    val src0 = java.nio.file.Paths.get(from)
-    java.nio.file.Files.walk(src0).forEach { p =>
-      val dst = java.nio.file.Paths.get(to).resolve(src0.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(p, dst)
-    }
-  }
-  private def deleteDir(dir: String): Unit =
-    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-
   private def replicate(df: DataFrame): DataFrame =
     df.withColumn("_c", explode(sequence(lit(0L), lit(Copies - 1L))))
-
-  /** skew:sim14/skew:sim16 shared embedding corpus — ONE builder so the
-    * two probes can never drift apart while claiming "same corpora"
-    * (they share the skewCache("skewsim14") directory; whichever runs
-    * first materializes for both). hot: one tight blob (cosine ~1
-    * pairwise) → one IVF cell / Lloyd collapse. uniform: the dominant
-    * dim rotates → 64 well-separated groups across the cells.
-    */
-  private def skewSimCorpus(spark: SparkSession, path: String,
-      hot: Boolean, n: Long): Unit = {
-    if (!new java.io.File(s"$path/embeddings.parquet").exists()) {
-      val vec =
-        if (hot)
-          "transform(sequence(0, 63), j -> CAST(1.0 + CASE WHEN j = CAST(id % 64 AS INT) THEN CAST(id AS DOUBLE) * 1e-7 ELSE 0.0 END AS FLOAT))"
-        else
-          "transform(sequence(0, 63), j -> CAST(CASE WHEN j = CAST(id % 64 AS INT) THEN 10.0 ELSE CAST((id * 7 + j) % 5 AS DOUBLE) * 0.1 END AS FLOAT))"
-      spark.range(n).selectExpr("id AS vec_id", s"$vec AS embedding")
-        .write.mode("overwrite").parquet(s"$path/embeddings.parquet")
-    }
-  }
-
-  /** skew:sim17 / skew:vecstore shared blob+starved-label corpus — ONE
-    * builder (they share the skewCache("skewsim17") directory;
-    * whichever probe runs first materializes for both, so the two
-    * generators can never drift while claiming "same corpora"). One
-    * tight cosine blob; label 1 ≈ 1-in-300, split so it exists on BOTH
-    * sides of sim17's query/corpus partition (vec_id % 5): id ≡ 10
-    * (mod 600) rows are label-1 QUERIES, id ≡ 7 (mod 600) label-1
-    * CORPUS.
-    */
-  private def skewSim17Corpus(spark: SparkSession, path: String,
-      n: Long): Unit =
-    if (!new java.io.File(s"$path/embeddings.parquet").exists()) {
-      val vec = "transform(sequence(0, 63), j -> CAST(1.0 + CASE WHEN j = CAST(id % 64 AS INT) THEN CAST(id AS DOUBLE) * 1e-7 ELSE 0.0 END AS FLOAT))"
-      spark.range(n).selectExpr("id AS vec_id", s"$vec AS embedding",
-        "CAST(CASE WHEN id % 600 = 7 OR id % 600 = 10 THEN 1 ELSE 0 END AS INT) AS label")
-        .write.mode("overwrite").parquet(s"$path/embeddings.parquet")
-    }
 
   def main(args: Array[String]): Unit = {
     val src = "/root/testdata/sf0.1"
     val out = "/tmp/sfprobe"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Queries that localCheckpoint intermediates leave their blocks in
-    // the block manager forever (nothing unpersists them); across a
-    // multi-query probe run the accumulation eventually forces
-    // eviction/GC churn and the later timings go off a cliff (observed:
-    // the same dd11 10× run measuring 22 s on a fresh JVM and 175 s late
-    // in a session). Drop all persisted RDDs between runs so every
-    // measurement sees the same clean block manager.
-    def dropPersisted(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    val spark = Session.local()
 
     if (!new java.io.File(s"$out/lineitem.parquet").exists()) {
       println("[probe] materializing 10x corpus...")
@@ -530,1707 +342,10 @@ object ScaleProbe {
       "mix3_dsir_importance", "dc2_chunk_decontaminate", "sim16_residual_pq",
       "search7_rag_context", "mix4_incremental_dsir", "mm9_video_keyframes",
       "mine1_hard_negatives")
-    // adversarial dd10 skew probe (`runMain graft.ScaleProbe skew:dd10`):
-    // 100k-doc corpus where EVERY doc opens with the same 16-word
-    // boilerplate paragraph (one paragraph duplicated 1e5×) vs a
-    // same-shape corpus of all-unique paragraphs. dd10's
-    // first-occurrence MIN aggregate partially aggregates the hot key
-    // map-side, so the hot corpus must run in the same ballpark as the
-    // uniform one — a row_number window keyed on the paragraph would
-    // instead serialize 1e5 rows through one task. Measured (local[32],
-    // warm): uniform 2.81 s, hot-1e5 2.11 s — the hot corpus is FASTER
-    // (fewer distinct paragraphs survive the partial agg to shuffle).
-    if (args.contains("skew:dd10")) {
-      val skewDir = skewCache("skew")
-      val boiler = (1 to 16).map(i => s"b$i").mkString(" ")
-      def corpus(hot: Boolean, path: String): Unit = {
-        if (!new java.io.File(s"$path/documents.parquet").exists()) {
-          val unique = (n: Int) => "array_join(transform(sequence(0, " + n + "), " +
-            "j -> concat('w', CAST(id * 53 + j AS STRING))), ' ')"
-          // both corpora are 48 words = 3 paragraphs per doc; the hot one
-          // spends its first paragraph on the shared boilerplate
-          val text =
-            if (hot) s"concat('$boiler', ' ', ${unique(31)})" else unique(47)
-          spark.range(100000).selectExpr("id AS doc_id", s"$text AS text")
-            .write.mode("overwrite").parquet(s"$path/documents.parquet")
-        }
-      }
-      corpus(hot = true, s"$skewDir/hot")
-      corpus(hot = false, s"$skewDir/uni")
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-1e5" -> s"$skewDir/hot")) {
-        SparkEntry.queries("dd10_paragraph_dedup")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val t0 = System.nanoTime()
-        SparkEntry.queries("dd10_paragraph_dedup")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        println(f"[probe] skew dd10 $label%-8s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      spark.stop()
-      return
-    }
-    // adversarial dd15 probe (`runMain graft.ScaleProbe skew:dd15`): the
-    // round-7 verdict's degenerate-corpus case — EVERY doc drawn from
-    // the same tiny phrase set, so every shingle's df is O(n) and the
-    // old probe-prefix × full-posting-list join was O(n²) candidates.
-    // hot corpus: 20k docs, each one of 200 templates (5 phrases from a
-    // SHARED 40-phrase pool → every token df ≈ n/8, 200 distinct
-    // shingle sets duplicated 100×). Under the distinct-set collapse,
-    // candidate generation runs over 200 representatives (rep-level df
-    // ≈ 25), and member expansion is the intra-group output itself
-    // (200·100·99 ≈ 2M pairs). uniform twin: same shape, all-unique
-    // phrases (zero duplication — measures the collapse's overhead when
-    // it buys nothing).
-    if (args.contains("skew:dd15")) {
-      val skewDir = skewCache("skew15")
-      def corpus(hot: Boolean, path: String): Unit = {
-        if (!new java.io.File(s"$path/documents.parquet").exists()) {
-          if (hot) {
-            val pool = (0 until 40).map(p =>
-              (0 until 8).map(j => s"p${p}w$j").mkString(" "))
-            val tmpl = (0 until 200).map(t => (t.toLong,
-              (0 until 5).map(i => pool((t * 7 + i * 11) % 40)).mkString(" ")))
-            import spark.implicits._
-            val tdf = tmpl.toDF("tid", "text")
-            spark.range(20000).withColumn("tid", col("id") % 200)
-              .join(broadcast(tdf), "tid")
-              .select(col("id").as("doc_id"), col("text"))
-              .write.mode("overwrite").parquet(s"$path/documents.parquet")
-          } else {
-            spark.range(20000).selectExpr("id AS doc_id",
-              "array_join(transform(sequence(0, 39), " +
-                "j -> concat('w', CAST(id * 53 + j AS STRING))), ' ') AS text")
-              .write.mode("overwrite").parquet(s"$path/documents.parquet")
-          }
-        }
-      }
-      corpus(hot = true, s"$skewDir/hot")
-      corpus(hot = false, s"$skewDir/uni")
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-200sets" -> s"$skewDir/hot")) {
-        SparkEntry.queries("dd15_containment")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        SparkEntry.queries("dd15_containment")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        println(f"[probe] skew dd15 $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial gr2/gr3 basket probe (`runMain graft.ScaleProbe
-    // skew:gr3`): the co-purchase edge build enumerates C(basket, 2)
-    // pairs per order inside ONE join-key group — a degenerate basket is
-    // a per-key quadratic bomb no partitioning can split. hot corpus:
-    // sf0.1 lineitem + ONE 20k-item order whose part keys are outside
-    // the base range (all its pairs are weight-1 coincidences, so the
-    // w ≥ 2 threshold drops every one AFTER enumeration — pure
-    // enumeration cost, output identical to the uniform twin). Measures
-    // the edge build capped (saneBaskets' ≤256 filter) vs uncapped, then
-    // the shipped queries on both corpora.
-    if (args.contains("skew:gr3")) {
-      val skewDir = skewCache("skewgr")
-      if (!new java.io.File(s"$skewDir/uni/lineitem.parquet").exists()) {
-        val base = Tables.lineitem(spark, src).select("l_orderkey", "l_partkey")
-        base.write.mode("overwrite").parquet(s"$skewDir/uni/lineitem.parquet")
-        base.unionByName(spark.range(20000).select(
-            lit(999999999L).as("l_orderkey"), (col("id") + 10000000L).as("l_partkey")))
-          .write.mode("overwrite").parquet(s"$skewDir/hot/lineitem.parquet")
-      }
-      def edges(dir: String, capped: Boolean): DataFrame = {
-        val li0 = Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("pk")).distinct()
-        val li = if (!capped) li0 else
-          li0.join(li0.groupBy("o").agg(count(lit(1)).as("bs"))
-            .filter(col("bs") <= 256L).select("o"), "o")
-        li.as("x").join(li.as("y"),
-            col("x.o") === col("y.o") && col("x.pk") < col("y.pk"))
-          .groupBy(col("x.pk").as("lo"), col("y.pk").as("hi"))
-          .agg(count(lit(1)).as("w")).filter(col("w") >= 2).select("lo", "hi")
-      }
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-20k" -> s"$skewDir/hot");
-           capped <- Seq(true, false)) {
-        val t0 = System.nanoTime()
-        edges(dir, capped).write.format("noop").mode("overwrite").save()
-        println(f"[probe] skew gr3 $label%-8s capped=$capped%-5s edge build ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      }
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-20k" -> s"$skewDir/hot");
-           q <- Seq("gr2_triangles", "gr3_lpa_communities")) {
-        SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
-        println(f"[probe] skew gr3 $label%-8s $q%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // ev5 growth adjudication (`runMain graft.ScaleProbe skew:ev5`),
-    // closing the r10/r11 verdicts' carried watch item: ev5's 10×
-    // super-linearity — is it the PLAN (a scale-killer) or the OUTPUT
-    // (inherent)? The interval join is already banded (1-hour cells →
-    // equi-join), so the probe separates the two by growing the corpus
-    // 10× two ways with identical input row counts:
-    //   dense   — 10 user/event-remapped copies in the SAME time span.
-    //             Errors are system-wide (the join is keyless), so 10×
-    //             sessions each see 10× errors: in-window PAIRS grow
-    //             ~100×. Any correct engine does ~100× work.
-    //   stretch — the same copies shifted into DISJOINT time bands
-    //             (copy c offset by c·span). Each session overlaps only
-    //             its own copy's errors: pairs grow ~10× (linear).
-    // Verdict is read off the stretch row: ~linear runtime at 10× input
-    // with ~10× pairs means the banded plan scales and dense's
-    // super-linearity is pair-count, not plan. MEASURED (this round,
-    // sf0.1 base, warm): 1× 2.26 s / 51.5k pairs; 10×-stretch 2.64 s /
-    // 515k pairs (1.17× time for 10× input AND output — the plan is
-    // nowhere near the bottleneck); 10×-dense 3.97 s / 5.15M pairs
-    // (1.76× time for 100× pairs — output growth absorbed by the
-    // map-side-combined distinct+count). The watch item CLOSES: growth
-    // rides output cardinality; there is no plan regression to fix.
-    if (args.contains("skew:ev5")) {
-      val skewDir = skewCache("skewev5")
-      if (!new java.io.File(s"$skewDir/dense/events.parquet").exists()) {
-        val base = Tables.events(spark, src)
-        val spanUs = base
-          .agg((max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))) +
-            3600000000L).as("s")).first().getLong(0)
-        def copies(stretch: Boolean): DataFrame = {
-          val c = base
-            .withColumn("_c", explode(sequence(lit(0L), lit(Copies - 1L))))
-            .withColumn("event_id", col("event_id") * 16L + col("_c"))
-            .withColumn("user_id", col("user_id") * 16L + col("_c"))
-          val shifted = if (stretch)
-            c.withColumn("ts",
-              timestamp_micros(unix_micros(col("ts")) + col("_c") * spanUs))
-          else c
-          shifted.drop("_c")
-        }
-        copies(stretch = false).write.mode("overwrite")
-          .parquet(s"$skewDir/dense/events.parquet")
-        copies(stretch = true).write.mode("overwrite")
-          .parquet(s"$skewDir/stretch/events.parquet")
-      }
-      for ((label, dir) <- Seq("1x-base" -> src,
-          "10x-dense" -> s"$skewDir/dense", "10x-stretch" -> s"$skewDir/stretch")) {
-        def run(): DataFrame = SparkEntry.queries("ev5_interval_join")(spark, dir)
-        run().write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        run().write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val stats = run().agg(count(lit(1)).as("rows"), sum("n_errors").as("pairs"))
-          .first()
-        println(f"[probe] skew ev5 $label%-11s ${dt}%6.2f s  rows=${stats.getLong(0)}  pairs=${stats.getLong(1)}")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // mine1 degenerate-vocabulary adversarial probe (`runMain
-    // graft.ScaleProbe skew:mine1`), building the guard the r12 verdict
-    // asked for: mine1's candidate join is pruned to each query's 3
-    // salient terms, which on a real corpus are rare (high tf·idf ⇒ low
-    // df) — but a DEGENERATE corpus whose whole vocabulary is
-    // near-stop-words makes even the salient terms df≈N/3, and the join
-    // emits q × N pairs (the quadratic the r12 verdict flagged). The
-    // synthetic corpus makes that exact shape: every doc = 1 RARE word
-    // (df=10, the true salient term) + 20 words from a 60-word shared
-    // vocab (df≈N/3, near-stop-words that still win top-3 ranks 2–3).
-    // mine1Capped(dfCap) drops query terms with df > cap after salience
-    // selection: rare terms survive, the stop-words never fan out, and
-    // the join degree is bounded by q·3·dfCap independent of N. The
-    // registry query stays uncapped (oracle-gated; the cap would vacate
-    // the gate corpus's output) — this probe measures the knob where it
-    // earns its keep, the pipe3 hot-store pattern. MEASURED (warm, this
-    // round, n=10k/100k, dfCap=1000): uncapped 4.86 s at 1× → 274.1 s at
-    // 10× docs (the q×N quadratic — ~56× time for 10× input; candidate
-    // pairs grow ~100×); capped 2.05 s at 1× → 2.30 s at 10× —
-    // near-FLAT, a 119× speedup at 10× on identical inputs (output 900
-    // vs 9000 rows: 10× queries × the 9 rare-term co-block candidates).
-    if (args.contains("skew:mine1")) {
-      import graft.operators.TextOps
-      val skewDir = skewCache("skewmine1")
-      def mkCorpus(dir: String, n: Long): Unit =
-        if (!new java.io.File(s"$dir/documents.parquet").exists()) {
-          spark.range(n).selectExpr(
-            "id AS doc_id",
-            """concat_ws(' ',
-              |  concat('r', CAST(id div 10 AS STRING)),
-              |  concat_ws(' ', transform(sequence(0, 19),
-              |    j -> concat('w', CAST((id*31 + j*7) % 60 AS STRING))))
-              |) AS text""".stripMargin,
-            "'xx' AS lang", "'probe' AS source", "21L AS n_chars")
-            .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-          spark.range(n).selectExpr("id AS vec_id",
-            "transform(sequence(0, 63), j -> CAST(CASE WHEN j = CAST(id % 64 AS INT) THEN 10.0 ELSE 0.1 END AS FLOAT)) AS embedding",
-            "CAST(id % 4 AS INT) AS label")
-            .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        }
-      mkCorpus(s"$skewDir/1x", 10000L)
-      mkCorpus(s"$skewDir/10x", 100000L)
-      for ((label, dir, cap) <- Seq(
-          ("uncapped-1x", s"$skewDir/1x", None),
-          ("capped-1x", s"$skewDir/1x", Some(1000L)),
-          ("uncapped-10x", s"$skewDir/10x", None),
-          ("capped-10x", s"$skewDir/10x", Some(1000L)))) {
-        def run(): DataFrame = cap match {
-          case Some(c) => TextOps.mine1Capped(spark, dir, c)
-          case None => SparkEntry.queries("mine1_hard_negatives")(spark, dir)
-        }
-        run().write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        run().write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val rows = run().count()
-        println(f"[probe] skew mine1 $label%-13s ${dt}%6.2f s  rows=$rows")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // PRODUCTION-SHAPED pipe5 (`runMain graft.ScaleProbe prod:pipe5`),
-    // closing the r11 verdict's probe gap: the registry pipe5's 10×
-    // number (5.35→13.68 s, 2.6×) includes RE-DERIVING the store-sized
-    // manifest in-plan, which production never does — it reads the six
-    // store tables the previous nightly run materialized. This probe
-    // measures the incremental-only cost: materializeStore (untimed,
-    // stands for last night's run) writes the band index / signature
-    // table / fingerprints / cursors / manifest / open starts to
-    // parquet; pipe5FromStore is timed reading them. Corpora: 1× = the
-    // gate corpus; 10×-store = STORE docs replicated 10× (ids remapped
-    // ≡ 1 mod 70 so every copy stays store-side), batch and held-out
-    // rows UNCHANGED — so any growth in the timed number is store-scan
-    // or candidate-degree cost, not batch work. Copies keep identical
-    // text: store band buckets and batch×store candidate degree grow a
-    // full 10× (max bucket 3→30 at sf0.01, under the 400 cap) — a
-    // DIRTIER store than real growth would produce, so the measured
-    // slope is conservative. Output equality vs the registry pipe5 is
-    // asserted in-run at 1× (and pinned at sf0.001 by
-    // Pipe5FromStoreSpec). MEASURED (sf0.1 base, warm, r15 — the store
-    // now a versioned Snapshots root): rederive-in-plan 1× 4.83 s;
-    // from-store 1× 3.59 s, 10×-store 4.44 s — 1.24× for 10× store
-    // growth even with the conservative full-10× candidate degree (the
-    // residual slope is the 10× band index + signature semi join
-    // feeding the verify, plus the 3-column manifest boundary scan;
-    // the r14 flat-directory layout measured 3.66 → 5.76 s), vs the
-    // registry probe's 2.6× with batch+store grown together. The
-    // versioning costs nothing measurable. The production-shaped
-    // incremental cost is near-flat in store size, as the design
-    // claims. (The sf0.1 batch is near-dup-heavy by corpus design —
-    // pipe3 accepts 2 docs — so the timed number is dominated by the
-    // gate stages, which is exactly the per-nightly-run cost.)
-    if (args.contains("prod:pipe5")) {
-      import graft.operators.TrainPrep
-      val dirBase = skewCache("prodpipe5")
-      if (!new java.io.File(s"$dirBase/10x/documents.parquet").exists()) {
-        val docs = Tables.documents(spark, src)
-        val copies = docs
-          .filter(col("doc_id") % 7 =!= 3 && col("doc_id") % 10 =!= 0)
-          .withColumn("_c", explode(sequence(lit(1L), lit(9L))))
-          .withColumn("doc_id", (col("doc_id") * 16L + col("_c")) * 70L + 1L)
-          .drop("_c")
-        docs.unionByName(copies).write.mode("overwrite")
-          .parquet(s"$dirBase/10x/documents.parquet")
-      }
-      // last night's run (untimed) — the store is a Snapshots root now.
-      // A cached store from an older layout (missing a table the current
-      // code reads) re-materializes as a fresh version: the ensure
-      // condition checks the committed latest actually carries the full
-      // current table set, not just that a version exists.
-      def storeReady(root: String): Boolean =
-        graft.sources.Snapshots.latestVersion(spark, root).exists { v =>
-          new java.io.File(s"$root/_v=$v/store_capped").exists() &&
-            new java.io.File(s"$root/_v=$v/store_tombstones").exists() &&
-            (try graft.sources.Snapshots
-              .readTable(spark, root, "store_totals", Some(v))
-              .columns.contains("max_tok")
-            catch { case _: Throwable => false })
-        }
-      if (!storeReady(s"$dirBase/1x_store"))
-        TrainPrep.materializeStore(spark, src, s"$dirBase/1x_store")
-      if (!storeReady(s"$dirBase/10x_store"))
-        TrainPrep.materializeStore(spark, s"$dirBase/10x", s"$dirBase/10x_store")
-      // correctness: from-store output == the registry pipe5, bit-for-bit
-      val want = SparkEntry.queries("pipe5_incremental_chunks")(spark, src)
-        .collect().map(_.toSeq).toSeq
-      val got = TrainPrep.pipe5FromStore(spark, src, s"$dirBase/1x_store")
-        .collect().map(_.toSeq).toSeq
-      require(got == want,
-        s"pipe5FromStore diverged from pipe5: ${got.size} vs ${want.size} rows")
-      println(s"[probe] prod pipe5 parity OK (${want.size} rows)")
-      dropPersisted()
-      for ((label, d, st) <- Seq(
-          ("rederive-1x", src, ""),
-          ("fromstore-1x", src, s"$dirBase/1x_store"),
-          ("fromstore-10x-store", s"$dirBase/10x", s"$dirBase/10x_store"))) {
-        def run(): DataFrame =
-          if (st.isEmpty) SparkEntry.queries("pipe5_incremental_chunks")(spark, d)
-          else TrainPrep.pipe5FromStore(spark, d, st)
-        run().write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        run().write.format("noop").mode("overwrite").save()
-        println(f"[probe] prod pipe5 $label%-20s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        dropPersisted()
-      }
-      // the nightly STORE ADVANCE (compute batch-sized, and since the
-      // layered-snapshot commit the WRITE too — manifest/shingles/bands
-      // land as Append deltas, test_shingles/capped as Carry refs, only
-      // the 8-row totals/opens write Full): each arm runs against a
-      // THROWAWAY COPY of the cached store, deleted after timing — a
-      // pointer rollback would leave an orphaned version dir per run
-      // (claims take max(dirs)+1, so orphans are never reclaimed) and a
-      // crash between advance and rollback would poison the cache's
-      // parity check for every later run. MEASURED (warm, settled):
-      // 1× 5.83 s, 10×-store 5.63 s — FLAT and ~1.3× under the
-      // full-version commit this replaces (7.45/7.43 s): the gates
-      // dominate at this sf; the eliminated write term is O(store)
-      // per night, which is what matters at 100 TB.
-      for ((label, d, st) <- Seq(
-          ("advance-1x", src, s"$dirBase/1x_store"),
-          ("advance-10x-store", s"$dirBase/10x", s"$dirBase/10x_store"))) {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("probe_advance").toString
-        deleteDir(scratch); copyDir(st, scratch)
-        val v0 = graft.sources.Snapshots.latestVersion(spark, scratch).get
-        val t0 = System.nanoTime()
-        val v1 = TrainPrep.advanceStore(spark, d, scratch)
-        println(f"[probe] prod pipe5 $label%-20s ${(System.nanoTime() - t0) / 1e9}%6.2f s  (v$v0 -> v$v1)")
-        deleteDir(scratch)
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // STREAMING advancer probe (`prod:stream-advance`) — the per-TRIGGER
-    // figures the batch advance arms cannot give: streamingStoreAdvance /
-    // streamingRagAdvance have correctness specs but no published
-    // latency numbers, and a streaming deployment plans its trigger
-    // cadence around exactly this. Each arm splits the fixed batch into
-    // 4 per-file triggers (maxFilesPerTrigger=1, AvailableNow) against a
-    // THROWAWAY copy of the cached 1× and 10× stores and reports total +
-    // per-trigger wall-clock. Expect flat in store size (a trigger costs
-    // the batch advance's gates + O(trigger) layered commit, plus
-    // foreachBatch/checkpoint bookkeeping); chain depth grows one layer
-    // per non-empty trigger — the reason the streaming posture pairs
-    // with Snapshots.maintain on a real cadence where a nightly batch
-    // might not bother. MEASURED (sf0.1 base, warm): see the figures in
-    // Streams.scala's streamingStoreAdvance/streamingRagAdvance
-    // scaladoc, updated from this arm's captures.
-    if (args.contains("prod:stream-advance")) {
-      import graft.operators.TrainPrep
-      import org.apache.spark.sql.types.{LongType, StringType, StructType}
-      // ensure the pipe5-advance caches (same ensure as prod:pipe5)
-      val p5 = skewCache("prodpipe5")
-      if (!new java.io.File(s"$p5/10x/documents.parquet").exists()) {
-        val docs = Tables.documents(spark, src)
-        val copies = docs
-          .filter(col("doc_id") % 7 =!= 3 && col("doc_id") % 10 =!= 0)
-          .withColumn("_c", explode(sequence(lit(1L), lit(9L))))
-          .withColumn("doc_id", (col("doc_id") * 16L + col("_c")) * 70L + 1L)
-          .drop("_c")
-        docs.unionByName(copies).write.mode("overwrite")
-          .parquet(s"$p5/10x/documents.parquet")
-      }
-      def packReady(root: String): Boolean =
-        graft.sources.Snapshots.latestVersion(spark, root).exists { v =>
-          new java.io.File(s"$root/_v=$v/store_capped").exists() &&
-            new java.io.File(s"$root/_v=$v/store_tombstones").exists()
-        }
-      if (!packReady(s"$p5/1x_store"))
-        TrainPrep.materializeStore(spark, src, s"$p5/1x_store")
-      if (!packReady(s"$p5/10x_store"))
-        TrainPrep.materializeStore(spark, s"$p5/10x", s"$p5/10x_store")
-      // ensure the RAG caches (same ensure as prod:search6)
-      val s6 = skewCache("prodsearch6")
-      if (!new java.io.File(s"$s6/10x/documents.parquet").exists()) {
-        val docs = Tables.documents(spark, src)
-        docs.unionByName(docs
-            .withColumn("_c", explode(sequence(lit(1L), lit(9L))))
-            .withColumn("doc_id", col("doc_id") + col("_c") * 10000L + 5000L)
-            .drop("_c"))
-          .write.mode("overwrite").parquet(s"$s6/10x/documents.parquet")
-      }
-      def ragReady(root: String): Boolean =
-        graft.sources.Snapshots.latestVersion(spark, root)
-          .exists(v => new java.io.File(s"$root/_v=$v/tombstones").exists())
-      if (!ragReady(s"$s6/1x_store"))
-        TrainPrep.publishRagStore(spark, src, s"$s6/1x_store")
-      if (!ragReady(s"$s6/10x_store"))
-        TrainPrep.publishRagStore(spark, s"$s6/10x", s"$s6/10x_store")
-      dropPersisted()
-      val docSchema = new StructType()
-        .add("doc_id", LongType).add("text", StringType)
-        .add("lang", StringType).add("source", StringType)
-        .add("n_chars", LongType)
-      def streamRun(label: String, batchDf: DataFrame, store: String)(
-          mk: (DataFrame, String, String) =>
-            org.apache.spark.sql.streaming.DataStreamWriter[
-              org.apache.spark.sql.Row]): Unit = {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("probe_sadv").toString
-        deleteDir(scratch); copyDir(store, scratch)
-        val inDir = java.nio.file.Files
-          .createTempDirectory("probe_sadv_in").toString
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("probe_sadv_ck").toString + "/ck"
-        batchDf.select(col("doc_id"), col("text"),
-            coalesce(col("lang"), lit("en")).as("lang"),
-            col("source"), col("n_chars"))
-          .repartition(4).write.mode("overwrite").parquet(inDir)
-        val v0 = graft.sources.Snapshots.latestVersion(spark, scratch).get
-        val stream = spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-        val t0 = System.nanoTime()
-        val q = mk(stream, scratch, ckpt).start()
-        q.awaitTermination(600000)
-        val secs = (System.nanoTime() - t0) / 1e9
-        val v1 = graft.sources.Snapshots.latestVersion(spark, scratch).get
-        println(f"[probe] stream-advance $label%-18s total $secs%6.2f s" +
-          f"  (${secs / 4}%5.2f s/trigger, v$v0 -> v$v1)")
-        deleteDir(scratch); deleteDir(inDir)
-        dropPersisted()
-      }
-      for ((label, d, st) <- Seq(
-          ("store-1x", src, s"$p5/1x_store"),
-          ("store-10x-store", s"$p5/10x", s"$p5/10x_store")))
-        streamRun(label,
-          Tables.documents(spark, d).filter(col("doc_id") % 7 === 3), st)(
-          (s, dir, ck) =>
-            graft.streaming.Streams.streamingStoreAdvance(s, dir, ck))
-      val ragBatch = { import spark.implicits._
-        (1 to 20).map(i => (1000000L + i,
-          (1 to 80).map(j => s"fresh${i}w$j").mkString(" ")))
-          .toDF("doc_id", "text") }
-        .withColumn("lang", lit("en"))
-        .withColumn("source", lit("probe"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      for ((label, st) <- Seq(
-          ("rag-1x", s"$s6/1x_store"),
-          ("rag-10x", s"$s6/10x_store")))
-        streamRun(label, ragBatch, st)((s, dir, ck) =>
-          graft.streaming.Streams.streamingRagAdvance(s, dir, ck))
-      spark.stop()
-      return
-    }
-    // PRODUCTION-SHAPED RAG serving (`runMain graft.ScaleProbe
-    // prod:search6`), closing the r12 verdict's serving-side gap: the
-    // registry search6/search7 REBUILD pipe6's index in-plan every run
-    // (the oracle must replay everything from raw tables), so their
-    // bench numbers charge each query an index build production pays
-    // once per rebuild. Here the store publishes first through
-    // Snapshots (untimed — that cost is pipe6's, already probed), then
-    // the from-store twins are timed PER QUERY against the pinned
-    // version: probe the k stored cells, exact-rerank the probed
-    // chunks, scan the query terms' postings (tok-sorted parquet,
-    // row-group pruned), fuse, and for search7 the ≤15-row MMR+pack
-    // tail. Corpora: 1× = the gate corpus; 10× = docs replicated 10×
-    // with remapped ids (C and the cell count √C both grow, a real
-    // index-growth shape). Parity vs the registry twins is asserted
-    // in-run at 1× (and pinned at sf0.001 by RagStoreSpec). MEASURED
-    // (sf0.1 base, warm, r14 capture, collision-free 10× corpus): s6
-    // rederive 2.22 s vs from-store 0.85 s at 1×, 1.11 s at 10× store —
-    // near-FLAT; s7 rederive 4.70 s vs from-store 2.27 s at 1×, 2.79 s
-    // at 10× — near-flat too since r14's doc_id-sorted chunklens +
-    // literal-predicate candidate lookup removed the per-query
-    // store-sized scan (the r13 shape measured 3.20 → 4.82 s); the
-    // remaining floor is the K=8 bounded MMR argmax actions.
-    if (args.contains("prod:search6")) {
-      import graft.operators.{TextOps, TrainPrep}
-      val dirBase = skewCache("prodsearch6")
-      if (!new java.io.File(s"$dirBase/10x/documents.parquet").exists()) {
-        // collision-FREE remap: sf0.1 doc_ids are dense 0..4999, so the
-        // first-cut `doc_id * 16 + c` landed ~2800 copies back inside the
-        // original id range and the keyed index merged two docs' chunks
-        // under one doc_id. Copy c gets its own disjoint 10k-wide band
-        // above every original id.
-        val docs = Tables.documents(spark, src)
-        docs.unionByName(docs
-            .withColumn("_c", explode(sequence(lit(1L), lit(9L))))
-            .withColumn("doc_id", col("doc_id") + col("_c") * 10000L + 5000L)
-            .drop("_c"))
-          .write.mode("overwrite").parquet(s"$dirBase/10x/documents.parquet")
-      }
-      // last rebuild (untimed): publish both stores once, reuse across
-      // runs — a cached pre-tombstone-registry store republishes
-      def ensureStore(d: String, root: String): Unit = {
-        val ready = graft.sources.Snapshots.latestVersion(spark, root)
-          .exists(v => new java.io.File(s"$root/_v=$v/tombstones").exists())
-        if (!ready) {
-          TrainPrep.publishRagStore(spark, d, root)
-          dropPersisted()
-        }
-      }
-      ensureStore(src, s"$dirBase/1x_store")
-      ensureStore(s"$dirBase/10x", s"$dirBase/10x_store")
-      // correctness: from-store serving == the registry twins, bit-for-bit
-      val want6 = SparkEntry.queries("search6_hybrid_chunks")(spark, src)
-        .collect().map(_.toSeq).toSeq
-      dropPersisted()
-      val got6 = TextOps.search6FromStore(spark, s"$dirBase/1x_store")
-        .collect().map(_.toSeq).toSeq
-      require(got6 == want6,
-        s"search6FromStore diverged from search6: $got6 vs $want6")
-      println(s"[probe] prod search6 parity OK (${want6.size} rows)")
-      val want7 = SparkEntry.queries("search7_rag_context")(spark, src)
-        .collect().map(_.toSeq).toSeq
-      dropPersisted()
-      val got7 = TextOps.search7FromStore(spark, s"$dirBase/1x_store")
-        .collect().map(_.toSeq).toSeq
-      require(got7 == want7,
-        s"search7FromStore diverged from search7: $got7 vs $want7")
-      println(s"[probe] prod search7 parity OK (${want7.size} rows)")
-      dropPersisted()
-      val runners: Seq[(String, () => DataFrame)] = Seq(
-        "s6-rederive-1x" ->
-          (() => SparkEntry.queries("search6_hybrid_chunks")(spark, src)),
-        "s6-fromstore-1x" ->
-          (() => TextOps.search6FromStore(spark, s"$dirBase/1x_store")),
-        "s6-fromstore-10x" ->
-          (() => TextOps.search6FromStore(spark, s"$dirBase/10x_store")),
-        "s7-rederive-1x" ->
-          (() => SparkEntry.queries("search7_rag_context")(spark, src)),
-        "s7-fromstore-1x" ->
-          (() => TextOps.search7FromStore(spark, s"$dirBase/1x_store")),
-        "s7-fromstore-10x" ->
-          (() => TextOps.search7FromStore(spark, s"$dirBase/10x_store")))
-      for ((label, run) <- runners) {
-        run().write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        run().write.format("noop").mode("overwrite").save()
-        println(f"[probe] prod search6 $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        dropPersisted()
-      }
-      // the incremental RAG-store ADVANCE (advanceRagStore — the
-      // freshness path between rebuilds): a FIXED 20-doc batch against
-      // the 1× and 10× published stores, each arm on a throwaway copy
-      // (an advance mutates latest; the cached store must stay pristine
-      // for parity). Expect flat: compute is O(batch chunks × k) against
-      // the broadcast centroids + the chunklens membership anti-join's
-      // column-pruned scan; the write is O(batch) Append deltas.
-      // MEASURED (warm, r15 continuation): 1× 2.56 s, 10× 2.24 s — FLAT
-      // in store size, and serving at latest picks the new docs up with
-      // the same near-flat from-store query cost (the s6/s7 arms of the
-      // same capture: s6 0.87/0.87 s, s7 2.63/3.12 s at 1×/10×).
-      // NOT checkpointed: the inter-arm dropPersisted() would evict the
-      // blocks mid-probe, and 20 literal rows re-derive for free
-      val batch = { import spark.implicits._
-        (1 to 20).map(i => (1000000L + i,
-          (1 to 80).map(j => s"fresh${i}w$j").mkString(" ")))
-          .toDF("doc_id", "text") }
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .withColumn("source", lit("probe"))
-      for ((label, st) <- Seq(
-          ("rag-advance-1x", s"$dirBase/1x_store"),
-          ("rag-advance-10x", s"$dirBase/10x_store"))) {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("probe_ragadv").toString
-        deleteDir(scratch); copyDir(st, scratch)
-        val t0 = System.nanoTime()
-        TrainPrep.advanceRagStore(spark, batch, scratch)
-        println(f"[probe] prod search6 $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        deleteDir(scratch)
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // PUBLISHED VECTOR INDEX probe (`runMain graft.ScaleProbe
-    // prod:vecstore`): the registry sim16/sim17 RETRAIN the coarse
-    // quantizer and PQ codebooks inside every invocation (the oracle
-    // must replay training from raw tables), so their bench numbers
-    // charge each query a train+encode production pays once per
-    // rebuild. Here the store publishes first (untimed — that is the
-    // nightly rebuild's job), then serving is timed per query against
-    // the pinned artifacts with a FIXED batch: the 10× arm serves the
-    // same sf0.1 batch against a store built on the 10×-replicated
-    // corpus (k and the cell count √C grow — a real index-growth
-    // shape), so any store-size term in the serve shows directly.
-    // What scales how (r18, measured): the REQUEST-SHAPED serve (64
-    // fixed queries) is FLAT — its probed-cell set is a bounded
-    // fraction of k, and the shared literal pushdown prunes BOTH the
-    // (cell,lbl,vec_id)-sorted code scan and the (cell,vec_id)-sorted
-    // rerank scan to the probed row groups. The full-sf batch (20% of
-    // the corpus) probes EVERY cell, so its serve is honestly
-    // corpus-shaped — still ~3× under the rederive. The advance arm is
-    // the freshness path (fixed 20-vector batch, throwaway store
-    // copies — expect flat); the recall arm is the nightly drift
-    // observable (near-flat); the republish arm is the retrain
-    // (expect O(store), stated honestly); the takedown arm is the
-    // erasure path (all-Full rewrite — expect O(store)).
-    if (args.contains("prod:vecstore")) {
-      import graft.operators.{Similarity, VecStore}
-      val dirBase = skewCache("prodvecstore")
-      def ensureStore(d: String, root: String): Unit = {
-        if (graft.sources.Snapshots.latestVersion(spark, root).isEmpty) {
-          VecStore.publish(spark, d, root)
-          dropPersisted()
-        }
-      }
-      ensureStore(src, s"$dirBase/1x_store")
-      ensureStore(out, s"$dirBase/10x_store") // 10× corpus (remapped ids)
-      // correctness: from-store serving == the registry twins, bit-for-bit
-      for ((name, from) <- Seq(
-          "sim16_residual_pq" ->
-            (() => VecStore.sim16FromStore(spark, src, s"$dirBase/1x_store")),
-          "sim17_filtered_residual" ->
-            (() => VecStore.sim17FromStore(spark, src, s"$dirBase/1x_store")))) {
-        val want = SparkEntry.queries(name)(spark, src)
-          .collect().map(_.toSeq).toSeq
-        dropPersisted()
-        val got = from().collect().map(_.toSeq).toSeq
-        require(got == want, s"$name FromStore diverged: $got vs $want")
-        println(s"[probe] prod vecstore $name parity OK (${want.size} rows)")
-        dropPersisted()
-      }
-      // the FIXED batch the 10× serve arm probes with (the sf0.1 batch)
-      val isNew = col("vec_id") % 5 === 0
-      def batch16() =
-        Similarity.scaledVectors(spark, src).filter(isNew).localCheckpoint()
-      def batch17() =
-        Similarity.labeledVectors(spark, src).filter(isNew).localCheckpoint()
-      def serve(root: String, filtered: Boolean): DataFrame =
-        Similarity.serveIvfpq(if (filtered) batch17() else batch16(),
-          VecStore.loadIndex(spark, root), Similarity.pq16Pool,
-          residual = true, coarseTrained = true,
-          filteredByLabel = filtered, filterWiden = true,
-          pushProbedCells = true)
-      val runners: Seq[(String, () => DataFrame)] = Seq(
-        "s16-rederive-1x" ->
-          (() => SparkEntry.queries("sim16_residual_pq")(spark, src)),
-        "s16-fromstore-1x" -> (() => serve(s"$dirBase/1x_store", false)),
-        "s16-fromstore-10x" -> (() => serve(s"$dirBase/10x_store", false)),
-        "s17-rederive-1x" ->
-          (() => SparkEntry.queries("sim17_filtered_residual")(spark, src)),
-        "s17-fromstore-1x" -> (() => serve(s"$dirBase/1x_store", true)),
-        "s17-fromstore-10x" -> (() => serve(s"$dirBase/10x_store", true)))
-      for ((label, run) <- runners) {
-        run().write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        run().write.format("noop").mode("overwrite").save()
-        println(f"[probe] prod vecstore $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        dropPersisted()
-      }
-      // small-batch serving arm: a production request batch is tiny vs
-      // the corpus — the full-sf batch above probes EVERY cell (12k
-      // queries × nprobe ≥ k distinct cells, so the literal pushdown
-      // covers the whole table and the serve is honestly corpus-shaped)
-      // while 64 fixed queries probe a bounded cell set, so the
-      // (cell,…)-sorted layout + probed-cell literals prune BOTH
-      // corpus-table scans and the serve should grow far slower than
-      // the store
-      def smallServe(root: String, filtered: Boolean): DataFrame = {
-        val b = (if (filtered) Similarity.labeledVectors(spark, src)
-          else Similarity.scaledVectors(spark, src))
-          .filter(isNew).orderBy("vec_id").limit(64)
-        Similarity.serveIvfpq(b, VecStore.loadIndex(spark, root),
-          Similarity.pq16Pool, residual = true, coarseTrained = true,
-          filteredByLabel = filtered, filterWiden = true,
-          pushProbedCells = true)
-      }
-      for ((label, st, f) <- Seq(
-          ("s16-64q-1x", s"$dirBase/1x_store", false),
-          ("s16-64q-10x", s"$dirBase/10x_store", false),
-          ("s17-64q-1x", s"$dirBase/1x_store", true),
-          ("s17-64q-10x", s"$dirBase/10x_store", true))) {
-        smallServe(st, f).write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        smallServe(st, f).write.format("noop").mode("overwrite").save()
-        println(f"[probe] prod vecstore $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        dropPersisted()
-      }
-      // incremental advance: a fixed 20-vector batch against throwaway
-      // copies of the 1× and 10× stores — expect FLAT (O(batch·k) dots
-      // vs broadcast centroids + O(batch) Append deltas)
-      val advBatch = { import spark.implicits._
-        // orderBy before limit: a bare limit is plan-dependent, and the
-        // measured scaladoc's "SAME fixed batch" claim needs the probe
-        // input deterministic across JVMs/partitionings
-        val srcRows = Similarity.labeledVectors(spark, src)
-          .filter(!isNew).orderBy("vec_id").limit(20).collect()
-        srcRows.zipWithIndex.map { case (r, i) =>
-          (900000001L + i, r.getAs[Seq[Long]]("v").toArray,
-            r.getAs[Long]("nrm"), r.getAs[Long]("lbl"))
-        }.toSeq.toDF("vec_id", "v", "nrm", "lbl") }
-      for ((label, st) <- Seq(
-          ("vec-advance-1x", s"$dirBase/1x_store"),
-          ("vec-advance-10x", s"$dirBase/10x_store"))) {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("probe_vecadv").toString
-        deleteDir(scratch); copyDir(st, scratch)
-        val t0 = System.nanoTime()
-        VecStore.advance(spark, advBatch, scratch)
-        println(f"[probe] prod vecstore $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        deleteDir(scratch)
-        dropPersisted()
-      }
-      // recall probe: the run-logged nightly observable that makes the
-      // republish decision measurable — expect near-flat (O(sample·k)
-      // probing + ONE corpus pass against the broadcast sample)
-      for ((label, st) <- Seq(
-          ("vec-recall-1x", s"$dirBase/1x_store"),
-          ("vec-recall-10x", s"$dirBase/10x_store"))) {
-        val t0 = System.nanoTime()
-        val r = VecStore.recallProbe(spark, st, sampleN = 64)
-        println(f"[probe] prod vecstore $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s (recall@3 = $r%.3f)")
-        dropPersisted()
-      }
-      // republish: the retrain path, against throwaway store copies —
-      // expect O(store) HONESTLY (a republish IS a full train + rewrite;
-      // the probe above is what keeps it nightly-rare)
-      for ((label, st) <- Seq(
-          ("vec-republish-1x", s"$dirBase/1x_store"),
-          ("vec-republish-10x", s"$dirBase/10x_store"))) {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("probe_vecrepub").toString
-        deleteDir(scratch); copyDir(st, scratch)
-        val t0 = System.nanoTime()
-        VecStore.republish(spark, scratch)
-        println(f"[probe] prod vecstore $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        deleteDir(scratch)
-        dropPersisted()
-      }
-      // takedown + evidence: erase 20 stored ids, vacuum, verify — the
-      // all-Full rewrite is O(store) by design (the erasure price), the
-      // evidence is column-pruned id scans
-      for ((label, st) <- Seq(
-          ("vec-takedown-1x", s"$dirBase/1x_store"),
-          ("vec-takedown-10x", s"$dirBase/10x_store"))) {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("probe_vectd").toString
-        deleteDir(scratch); copyDir(st, scratch)
-        val doomed = VecStore.loadIndex(spark, scratch).vecs
-          .orderBy("vec_id").limit(20).collect().map(_.getLong(0)).toSeq
-        val t0 = System.nanoTime()
-        VecStore.takedown(spark, doomed, scratch)
-        graft.sources.Snapshots.vacuum(spark, scratch, keep = 1)
-        val ev = VecStore.verifyErasure(spark, doomed, scratch)
-        require(ev.filter(!col("clean")).isEmpty, "vec erasure must audit clean")
-        println(f"[probe] prod vecstore $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s (evidence clean)")
-        deleteDir(scratch)
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // Catalog.upsert scale probe (`runMain graft.ScaleProbe prod:upsert`):
-    // the nightly chunk-table merge must be O(touched partitions), not
-    // O(table) — the survivor scan is partition-pruned to the batch's
-    // touched partitions and the dynamic overwrite rewrites only those.
-    // Build a shard-partitioned table at 1× (64 partitions × 20k rows)
-    // and 10× (640 partitions, same width — a longer history, the way a
-    // chunk warehouse actually grows), upsert the SAME fixed batch
-    // (pure update of 2 partitions), time the second (warm) upsert.
-    // MEASURED (sf-independent synthetic, warm, r15 with the commit
-    // lease): 1× 1.87 s, 10× 1.37 s — FLAT in table size (the 10× run
-    // is faster: both rewrite exactly 2 partitions and the second
-    // table benefits from the warmer JVM; the survivor scan's
-    // partition pruning means the 10× history is never read; the r14
-    // lock-free form measured 1.28/0.92 s — the lease's metadata ops
-    // are the fixed delta). A merge that rewrote or rescanned the
-    // table would be 10×.
-    // Catalog.purgeKeys scale probe (`runMain graft.ScaleProbe
-    // prod:purge`): a takedown request deletes a FIXED key list from a
-    // 1× (64 partitions × 20k rows) and a 10× (640 partitions — a longer
-    // history) table. The rewrite is O(touched partitions) like upsert;
-    // the one table-sized stage is the touched-partition DISCOVERY scan
-    // (keys arrive by entity, not by partition), which reads only the
-    // key + partition columns — a 2-int64 columnar pass. Expect near-
-    // flat: the discovery scan's 10× growth is pennies next to the
-    // fixed 2-partition rewrite. MEASURED (warm, r15 with the commit
-    // lease): 1× 1.97 s, 10× 2.58 s for 10× history (1.31×) — the
-    // discovery scan's linear term and the 10× partition metadata are
-    // visible but sub-linear (r14 lock-free 1.75/2.35 s; r13
-    // OR-of-ANDs 2.42/4.23 s); a purge that rewrote or rescanned the
-    // table at full width would be 10×.
-    // packed-chunk erasure probe (`runMain graft.ScaleProbe
-    // prod:chunks`): Takedown.executeChunks against a 1× (sf0.1, 60k
-    // gated docs) and 10× (600k) pack store + chunk table, same fixed
-    // 20-doc takedown shape both scales — the token-heaviest shard's
-    // tail (trailing chunks must vanish) + the second shard's EARLIEST
-    // docs, which force that shard to rebuild from its head: the
-    // per-shard worst case, so the rewritten-chunk count grows ~10×
-    // with the store (53 → 512). What should scale how: the
-    // geometry/shift joins are request-sized — flat; the trim/upsert
-    // rewrite is O(touched shard suffix); the store REWRITE is the
-    // honest linear term at this flat-directory layout (manifest +
-    // band index + shingle signatures rewrite wholesale; in production
-    // those are partitioned catalog tables and the rewrite is the same
-    // touched-partition dynamic overwrite as the chunk table's).
-    // MEASURED (warm, r14): 1× 6.17 s, 10× 5.73 s — FLAT wall-clock
-    // even with 10× the rewritten chunks and 10× the store tables;
-    // at this scale the per-step fixed costs (9 jobs + run-log writes)
-    // dominate and the linear terms are not yet visible.
-    if (args.contains("prod:chunks")) {
-      import graft.operators.TrainPrep
-      import graft.sources.{Catalog, Takedown}
-      val dirBase = skewCache("prodchunks")
-      if (!new java.io.File(s"$dirBase/10x/documents.parquet").exists()) {
-        val docs = Tables.documents(spark, src)
-        docs.unionByName(docs
-            .withColumn("_c", explode(sequence(lit(1L), lit(9L))))
-            .withColumn("doc_id", col("doc_id") + col("_c") * 10000L + 5000L)
-            .drop("_c"))
-          .write.mode("overwrite").parquet(s"$dirBase/10x/documents.parquet")
-      }
-      val db = "probe_chunks"
-      val loc = java.nio.file.Files.createTempDirectory("probe_chunks").toString
-      Catalog.ensureDatabase(spark, db, Some(loc))
-      val ts = java.sql.Timestamp.valueOf("2026-08-15 12:00:00")
-      for ((label, d) <- Seq("1x" -> src, "10x" -> s"$dirBase/10x")) {
-        val store = java.nio.file.Files
-          .createTempDirectory(s"probe_chunks_store_$label").toString
-        val docsT = s"$db.documents_$label"
-        val chunksT = s"$db.chunks_$label"
-        val runLog = s"$loc/runlog_$label.parquet"
-        val all = Tables.documents(spark, d)
-        Catalog.append(all.withColumn("pt", pmod(col("doc_id"), lit(16L)))
-          .repartition(col("pt")), docsT, Seq("pt"))
-        TrainPrep.materializeStore(spark, d, store)
-        val sman = TrainPrep.storeTable(spark, store, "store_manifest")
-          .localCheckpoint()
-        Catalog.append(TrainPrep.shardChunksOf(
-            sman.select(col("shard"), col("doc_id"), col("start_off"),
-              col("n_tokens")).withColumn("open_start", lit(0L)), all)
-          .repartition(col("shard")), chunksT, Seq("shard"))
-        dropPersisted()
-        // fixed takedown shape: the heaviest shard's last ~10 docs + 10
-        // mid-shard docs of another shard
-        val t0r = TrainPrep.storeTable(spark, store, "store_totals")
-          .orderBy(col("tot0").desc).limit(2).collect()
-        val (s0, tot0) = (t0r(0).getAs[Long]("shard"), t0r(0).getAs[Long]("tot0"))
-        val s1 = t0r(1).getAs[Long]("shard")
-        val sman2 = TrainPrep.storeTable(spark, store, "store_manifest")
-        val tail0 = sman2.filter(col("shard") === s0)
-          .orderBy(col("start_off").desc).limit(10)
-          .select("doc_id").collect().map(_.getLong(0)).toSeq
-        val mid1 = sman2.filter(col("shard") === s1).orderBy("start_off")
-          .limit(10).select("doc_id").collect().map(_.getLong(0)).toSeq
-        val doomed = tail0 ++ mid1
-        Catalog.purgeKeys(spark, docsT,
-          { import spark.implicits._; doomed.toDF("doc_id") }, Seq("pt"))
-        dropPersisted()
-        val t0 = System.nanoTime()
-        val r = Takedown.executeChunks(spark, doomed, docsT, store,
-          chunksT, runLog, ts)
-        println(f"[probe] prod chunks $label%-4s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-          s"manifestPurged=${r.manifestRowsPurged} shards=${r.shardsTouched} " +
-          s"rewritten=${r.chunksRewritten} deleted=${r.chunksDeleted}")
-        dropPersisted()
-        // the compliance evidence table a regulator actually sees —
-        // measured, not asserted: five layers (documents + manifest/
-        // bands/shingles by id + the structural test_shingles
-        // derivation), each a narrow-column scan
-        val tv = System.nanoTime()
-        val ver = Takedown.verifyErasure(spark, doomed,
-          docsTable = Some(docsT), storeDir = Some(store)).collect()
-        require(ver.forall(_.getAs[Boolean]("clean")),
-          s"verifyErasure found residue: ${ver.mkString(",")}")
-        println(f"[probe] prod chunks $label%-4s verifyErasure ${(System.nanoTime() - tv) / 1e9}%6.2f s (${ver.length} layers clean)")
-        dropPersisted()
-        // RETENTION COMPLETION at scale (r16): a post-takedown nightly
-        // advance layers over the takedown's chain cut, then
-        // completeErasure(keep=1) compacts the pinning chain, vacuums
-        // every pre-takedown version, and re-audits with the
-        // per-retained-version evidence layers ON — the timed number
-        // is the whole compact+vacuum+audit loop, whose compact term
-        // is the one store-sized rewrite (the price of the chain cut)
-        TrainPrep.advanceStore(spark, d, store)
-        dropPersisted()
-        val tc = System.nanoTime()
-        val c = Takedown.completeErasure(spark, doomed,
-          docsTable = Some(docsT), storeDir = Some(store), keep = 1,
-          runLogPath = runLog, runTs = ts)
-        val evRows = c.evidence.collect()
-        require(c.complete,
-          s"completeErasure left residue: ${evRows.filterNot(_.getAs[Boolean]("clean")).mkString(",")}")
-        println(f"[probe] prod chunks $label%-4s completeErasure ${(System.nanoTime() - tc) / 1e9}%6.2f s  " +
-          s"(compacted=${c.store.get.compactedTo.nonEmpty} " +
-          s"vacuumed=${c.store.get.vacuumed.size} layers=${evRows.length} all clean)")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    if (args.contains("prod:purge")) {
-      import graft.sources.Catalog
-      val db = "probe_purge"
-      val loc = java.nio.file.Files.createTempDirectory("probe_purge").toString
-      Catalog.ensureDatabase(spark, db, Some(loc))
-      for ((label, parts) <- Seq(("1x", 64L), ("10x", 640L))) {
-        val t = s"$db.t_$label"
-        val base = spark.range(parts * 20000L).select(
-          (col("id") % parts).as("p"), col("id").as("k"),
-          (col("id") * 7L).as("v"))
-        Catalog.append(base.repartition(col("p")), t, Seq("p"))
-        // fixed takedown list both scales: 500 keys inside partitions 0/1
-        def doomed = spark.range(500L)
-          .select((col("id") * parts + (col("id") % 2L)).as("k"))
-        // warm-up purge on a disjoint list (partitions 2/3) so the timed
-        // run measures a steady-state JVM, not codegen compilation
-        Catalog.purgeKeys(spark, t,
-          spark.range(10L).select((col("id") * parts + 2L).as("k")), Seq("p"))
-        val t0 = System.nanoTime()
-        val n = Catalog.purgeKeys(spark, t, doomed, Seq("p"))
-        println(f"[probe] purge $label%-4s (${parts} parts) ${(System.nanoTime() - t0) / 1e9}%6.2f s  deleted=$n")
-        require(n == 500L, s"expected 500 deleted, got $n")
-        require(spark.table(t).count() == parts * 20000L - 510L)
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    if (args.contains("prod:upsert")) {
-      import graft.sources.Catalog
-      val db = "probe_upsert"
-      val loc = java.nio.file.Files.createTempDirectory("probe_upsert").toString
-      Catalog.ensureDatabase(spark, db, Some(loc))
-      for ((label, parts) <- Seq(("1x", 64L), ("10x", 640L))) {
-        val t = s"$db.t_$label"
-        val base = spark.range(parts * 20000L).select(
-          (col("id") % parts).as("p"), col("id").as("k"),
-          (col("id") * 7L).as("v"))
-        Catalog.append(base.repartition(col("p")), t, Seq("p"))
-        // fixed batch both scales: every key of partitions 0 and 1,
-        // updated values — the open-chunk-rewrite shape
-        def batch = base.filter(col("p") < 2L)
-          .withColumn("v", col("v") + 1L)
-        Catalog.upsert(spark, batch, t, keys = Seq("p", "k"),
-          partitionBy = Seq("p")) // warm-up (also proves idempotent shape)
-        val t0 = System.nanoTime()
-        Catalog.upsert(spark, batch, t, keys = Seq("p", "k"),
-          partitionBy = Seq("p"))
-        println(f"[probe] upsert $label%-4s (${parts} parts) ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        // pure update: row count unchanged, touched values moved
-        require(spark.table(t).count() == parts * 20000L, "row count drifted")
-        require(spark.table(t).filter(col("p") === 0L && col("v") % 7L =!= 1L)
-          .isEmpty, "partition 0 not updated")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // sim14 recall/cost sweep (`runMain graft.ScaleProbe recall:sim14`),
-    // the r11 verdict's headroom ask: trained recall@3 was 0.643 vs
-    // sim9's IVF-only 0.650 with the floor at 0.60 — thin margin. Sweep
-    // the two PQ knobs (Lloyd rounds × rerank pool) against the exact
-    // batch-vs-index top-3 at sf0.01 and keep the knee. Results feed
-    // the sim14 scaladoc table and Sim14RecallSpec's floor.
-    if (args.contains("recall:sim14")) {
-      val d = "/root/testdata/sf0.01"
-      val dot = graft.functions.VectorFunctions.dotLong _
-      val e = graft.operators.Similarity.scaledVectors(spark, d).localCheckpoint()
-      val q = e.filter(col("vec_id") % 5 === 0)
-        .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-      val c = e.filter(col("vec_id") % 5 =!= 0)
-        .select(col("vec_id").as("nbr"), col("v").as("vb"), col("nrm").as("nb"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("cos").desc, col("nbr"))
-      val exact = q.crossJoin(c)
-        .withColumn("dot", dot(col("va"), col("vb")))
-        .withColumn("cos", col("dot").cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select("qid", "nbr")
-      // truth set on the driver (300 pairs at sf0.01) — dropPersisted
-      // between variants would evict a checkpointed truth frame
-      val truth = exact.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      dropPersisted()
-      val nTruth = truth.size
-      for (iters <- Seq(2, 4); pool <- Seq(50, 100)) {
-        def run(): DataFrame = graft.operators.Similarity
-          .sim14Variant(spark, d, iters, pool).select("qid", "nbr")
-        run().write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        run().write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val hit = run().collect()
-          .count(r => truth((r.getLong(0), r.getLong(1))))
-        println(f"[probe] sim14 iters=$iters pool=$pool%-4d recall@3 ${hit.toDouble / nTruth}%.3f ($hit/$nTruth)  $dt%5.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // sim16 residual-vs-raw PQ sweep (`runMain graft.ScaleProbe
-    // recall:sim16`): residual encoding's value shows where the COARSE
-    // ADC ranking is load-bearing — at a small rerank pool. Measure
-    // raw-PQ (sim14's encoder) vs residual-PQ at pool ∈ {10, 100},
-    // iters=2, against the exact batch-vs-index top-3 at sf0.01.
-    // Results feed the sim16 scaladoc table and Sim16ResidualSpec.
-    if (args.contains("recall:sim16")) {
-      val d = "/root/testdata/sf0.01"
-      val dot = graft.functions.VectorFunctions.dotLong _
-      val e = graft.operators.Similarity.scaledVectors(spark, d).localCheckpoint()
-      val q = e.filter(col("vec_id") % 5 === 0)
-        .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-      val c = e.filter(col("vec_id") % 5 =!= 0)
-        .select(col("vec_id").as("nbr"), col("v").as("vb"), col("nrm").as("nb"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("cos").desc, col("nbr"))
-      val exact = q.crossJoin(c)
-        .withColumn("dot", dot(col("va"), col("vb")))
-        .withColumn("cos", col("dot").cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select("qid", "nbr")
-      val truth = exact.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      dropPersisted()
-      val nTruth = truth.size
-      for (ci <- Seq(0, 2); res <- Seq(false, true); pool <- Seq(10, 100)) {
-        def run(): DataFrame = graft.operators.Similarity
-          .ivfpqVariant(spark, d, 2, pool, res, ci).select("qid", "nbr")
-        run().write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        run().write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val hit = run().collect()
-          .count(r => truth((r.getLong(0), r.getLong(1))))
-        val tag = (if (ci > 0) "trained  " else "untrained") +
-          (if (res) " residual" else " raw     ")
-        println(f"[probe] sim16 $tag pool=$pool%-4d recall@3 ${hit.toDouble / nTruth}%.3f ($hit/$nTruth)  $dt%5.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // sample-thinned BPE trainer probe (`runMain graft.ScaleProbe
-    // sample:bpe`): t11's k=6 count→argmax→rewrite rounds are O(k·corpus)
-    // — the slowest text family in the r13 bench. The production knob is
-    // bpeTrainSampled: train the merge table on a 1-in-rate md5 sample,
-    // encode the full corpus with the fixed table (no counting). This
-    // measures, on the 10× documents corpus: full-corpus training vs
-    // rate=10 sampled training (cost + merge-table agreement — frequency
-    // ARGMAX should be sample-stable even though the counts shrink), and
-    // the fixed-table encode over the full corpus.
-    if (args.contains("sample:bpe")) {
-      def time[T](label: String)(body: => T): T = {
-        val t0 = System.nanoTime(); val v = body
-        println(f"[probe] sample:bpe $label%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        v
-      }
-      val full = time("train-full-10x") {
-        graft.operators.TextOps.bpeTrainSampled(spark, out, 1L)
-      }
-      dropPersisted()
-      println(s"[probe] sample:bpe full    = $full")
-      var last: Seq[(Long, String, String, Long)] = full
-      for (rate <- Seq(2L, 10L)) {
-        val sampled = time(s"train-rate$rate-10x") {
-          graft.operators.TextOps.bpeTrainSampled(spark, out, rate)
-        }
-        dropPersisted()
-        val agree = full.map(m => (m._2, m._3))
-          .zip(sampled.map(m => (m._2, m._3))).count { case (a, b) => a == b }
-        println(s"[probe] sample:bpe rate=$rate merge agreement $agree/${full.size}")
-        println(s"[probe] sample:bpe rate=$rate = $sampled")
-        last = sampled
-      }
-      time("encode-fixed-10x") {
-        graft.operators.TextOps.bpeEncodeWithMerges(spark, out, last.map(m => (m._2, m._3)))
-          .write.format("noop").mode("overwrite").save()
-      }
-      dropPersisted()
-      spark.stop()
-      return
-    }
-    // single-pass BPE encode probe (`runMain graft.ScaleProbe
-    // bpe:encode`): the r14 audit's one remaining O(k·corpus)
-    // serving-side term was bpeEncodeWithMerges' k-round corpus replay
-    // (each round a doc_id window exchange + sort over the full corpus).
-    // The r15 native expression applies the whole merge table per
-    // document in one map-only codegen'd pass, so encode cost must be
-    // INDEPENDENT of k. Train k=12 merges on the sf0.1 corpus, then time
-    // the old window replay vs the expression at k=6 and k=12 — the
-    // replay should roughly double, the expression should be flat — with
-    // full-sequence parity asserted in-run at both k. MEASURED (sf0.1,
-    // warm, r15): window replay 3.34 s (k=6) → 6.00 s (k=12), ~1.8×;
-    // expression 0.12 s at BOTH k — flat, and ~28×/~50× under the
-    // replay it replaced.
-    if (args.contains("bpe:encode")) {
-      import graft.operators.TextOps
-      val docs = Tables.documents(spark, src)
-      val merges12 = TextOps.bpeLoopOf(docs, 12)._1.map(m => (m._2, m._3))
-      require(merges12.size == 12, s"trained only ${merges12.size}/12 merges")
-      dropPersisted()
-      for (k <- Seq(6, 12)) {
-        val merges = merges12.take(k)
-        def exprDf(): DataFrame = docs.select(col("doc_id"), posexplode(
-            graft.functions.VectorFunctions.bpeEncode(
-              split(col("text"), " "), merges)))
-          .select(col("doc_id"), col("pos").cast("long").as("pos"),
-            col("col").as("tok"))
-        // parity: full (doc_id, pos, tok) sequences, both directions
-        val win = TextOps.bpeReplayWindowed(docs, merges).localCheckpoint()
-        val ex = exprDf().localCheckpoint()
-        require(ex.exceptAll(win).isEmpty && win.exceptAll(ex).isEmpty,
-          s"k=$k: expression encode diverged from the window replay")
-        println(s"[probe] bpe:encode k=$k parity OK (${win.count()} tokens)")
-        dropPersisted()
-        for ((label, run) <- Seq[(String, () => DataFrame)](
-            "window-replay" -> (() => TextOps.bpeReplayWindowed(docs, merges)),
-            "expression   " -> (() => exprDf()))) {
-          run().write.format("noop").mode("overwrite").save()
-          dropPersisted()
-          val t0 = System.nanoTime()
-          run().write.format("noop").mode("overwrite").save()
-          println(f"[probe] bpe:encode k=$k%-3d $label ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-          dropPersisted()
-        }
-      }
-      spark.stop()
-      return
-    }
-    // adversarial t17 hub-word probe (`runMain graft.ScaleProbe
-    // skew:t17`): one ultra-hot word interleaved at every other position
-    // of every doc — the co-occurrence graph gets a hub node whose
-    // degree is ~n·windowSize where a normal word's is ~4. The plan's
-    // claim: the edge build is (doc_id, i)-equi joins (1:1, no skew) and
-    // pairs.distinct() + the per-round contrib aggregation are map-side-
-    // combined on the hub key, so the hub costs one hot-but-combinable
-    // key, not a quadratic. uniform twin: all-unique words, same shape.
-    if (args.contains("skew:t17")) {
-      val skewDir = skewCache("skewt17")
-      def corpus(hot: Boolean, path: String): Unit = {
-        if (!new java.io.File(s"$path/documents.parquet").exists()) {
-          // 24 words/doc; hot: even positions are THE hub word, odd
-          // positions unique per (doc, position)
-          val w = (j: String) =>
-            if (hot) s"CASE WHEN $j % 2 = 0 THEN 'hubhubhub' ELSE concat('w', CAST(id * 53 + $j AS STRING)) END"
-            else s"concat('w', CAST(id * 53 + $j AS STRING))"
-          spark.range(50000).selectExpr("id AS doc_id",
-            s"array_join(transform(sequence(0, 23), j -> ${w("j")}), ' ') AS text")
-            .write.mode("overwrite").parquet(s"$path/documents.parquet")
-        }
-      }
-      corpus(hot = true, s"$skewDir/hot")
-      corpus(hot = false, s"$skewDir/uni")
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-hub" -> s"$skewDir/hot")) {
-        SparkEntry.queries("t17_textrank_keywords")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        SparkEntry.queries("t17_textrank_keywords")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        println(f"[probe] skew t17 $label%-8s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial dd16 one-cluster probe (`runMain graft.ScaleProbe
-    // skew:dd16`): every embedding in one tight cosine blob, so k-means
-    // puts the whole corpus in ONE cluster and the within-cluster verify
-    // degenerates toward dd5's C(n,2) brute force — the known SemDeDup
-    // failure mode (the fix at scale is k ~ √N, shrinking per-cluster
-    // mass; this measures what the fixed-k=8 gate build does when the
-    // data defeats the clustering). uniform twin: same N spread across
-    // directions so clusters stay balanced.
-    if (args.contains("skew:dd16")) {
-      val skewDir = skewCache("skewdd16")
-      val n = 10000L
-      def corpus(hot: Boolean, path: String): Unit = {
-        if (!new java.io.File(s"$path/embeddings.parquet").exists()) {
-          // hot: base direction (1,1,...,1) + per-vector epsilon in one
-          // dim -> pairwise cosine ~1 (every pair verifies, one cluster).
-          // uniform: dominant dim rotates -> 64 well-separated groups.
-          val vec =
-            if (hot)
-              "transform(sequence(0, 63), j -> CAST(1.0 + CASE WHEN j = CAST(id % 64 AS INT) THEN CAST(id AS DOUBLE) * 1e-7 ELSE 0.0 END AS FLOAT))"
-            else
-              "transform(sequence(0, 63), j -> CAST(CASE WHEN j = CAST(id % 64 AS INT) THEN 10.0 ELSE CAST((id * 7 + j) % 5 AS DOUBLE) * 0.1 END AS FLOAT))"
-          spark.range(n).selectExpr("id AS vec_id", s"$vec AS embedding")
-            .write.mode("overwrite").parquet(s"$path/embeddings.parquet")
-        }
-      }
-      corpus(hot = true, s"$skewDir/hot")
-      corpus(hot = false, s"$skewDir/uni")
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-1blob" -> s"$skewDir/hot")) {
-        SparkEntry.queries("dd16_semantic_dedup")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        SparkEntry.queries("dd16_semantic_dedup")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        println(f"[probe] skew dd16 $label%-9s n=$n ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial one-cell IVFPQ probe (`runMain graft.ScaleProbe
-    // skew:sim14`): sim14's per-query ADC scan touches the codes of the
-    // nprobe probed cells — its cost model assumes the IVF assignment
-    // spreads the corpus across k ≈ √N cells (scan ≈ nprobe·√N codes
-    // per query). A corpus that DEFEATS the clustering (one tight blob
-    // → every vector assigns to one cell, the skew:dd16 construction)
-    // concentrates the whole corpus in every query's probe set: scan
-    // rows go from Q·nprobe·√N to Q·N — the quadratic the cell
-    // restriction normally avoids. Measures both; the production
-    // remedies if it blows up are nprobe-aware cell re-splitting or a
-    // per-cell scan cap (recall-lossy — not wired unless needed).
-    if (args.contains("skew:sim14")) {
-      val skewDir = skewCache("skewsim14")
-      val n = 30000L // corpus 24000 > pqTrainBudget => the SAMPLED trainer runs live (rate 2)
-      skewSimCorpus(spark, s"$skewDir/hot", hot = true, n)
-      skewSimCorpus(spark, s"$skewDir/uni", hot = false, n)
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-1cell" -> s"$skewDir/hot")) {
-        SparkEntry.queries("sim14_ann_ivfpq")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries("sim14_ann_ivfpq")(spark, dir).count()
-        println(f"[probe] skew sim14 $label%-9s n=$n rows=$rows%5d ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial sim16 twin (`runMain graft.ScaleProbe skew:sim16`):
-    // same one-blob corpus, but sim16's coarse quantizer is TRAINED —
-    // Lloyd on a single tight blob collapses the k=155 rank-init
-    // centroids toward the blob mean, empty cells drop out, and the
-    // survivors' L2 assignment decides how much of the corpus every
-    // query's probe set scans. Measures whether training WORSENS the
-    // degeneracy (fewer surviving cells than the untrained lowest-ids
-    // convention) or absorbs it like sim14 did; also exercises the
-    // md5-sampled trainers (corpus 24000 > budget) on both paths.
-    if (args.contains("skew:sim16")) {
-      val skewDir = skewCache("skewsim14") // same corpora as skew:sim14
-      val n = 30000L
-      skewSimCorpus(spark, s"$skewDir/hot", hot = true, n)
-      skewSimCorpus(spark, s"$skewDir/uni", hot = false, n)
-      for ((label, dir) <- Seq("uniform" -> s"$skewDir/uni", "hot-1cell" -> s"$skewDir/hot")) {
-        SparkEntry.queries("sim16_residual_pq")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries("sim16_residual_pq")(spark, dir).count()
-        println(f"[probe] skew sim16 $label%-9s n=$n rows=$rows%5d ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial sim17 probe (`runMain graft.ScaleProbe skew:sim17`):
-    // sim14/sim16's one-blob degeneracy COMPOSED with the label
-    // dimension sim17 adds — one tight blob (every vector assigns to one
-    // trained cell) plus a STARVED label (1-in-300 vectors carry label
-    // 1). For a starved-label query the selectivity widening saturates
-    // nprobe_eff to ALL k cells, so the filtered search degenerates to
-    // an exact scan of that label's codes — which is exactly why it
-    // stays CHEAP: the (cell, lbl) co-key join bounds the ADC at the
-    // label's corpus count (~N/300), so "probe everything" costs
-    // O(starved label), not O(N). The common-label side pays the known
-    // one-cell quadratic (skew:sim14's finding, label-pruned). Pins:
-    // starved-label output bit-equal to exact filtered brute force at
-    // BOTH scales (the starved candidate pool sits under the rerank
-    // pool, so approximation can't leak into the result), wall time
-    // measured at 1× and 10×.
-    if (args.contains("skew:sim17")) {
-      val skewDir = skewCache("skewsim17")
-      // 50 label-1 rows per side at 10× — under the rerank pool, so
-      // the widened path must reproduce exact filtered brute force
-      for ((label, n) <- Seq("1x" -> 3000L, "10x" -> 30000L)) {
-        val dir = s"$skewDir/$label"
-        skewSim17Corpus(spark, dir, n)
-        def run(): DataFrame =
-          SparkEntry.queries("sim17_filtered_residual")(spark, dir)
-        run().write.format("noop").mode("overwrite").save() // warm
-        dropPersisted()
-        val t0 = System.nanoTime()
-        val rows = run().count()
-        println(f"[probe] skew sim17 $label%-4s n=$n rows=$rows%5d ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        dropPersisted()
-        // starved-label parity vs exact filtered brute force
-        val lab = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("label").cast("long").as("lbl"))
-        val e = graft.operators.Similarity.scaledVectors(spark, dir)
-          .join(lab, "vec_id").filter(col("lbl") === 1L).localCheckpoint()
-        val q = e.filter(col("vec_id") % 5 === 0)
-          .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-        val c = e.filter(col("vec_id") % 5 =!= 0)
-          .select(col("vec_id").as("nbr"), col("v").as("vb"), col("nrm").as("nb"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("cos").desc, col("nbr"))
-        val want = q.crossJoin(c)
-          .withColumn("dot", graft.functions.VectorFunctions.dotLong(col("va"), col("vb")))
-          .withColumn("cos", col("dot").cast("double") /
-            (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .select(col("qid"), col("rnk"), col("nbr"),
-            floor(col("cos") * 1000000).cast("long").as("cos_e6"),
-            lit(1L).as("label"))
-          .collect().map(_.toSeq).toSet
-        val got = run().filter(col("label") === 1L)
-          .select("qid", "rnk", "nbr", "cos_e6", "label")
-          .collect().map(_.toSeq).toSet
-        require(got == want,
-          s"sim17 starved-label output diverged from filtered brute force at $label")
-        println(s"[probe] skew sim17 $label starved-label parity OK (${want.size} rows)")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial PUBLISHED-vector-store probe (`runMain graft.ScaleProbe
-    // skew:vecstore`): skew:sim17's one-blob + starved-label corpus
-    // served FROM the committed store. The degenerate Lloyd collapse now
-    // happens ONCE at publish (the build pays it, honestly timed) while
-    // every query serves from the pinned artifacts; the probed-cell
-    // literal pushdown is exercised at its WORST (the widened starved
-    // probe saturates to all surviving cells, so the IN list covers
-    // ~the whole blob's cells — pruning buys nothing and must cost
-    // nothing). Pins: store-served output bit-equal to the in-plan
-    // sim17 on the same corpus at both scales. MEASURED (warm, r18,
-    // on v3-rebuilt stores — (cell,vec_id)-sorted vec_vecs, probed-
-    // cell literals in BOTH scans, eager shared-probe serve): publish
-    // 13.3/20.7 s at 1×/10× (the collapsed-blob Lloyd paid once),
-    // serve 4.13 s at 1× and 7.32 s at 10× — vs the in-plan
-    // skew:sim17's 9.0/37.6 s: the retrain term is gone and the
-    // residual growth is the known label-bounded one-cell ADC scan,
-    // with the saturated-probe pushdown costing nothing.
-    if (args.contains("skew:vecstore")) {
-      import graft.operators.VecStore
-      val skewDir = skewCache("skewsim17") // same corpora as skew:sim17
-      for ((label, n) <- Seq("1x" -> 3000L, "10x" -> 30000L)) {
-        val dir = s"$skewDir/$label"
-        skewSim17Corpus(spark, dir, n)
-        val root = s"$skewDir/${label}_store"
-        if (graft.sources.Snapshots.latestVersion(spark, root).isEmpty) {
-          val t0 = System.nanoTime()
-          VecStore.publish(spark, dir, root)
-          println(f"[probe] skew vecstore $label%-4s publish (degenerate train, once) ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-          dropPersisted()
-        }
-        // parity: the store serve reproduces the in-plan twin on the
-        // degenerate corpus, bit-for-bit
-        val want = SparkEntry.queries("sim17_filtered_residual")(spark, dir)
-          .collect().map(_.toSeq).toSeq
-        dropPersisted()
-        val got = VecStore.sim17FromStore(spark, dir, root)
-          .collect().map(_.toSeq).toSeq
-        require(got == want,
-          s"vecstore serve diverged from in-plan sim17 on the skew corpus at $label")
-        println(s"[probe] skew vecstore $label parity OK (${want.size} rows)")
-        dropPersisted()
-        def run(): DataFrame = VecStore.sim17FromStore(spark, dir, root)
-        run().write.format("noop").mode("overwrite").save() // warm
-        dropPersisted()
-        val t0 = System.nanoTime()
-        val rows = run().count()
-        println(f"[probe] skew vecstore $label%-4s n=$n rows=$rows%5d fromstore ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial incremental-prep probe (`runMain graft.ScaleProbe
-    // skew:pipe3`): pipe3's fuzzy gate joins batch×store band rows.
-    // Round 11 wired dd9's bucket cap in front (store-side buckets
-    // > pipe3MaxStoreBucket are skipped), so the fan-out is bounded at
-    // O(batch · bands · cap) even when the store violates the "prior
-    // prep output" contract. Three corpora measure the contract and
-    // the guard:
-    //   uniform   — all-distinct texts (baseline; ~zero candidates);
-    //   hot-batch — the whole batch is near-copies of ONE stored doc:
-    //               candidates = batch×1, the gate drops the batch at
-    //               O(batch) cost (the contract holding under the worst
-    //               CLEAN-store input);
-    //   hot-store — the store itself is near-copies of the same text:
-    //               the B×S quadratic a dirty store used to buy
-    //               (17.89 s unguarded); the cap drops the
-    //               non-discriminating buckets and the case now runs
-    //               BELOW baseline (2.32 s) with the accepted set
-    //               unchanged (stage 4 decontamination still kills the
-    //               skew batch).
-    if (args.contains("skew:pipe3")) {
-      val skewDir = skewCache("skewpipe3")
-      val n = 10000L
-      // 40 distinct all-alpha words (digits would fail the quality
-      // gate's alpha-ratio test)
-      val base = (1 to 40)
-        .map(i => s"w${('a' + (i / 26) % 26).toChar}${('a' + i % 26).toChar}")
-        .mkString(" ")
-      val alnum = "translate(CAST(%s AS STRING), '0123456789', 'abcdefghij')"
-      val uniWord = "concat('u', " + alnum.format("id * 40 + j") + ")"
-      val uniText =
-        s"concat_ws(' ', transform(sequence(0, 39), j -> $uniWord))"
-      val varText = s"concat('$base v', ${alnum.format("id")})"
-      def corpus(kind: String): String = {
-        val path = s"$skewDir/$kind"
-        if (!new java.io.File(s"$path/documents.parquet").exists()) {
-          val text = kind match {
-            case "uniform" => uniText
-            case "hot-batch" =>
-              s"CASE WHEN id % 7 = 3 OR id = 1 THEN $varText ELSE $uniText END"
-            case _ => varText // hot-store: every doc a near-copy
-          }
-          spark.range(n)
-            .selectExpr("id AS doc_id", s"$text AS text",
-              "'en' AS lang", "'web' AS source")
-            .selectExpr("doc_id", "text", "lang", "source",
-              "CAST(length(text) AS BIGINT) AS n_chars")
-            .write.mode("overwrite").parquet(s"$path/documents.parquet")
-        }
-        path
-      }
-      for (kind <- Seq("uniform", "hot-batch", "hot-store")) {
-        val dir = corpus(kind)
-        SparkEntry.queries("pipe3_incremental_prep")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        SparkEntry.queries("pipe3_incremental_prep")(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val accepted =
-          SparkEntry.queries("pipe3_incremental_prep")(spark, dir).count()
-        println(f"[probe] skew pipe3 $kind%-9s n=$n accepted=$accepted%5d $dt%7.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // adversarial exact-percentile probe (`runMain graft.ScaleProbe
-    // skew:q55`): the round-9 verdict's named risk — Spark's `percentile`
-    // is a TypedImperativeAggregate that buffers a (value -> count) map
-    // PER GROUP, so one giant group with all-distinct values is a
-    // per-group O(n) heap no partitioning can split (the q29/q55 memory
-    // caveat). Corpus: 20M rows of bit-mixed (≈all-distinct) values,
-    // once as ONE group and once spread over 1009 groups. Three exact/
-    // approx formulations race on each:
-    //   exact-imperative — q29/q55's `percentile` (the buffering one);
-    //   sketch          — q32's `approx_percentile` (constant-size G-K
-    //                     summary, mergeable; THE 100 TB path);
-    //   exact-windowsort — interpolated percentile recomputed from a
-    //                     row_number window over a per-group sort: one
-    //                     task per group but a SPILLING external sort,
-    //                     so it degrades to disk where the imperative
-    //                     buffer degrades to OOM — the exact-path
-    //                     fallback when the answer must be exact.
-    // The two exact variants cross-check (their p50+p90 checksums must
-    // agree) so the fallback is pinned to the shipped semantics.
-    if (args.contains("skew:q55")) {
-      val skewDir = skewCache("skewq55")
-      val rows = 20000000L
-      for ((label, groups) <- Seq("uniform-1009g" -> 1009L, "hot-1group" -> 1L)) {
-        val path = s"$skewDir/${label.takeWhile(_ != '-')}"
-        if (!new java.io.File(path).exists()) {
-          spark.range(rows).select(
-              concat(lit("g"), col("id") % groups).as("g"),
-              // xxhash64 bit-mix: values ≈ all distinct, arrival order
-              // uncorrelated with value order (no presorted luck)
-              pmod(xxhash64(col("id")), lit(1000000007L)).as("v"))
-            .write.mode("overwrite").parquet(path)
-        }
-        val t = spark.read.parquet(path)
-        def exactImperative() = t.groupBy("g").agg(
-          percentile(col("v"), lit(0.5)).as("p50"),
-          percentile(col("v"), lit(0.9)).as("p90"))
-        def sketch() = t.groupBy("g").agg(
-          approx_percentile(col("v"), lit(0.5), lit(1000)).cast("double").as("p50"),
-          approx_percentile(col("v"), lit(0.9), lit(1000)).cast("double").as("p90"))
-        def windowSort() = {
-          import org.apache.spark.sql.expressions.Window
-          val rn = row_number().over(Window.partitionBy("g").orderBy("v"))
-          val ranked = t.withColumn("rn", rn)
-            .join(broadcast(t.groupBy("g").agg(count(lit(1)).as("n"))), "g")
-          // rank targets are row-level exprs (n is constant per group);
-          // the agg picks out the two bracketing order statistics per p
-          def r(p: Double) = (col("n") - 1L).cast("double") * p
-          def sel(p: Double, tag: String) = Seq(
-            max(when(col("rn") === floor(r(p)).cast("long") + 1L, col("v")))
-              .as(s"lo_$tag"),
-            max(when(col("rn") === ceil(r(p)).cast("long") + 1L, col("v")))
-              .as(s"hi_$tag"))
-          def interp(tag: String, p: Double) = {
-            val rr = (col("n") - 1L).cast("double") * p
-            val frac = rr - floor(rr)
-            col(s"lo_$tag").cast("double") + frac *
-              (coalesce(col(s"hi_$tag"), col(s"lo_$tag")) - col(s"lo_$tag"))
-                .cast("double")
-          }
-          val exprs = sel(0.5, "50") ++ sel(0.9, "90")
-          ranked.groupBy("g")
-            .agg(max(col("n")).as("n"), exprs: _*)
-            .select(col("g"), interp("50", 0.5).as("p50"), interp("90", 0.9).as("p90"))
-        }
-        val variants = Seq[(String, () => DataFrame)](
-          "exact-imperative" -> (() => exactImperative()),
-          "sketch-gk1000" -> (() => sketch()),
-          "exact-windowsort" -> (() => windowSort()))
-        val sums = scala.collection.mutable.Map.empty[String, Double]
-        for ((vlabel, mk) <- variants) {
-          try {
-            mk().write.format("noop").mode("overwrite").save() // warm
-            dropPersisted()
-            val t0 = System.nanoTime()
-            mk().write.format("noop").mode("overwrite").save()
-            val dt = (System.nanoTime() - t0) / 1e9
-            val chk = mk().agg(sum((col("p50") + col("p90")).cast("double")))
-              .collect()(0).getDouble(0)
-            sums(vlabel) = chk
-            println(f"[probe] skew q55 $label%-14s $vlabel%-17s $dt%7.2f s  checksum=$chk%.3f")
-          } catch { case e: Throwable =>
-            println(s"[probe] skew q55 $label $vlabel FAILED: " +
-              s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(160)}")
-          } finally dropPersisted()
-        }
-        for (a <- sums.get("exact-imperative"); b <- sums.get("exact-windowsort"))
-          println(s"[probe] skew q55 $label exact variants agree: ${a == b}")
-      }
-      spark.stop()
-      return
-    }
-    // comparison twin for the custom top-k aggregate: the row_number
-    // window formulation of q10 (`runMain graft.ScaleProbe q10_window`)
-    if (args.contains("q10_window")) {
-      for (sf <- Seq(src, out)) {
-        graft.operators.Relational.q10WindowTwin(spark, sf)
-          .write.format("noop").mode("overwrite").save()
-        val t0 = System.nanoTime()
-        graft.operators.Relational.q10WindowTwin(spark, sf)
-          .write.format("noop").mode("overwrite").save()
-        println(f"[probe] ${if (sf == src) "1x " else "10x"} q10_window_twin        ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      spark.stop()
-      return
-    }
-    // streaming throughput probe (`runMain graft.ScaleProbe stream`):
-    // drives the stateful streaming operators through MemoryStream
-    // micro-batches at 1× and 10× batch volume and reports per-batch
-    // latency plus state size from StreamingQueryProgress — the
-    // streaming analogue of the batch 10× probe. Duplicate pressure:
-    // every 5th doc replays an earlier doc's text, so the near-dup gate
-    // exercises both admit and drop paths; click/purchase streams join
-    // 10:1 within the 30-minute attribution window.
-    if (args.contains("stream")) {
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import graft.streaming.Streams
-
-      def word(seed: Long, j: Int) = s"w${seed * 31 + j}"
-      def text(seed: Long) = (0 until 24).map(word(seed, _)).mkString(" ")
-      val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-
-      for (scale <- Seq(1, 10)) {
-        val perBatch = 5000 * scale
-        val stream = MemoryStream[Streams.DocIn]
-        val q = Streams.streamingNearDup(stream.toDS())
-          .writeStream.format("noop").outputMode("append").start()
-        var docId = 0L
-        val times = (0 until 5).map { _ =>
-          val docs = (0 until perBatch).map { i =>
-            val id = docId + i
-            val seed = if (id % 5 == 0) id / 50 * 50 else id // dup pressure
-            Streams.DocIn(id, text(seed),
-              new java.sql.Timestamp(base + id * 10L))
-          }
-          docId += perBatch
-          val t0 = System.nanoTime()
-          stream.addData(docs)
-          q.processAllAvailable()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val so = q.lastProgress.stateOperators(0)
-        println(f"[probe] stream neardup ${scale}%2dx: ${perBatch} docs/batch, " +
-          f"median batch ${times.sorted.apply(2)}%5.2f s " +
-          f"(${perBatch / times.sorted.apply(2)}%8.0f docs/s), " +
-          f"state ${so.numRowsTotal} rows / ${so.memoryUsedBytes / 1024} KiB")
-        q.stop()
-      }
-
-      for (scale <- Seq(1, 10)) {
-        val perBatch = 5000 * scale
-        val clicks = MemoryStream[Streams.ClickEv]
-        val purchases = MemoryStream[Streams.ClickEv]
-        val q = Streams.streamClickAttribution(clicks.toDF(), purchases.toDF())
-          .writeStream.format("noop").outputMode("append").start()
-        var eid = 0L
-        val times = (0 until 5).map { b =>
-          val t00 = base + b * 600000L // batches 10 min apart in event time
-          val cs = (0 until perBatch).map { i =>
-            Streams.ClickEv(new java.sql.Timestamp(t00 + (i % 600) * 1000L),
-              (i % 1000).toLong, eid + i)
-          }
-          val ps = (0 until perBatch / 10).map { i => // 10:1 purchase rate
-            Streams.ClickEv(
-              new java.sql.Timestamp(t00 + (i % 600) * 1000L + 60000L),
-              (i % 1000).toLong, eid + perBatch + i)
-          }
-          eid += perBatch * 2
-          val t0 = System.nanoTime()
-          clicks.addData(cs)
-          purchases.addData(ps)
-          q.processAllAvailable()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-        val stateKiB = q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum / 1024
-        println(f"[probe] stream attrib  ${scale}%2dx: ${perBatch} clicks/batch, " +
-          f"median batch ${times.sorted.apply(2)}%5.2f s " +
-          f"(${perBatch / times.sorted.apply(2)}%8.0f clicks/s), " +
-          f"state $stateRows rows / $stateKiB KiB")
-        q.stop()
-      }
-      spark.stop()
-      return
-    }
     // optional args: probe only these queries
     val probes = if (args.isEmpty) allProbes else allProbes.filter(args.toSet)
-    // dd12 on MATERIALIZED labels (`runMain graft.ScaleProbe dd12_labels`):
-    // production writes dd7's label table once; this times the keep-best
-    // selection alone, which is what repeats per downstream pass
-    if (args.contains("dd12_labels")) {
-      for (sf <- Seq(src, out)) {
-        val labels = SparkEntry.queries("dd7_dedup_clusters")(spark, sf)
-          .select("doc_id", "cluster_id").localCheckpoint()
-        def run(): Unit = graft.operators.Dedup
-          .keepBest(Tables.documents(spark, sf), labels)
-          .write.format("noop").mode("overwrite").save()
-        run()
-        val t0 = System.nanoTime(); run()
-        println(f"[probe] ${if (sf == src) "1x " else "10x"} dd12_keepbest_only     ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        dropPersisted()
-      }
-      spark.stop()
-      return
-    }
-    // warm then measure, at both scales. The events family also reports
-    // OUTPUT CARDINALITY (an untimed count after the measurement): ev5's
-    // 10× super-linearity is driven by in-window pair-count growth, and
-    // without the rows column that inherent output growth is
-    // indistinguishable from a plan regression.
-    for (sf <- Seq(src, out); name <- probes) {
-      try {
-        SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
-        dropPersisted()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val rowsInfo =
-          if (name.startsWith("ev"))
-            s"  rows=${SparkEntry.queries(name)(spark, sf).count()}"
-          else ""
-        println(f"[probe] ${if (sf == src) "1x " else "10x"} $name%-22s $dt%6.2f s$rowsInfo")
-      } catch { case e: Throwable =>
-        println(s"[probe] FAIL $sf $name: ${e.getMessage.take(200)}")
-      } finally dropPersisted()
-    }
+    tools.ProfJobs.run(spark, src, probes, tag = "1x ")
+    tools.ProfJobs.run(spark, out, probes, tag = "10x")
     spark.stop()
   }
 }

@@ -92,5 +92,5 @@ object AsOf {
       |FROM m WHERE side = 1 ORDER BY purchase_id""".stripMargin
 
   val queries: Seq[Q] = Seq(
-    Q("q23_asof_join", q23AsofJoin, Some(q23Sql), headline = true))
+    Q("q23_asof_join", q23AsofJoin, Some(q23Sql)))
 }

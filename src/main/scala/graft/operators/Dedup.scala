@@ -185,15 +185,10 @@ object Dedup {
   // all signatures. Band keys are xxhash64-compressed so the band
   // self-join shuffles (long, long, int) rows; the oracle keeps full
   // string keys, which is equivalent modulo 64-bit collisions.
-  /** (doc_id, band, key) MinHash band rows — the LSH index frame
-    * (shared by dd3/dd6's self-join and dd11's incremental probe).
-    */
-  private[graft] def bandFrame(s: SparkSession, d: String): DataFrame =
-    bandFrameOf(Tables.documents(s, d))
-
-  /** [[bandFrame]] over an arbitrary `(doc_id, text, …)` frame — the
-    * composed incremental pipeline (TrainPrep.pipe3) builds its stored
-    * index over a quality-GATED corpus, not the raw table.
+  /** (doc_id, band, key) MinHash band rows — the LSH index frame — over
+    * an arbitrary `(doc_id, text, …)` frame: the composed incremental
+    * pipeline (TrainPrep.pipe3) builds its stored index over a
+    * quality-GATED corpus, not the raw table.
     */
   private[operators] def bandFrameOf(docs: DataFrame): DataFrame = {
     val hm = graft.functions.VectorFunctions.md5Prefix60(col("s")) % P
@@ -760,8 +755,9 @@ object Dedup {
     * label table once, and every downstream pass (keep-best here, stats,
     * span removal) reads it instead of recomputing the pair graph.
     * dd12's gate query recomputes labels inline only because the
-    * correctness gate is stateless; ScaleProbe's `dd12_labels` mode
-    * times this function alone on pre-materialized labels.
+    * correctness gate is stateless. Timed alone on pre-materialized
+    * labels (ScaleProbe `dd12_labels` arm, last at commit 561c6b9) it is
+    * FLAT, 0.6→0.8 s at 1×→10×, where dd12 inline is 5.5→38.8 s.
     */
   private[graft] def keepBest(docs: DataFrame, labels: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"),
@@ -1067,8 +1063,11 @@ object Dedup {
   // large set-level candidate counts — inherent to every published
   // exact set-join (AllPairs/PPJoin/ADAPT are worst-case quadratic);
   // the bucketed sketches (dd3/dd6/dd9) are the approximate escape
-  // hatch at that extreme. `ScaleProbe skew:dd15` measures the
-  // adversarial collapse case.
+  // hatch at that extreme. The adversarial collapse case (ScaleProbe
+  // `skew:dd15` arm, last at commit 561c6b9; 20k docs drawn from 200
+  // shingle sets × 100 copies, every token df ≈ n/8) runs at par with
+  // its all-unique twin: 9.2 vs 10.7 s, and 6.26 vs 3.97 s after the
+  // round-9 fingerprint-first verify.
   private def dd15Containment(s: SparkSession, d: String): DataFrame = {
     // ONE shingle scan collapsed straight to the per-doc sorted distinct
     // hash set (dd2's r19 shape): per-shingle rows re-derive by map-only
@@ -1271,8 +1270,10 @@ object Dedup {
     // every member — a resolved dup can still be someone else's keeper).
     // Degenerate one-cluster blob (every pair ≥ 0.45, k-means defeated):
     // everything matches the anchor, the pair join's right side is
-    // ~empty, and the quadratic vanishes — skew:dd16 probe 13.3 s →
-    // linear. Balanced corpora pay one ≤k-row broadcast join, noise.
+    // ~empty, and the quadratic vanishes — ScaleProbe `skew:dd16` arm
+    // (last at commit 561c6b9; 10k vectors): blob 13.29 s → 3.36 s,
+    // uniform 4.01 → 4.48 s. Balanced corpora pay one ≤k-row broadcast
+    // join, noise.
     val anchors = assigned
       .withColumn("arn", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -1336,8 +1337,8 @@ object Dedup {
     Q("dd15_containment", dd15Containment, Some(dd15Sql)),
     Q("dd11_incremental_dedup", dd11IncrementalDedup, Some(dd11Sql)),
     Q("dd12_keep_best", dd12KeepBest, Some(dd12Sql)),
-    Q("dd2_ngram_jaccard", dd2NgramJaccard, Some(dd2Sql), headline = true),
-    Q("dd3_minhash_lsh", dd3MinhashLsh, Some(dd3Sql), headline = true),
+    Q("dd2_ngram_jaccard", dd2NgramJaccard, Some(dd2Sql)),
+    Q("dd3_minhash_lsh", dd3MinhashLsh, Some(dd3Sql)),
     Q("dd4_simhash", dd4Simhash, Some(dd4Sql)),
     Q("dd5_embed_neardup", dd5EmbedNeardup, Some(dd5Sql)),
     Q("dd6_lsh_jaccard", dd6LshJaccard, Some(dd6Sql)),

@@ -142,7 +142,8 @@ object GraphOps {
     * them, and no partitioning scheme can split a single key. It is also
     * analytically noise — a 10⁵-item basket says nothing about deliberate
     * co-purchase. TPC-H baskets are ≤ 7 items, so the cap is inactive on
-    * the gate corpus (output unchanged); `skew:gr3` measures the
+    * the gate corpus (output unchanged); ScaleProbe's `skew:gr3` arm
+    * (last at commit 561c6b9) measured the
     * degenerate tail it guards (sf0.1 + one 20k-item order: edge build
     * 61.8 s uncapped → 2.2 s capped, and capped-on-uniform runs at par
     * with uncapped — the guard is free when it fires on nothing). The

@@ -18,7 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * retried map tasks must reproduce the same row placement, and keyless
   * `repartition(n)` pays a sort besides — §2.5). Scale-adaptive, not a
   * local[32] constant: the guard estimates the scan's split count from
-  * the FILE BYTES on disk (cached per path — a ~1 ms FS stat, done once
+  * the FILE BYTES on disk (bytes cached per path — a ~1 ms FS stat, done once
   * per session, never a per-build `.rdd` plan: an earlier draft used
   * `df.rdd.getNumPartitions`, which re-planned the subtree on every
   * reference and cost 0.2–0.5 s per call on iterative consumers). When
@@ -33,21 +33,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * A/B measured it as a regression — those keep the bare scan.
   */
 private[graft] object Par {
-  private val splitsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val bytesCache =
+    scala.collection.concurrent.TrieMap.empty[String, Long]
 
   /** Estimated split count of the parquet file(s) at `path`: total
-    * bytes over the session's `files.maxPartitionBytes` (the same
-    * quantity Spark's split packing bounds), floored at 1.
+    * bytes over the session's CURRENT `files.maxPartitionBytes` (the
+    * same quantity Spark's split packing bounds), floored at 1. Only the
+    * byte count is cached; the division runs per call, so a later
+    * change of `maxPartitionBytes` is honoured.
     */
-  private def scanSplits(s: SparkSession, path: String): Int =
-    splitsCache.getOrElseUpdate(path, {
+  private def scanSplits(s: SparkSession, path: String): Int = {
+    val bytes = bytesCache.getOrElseUpdate(path, {
       val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bytes = fs.getContentSummary(p).getLength
-      val maxPB = s.sessionState.conf.filesMaxPartitionBytes
-      math.max(1L, (bytes + maxPB - 1) / maxPB).toInt
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
     })
+    val maxPB = s.sessionState.conf.filesMaxPartitionBytes
+    math.max(1L, (bytes + maxPB - 1) / maxPB).toInt
+  }
 
   /** The named table, hash-repartitioned on `key` to the session's
     * default parallelism iff its estimated split count is below it.

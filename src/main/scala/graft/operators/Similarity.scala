@@ -23,16 +23,25 @@ import graft.{Q, Tables}
   */
 object Similarity {
 
+  /** An embeddings scan as `vec_id`, micro-scaled `v` (`round(x·1e6)`
+    * per element — the one Spark-side copy of the formula;
+    * [[microScaledSql]] is the DuckDB side), then `extra` columns, then
+    * the exact squared norm `nrm`.
+    */
+  private def scaled(embeddings: DataFrame, extra: Column*): DataFrame = {
+    val v = transform(col("embedding"), x => round(x.cast("double") * 1000000, 0).cast("long"))
+    embeddings.select(Seq(col("vec_id"), v.as("v")) ++ extra: _*)
+      .withColumn("nrm", graft.functions.VectorFunctions.normSqLong(col("v")))
+  }
+
+  private val microScaledSql =
+    "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))"
+
   /** embeddings with micro-scaled int vector `v` and exact squared norm
     * `nrm`. Shared by Dedup.dd5 and both ANN variants.
     */
   def scaledVectors(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(
-        col("vec_id"),
-        transform(col("embedding"), x => round(x.cast("double") * 1000000, 0).cast("long"))
-          .as("v"))
-      .withColumn("nrm", graft.functions.VectorFunctions.normSqLong(col("v")))
+    scaled(Tables.embeddings(s, d))
 
   /** [[scaledVectors]] over a Par.spreadTable'd embeddings scan — for
     * the two consumers whose whole cost is a brute-force dot sweep in
@@ -42,33 +51,22 @@ object Similarity {
     * bare scan above).
     */
   private[operators] def scaledVectorsSpread(s: SparkSession, d: String): DataFrame =
-    Par.spreadTable(s, d, "embeddings", col("vec_id"))
-      .select(
-        col("vec_id"),
-        transform(col("embedding"), x => round(x.cast("double") * 1000000, 0).cast("long"))
-          .as("v"))
-      .withColumn("nrm", graft.functions.VectorFunctions.normSqLong(col("v")))
+    scaled(Par.spreadTable(s, d, "embeddings", col("vec_id")))
 
   /** [[scaledVectors]] PLUS the label column in one scan (production
     * stores them together — the label is an index co-key, not a payload
     * lookup). One loader shared by every filtered-search operator
-    * (sim15, sim17) so the micro-scaling formula has exactly one copy.
+    * (sim15, sim17).
     */
   private[graft] def labeledVectors(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(
-        col("vec_id"),
-        transform(col("embedding"), x => round(x.cast("double") * 1000000, 0).cast("long"))
-          .as("v"),
-        col("label").cast("long").as("lbl"))
-      .withColumn("nrm", graft.functions.VectorFunctions.normSqLong(col("v")))
+    scaled(Tables.embeddings(s, d), col("label").cast("long").as("lbl"))
 
   /** DuckDB CTE equivalent of [[scaledVectors]] (named `e`). */
   val scaledVectorsSqlCte: String =
-    """e AS (SELECT vec_id,
-      |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT)) AS v,
+    s"""e AS (SELECT vec_id,
+      |  $microScaledSql AS v,
       |  CAST(list_sum(list_transform(
-      |    list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT)),
+      |    $microScaledSql,
       |    x -> x * x)) AS BIGINT) AS nrm
       |FROM embeddings)""".stripMargin
 
@@ -1122,7 +1120,8 @@ object Similarity {
   // engines hold bit-identical codebooks. Assignment/coarse/final ranks
   // all carry explicit integer tie-breaks; ADC sums are exact int64.
   // Recall@3 vs the batch-vs-index brute force is pinned by
-  // Sim14RecallSpec. Knob sweep (round 12, ScaleProbe recall:sim14,
+  // Sim14RecallSpec. Knob sweep (round 12, ScaleProbe `recall:sim14`
+  // arm, last at commit 561c6b9;
   // sf0.01, exact truth = batch-vs-index brute top-3; sim9's IVF-only
   // recall on the same corpus is 0.650 — the ceiling the IVF cell
   // restriction imposes on ANY downstream scoring):
@@ -1139,16 +1138,7 @@ object Similarity {
   private val pqRerankPool = 100
   private val pqTrainBudget = 16384L
   private def sim14AnnIvfpq(s: SparkSession, d: String): DataFrame =
-    sim14Variant(s, d, pqIters, pqRerankPool)
-
-  /** sim14 with the two recall knobs exposed — the shipped query is
-    * (pqIters=2, pool=100); ScaleProbe recall:sim14 sweeps iters ∈
-    * {2,4} × pool ∈ {50,100} to place the shipped point on the
-    * recall/cost curve (table in the scaladoc above).
-    */
-  private[graft] def sim14Variant(s: SparkSession, d: String,
-      iters: Int, rerankPool: Int): DataFrame =
-    ivfpqVariant(s, d, iters, rerankPool, residual = false)
+    ivfpqVariant(s, d, pqIters, pqRerankPool, residual = false)
 
   /** The shared IVFPQ serving stack behind sim14 (residual=false: PQ on
     * raw vectors) and sim16 (residual=true: Jégou et al.'s IVFADC
@@ -1245,7 +1235,8 @@ object Similarity {
     // thin their input by the same portable md5 discipline at rate
     // ⌈n/budget⌉ — FAISS trains both quantizers on a bounded sample
     // while ASSIGNMENT/ENCODING still covers the full corpus. Inert at
-    // gate scale (rate 1); live in skew:sim16 (corpus 24k > budget).
+    // gate scale (rate 1); it ran live in ScaleProbe's `skew:sim16` arm
+    // (corpus 24k > budget; last at commit 561c6b9).
     val trainRate =
       math.max(1L, math.ceil(nCorpus.toDouble / pqTrainBudget).toLong)
     val coarseTrainH = graft.functions.VectorFunctions.md5Prefix60(
@@ -1355,7 +1346,10 @@ object Similarity {
     // ≤ 16384 ⇒ rate 1, every vector trains); the sampled path itself
     // (rate 2) is exercised against the DuckDB oracle on a synthetic
     // 30k-vector corpus (corpus side 24000 > budget) — bit-identical —
-    // and runs live in the skew:sim14 probe at n=30k. At 100 TB the
+    // and ran live in ScaleProbe's `skew:sim14` arm at n=30k (last at
+    // commit 561c6b9): a one-blob corpus that puts every vector in ONE
+    // cell measured 12.9 s vs 23.9–29.2 s uniform — the degeneracy is
+    // absorbed (AQE splits the hot cell join), so no guard. At 100 TB the
     // trainer touches a fixed-size sample while encoding still covers
     // the full corpus.
     val trainH = graft.functions.VectorFunctions.md5Prefix60(
@@ -1679,7 +1673,8 @@ object Similarity {
   //     approx_dot(q, v) = q·c(cell) + Σ_j LUT_j[cd_j], the q·c term
   //     being the probe stage's own cdot (zero extra arithmetic).
   // Both halves are load-bearing, and the probe measured WHY each is
-  // (ScaleProbe recall:sim16, sf0.01, iters=2, exact truth = the
+  // (ScaleProbe `recall:sim16` arm, last at commit 561c6b9; sf0.01,
+  // iters=2, exact truth = the
   // batch-vs-index brute top-3):
   //     untrained raw      pool=10  0.550   pool=100  0.650  (= sim14)
   //     untrained residual pool=10  0.467   pool=100  0.650
@@ -1704,7 +1699,8 @@ object Similarity {
   // replays coarse training, residual encode, and the cdot-restored ADC
   // round-for-round; MATERIALIZED chain hints are physical-only.
   // 10× probe: 7.57 → 19.15 s (2.5× — the fixed-round trainers amortize;
-  // the ADC scan stays sim9-shaped). skew:sim16 (one-blob corpus,
+  // the ADC scan stays sim9-shaped). ScaleProbe's `skew:sim16` arm (last
+  // at commit 561c6b9; one-blob corpus,
   // n=30k, BOTH md5-sampled trainers live at rate 2): hot-1cell 51.6 s
   // vs 33.0 s uniform (1.56×, completes fine). The honest reading:
   // Lloyd CORRECTLY clusters the blob — the corpus IS one cluster — so
@@ -1715,7 +1711,8 @@ object Similarity {
   // "centroids" (12.9 s) by giving up the very cell locality that makes
   // IVF prune on real corpora. Remedies if a production corpus
   // degenerates: nprobe-aware cell re-splitting or a per-cell scan cap
-  // (recall-lossy — not wired unless needed; skew:sim14's note).
+  // (recall-lossy — not wired unless needed; the `skew:sim14` note at
+  // trainIvfpq).
   private[operators] val pq16CoarseIters = 2
   private[graft] val pq16Pool = 100
   private def sim16ResidualPq(s: SparkSession, d: String): DataFrame =
@@ -1901,9 +1898,9 @@ object Similarity {
 
   private val sim15Sql =
     s"""WITH el AS (SELECT vec_id,
-       |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT)) AS v,
+       |  $microScaledSql AS v,
        |  CAST(list_sum(list_transform(
-       |    list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT)),
+       |    $microScaledSql,
        |    x -> x * x)) AS BIGINT) AS nrm,
        |  CAST(label AS BIGINT) AS lbl
        |FROM embeddings),
@@ -1971,7 +1968,11 @@ object Similarity {
   // along with the unwidened probe strictly starving (the knob is
   // load-bearing). At N=10⁹/10 labels: k≈31623, nprobe=267,
   // nprobe_eff≈2670 — 8% of cells, still sublinear, with the label
-  // co-key discarding ~90% of probed codes before the ADC.
+  // co-key discarding ~90% of probed codes before the ADC. Degenerate
+  // corpus (ScaleProbe `skew:sim17` arm, last at commit 561c6b9; one
+  // tight blob plus a 1-in-300 label): the starved label stays exact
+  // and cheap (the widened probe scans only that label's codes); the
+  // query measured 9.0 s at 1× and 37.6 s at 10× in-plan.
   private def sim17FilteredResidual(s: SparkSession, d: String): DataFrame =
     ivfpqVariant(s, d, pqIters, pq16Pool, residual = true,
       coarseIters = pq16CoarseIters, filteredByLabel = true)
@@ -2070,7 +2071,7 @@ object Similarity {
     Q("sim10_kmeans_train", sim10KmeansTrain, Some(sim10Sql)),
     Q("sim9_incremental_ann", sim9IncrementalAnn, Some(sim9Sql)),
     Q("sim8_ann_pq", sim8AnnPq, Some(sim8Sql)),
-    Q("sim1_ann_brute", sim1AnnBrute, Some(sim1Sql), headline = true),
+    Q("sim1_ann_brute", sim1AnnBrute, Some(sim1Sql)),
     Q("sim2_ann_lsh", sim2AnnLsh, Some(sim2Sql)),
     Q("sim3_ann_ivf", sim3AnnIvf, Some(sim3Sql)),
     Q("sim4_centroid", sim4Centroid, Some(sim4Sql)),

@@ -532,7 +532,8 @@ object TextOps {
     * is the production knob for the O(k·corpus) training cost the r13
     * audit flagged (t11/t18 were the slowest text family).
     *
-    * MEASURED (sample:bpe probe, sf0.1 10× corpus = 600k docs, warm,
+    * MEASURED (ScaleProbe `sample:bpe` arm, last at commit 561c6b9;
+    * sf0.1 10× corpus = 600k docs, warm,
     * r15 array-form trainer): full train 11.15 s; rate=2 3.02 s (3.7×)
     * with 5/6 (lhs, rhs) merges agreeing; rate=10 1.57 s (7.1×) with
     * 0/6 (the r14 exploded-window trainer measured 17.6/7.2/4.1 s on
@@ -580,8 +581,10 @@ object TextOps {
     * expression ([[graft.functions.VectorFunctions.bpeEncode]]) over the
     * full corpus — no pair counting, no argmax collect, no join, and
     * since r15 no per-merge corpus rewrite rounds either: encode cost is
-    * independent of k (the bpe:encode probe measures it — the r14
-    * audit's last O(k·corpus) serving-side term). With the merge table
+    * independent of k (the r14 audit's last O(k·corpus) serving-side
+    * term). MEASURED (ScaleProbe `bpe:encode` arm, last at commit
+    * 561c6b9; sf0.1, warm, r15): the window replay it replaced 3.34 s
+    * at k=6 → 6.00 s at k=12; the expression 0.12 s at both k. With the merge table
     * from the full-corpus trainer this is bit-identical to t18
     * (T11SampledSpec pins the factoring); with [[bpeTrainSampled]]'s
     * table it is the production configuration: train on the sample,
@@ -1155,7 +1158,10 @@ c$r AS (SELECT doc_id,
   // never rows); final ranking is a distributed TakeOrdered(30). The
   // oracle replays the identical integer arithmetic on word strings —
   // equality holds unless xxhash64 collides inside the corpus vocab
-  // (dd2's documented caveat class).
+  // (dd2's documented caveat class). A hub word at every other position
+  // of 50k docs is no skew cliff (ScaleProbe `skew:t17` arm, last at
+  // commit 561c6b9): uniform 12.75 s, hub 7.99 s — the hub's pairs
+  // combine map-side.
   private val trRounds = 3
   private def t17TextrankKeywords(s: SparkSession, d: String): DataFrame = {
     // window-2 co-occurrence is ROW-LOCAL: token (i, i+k) adjacency is a
@@ -1530,8 +1536,9 @@ c$r AS (SELECT doc_id,
     * touched and no index work is in the plan. Pin `version` for
     * reproducible serving; None follows the committed latest.
     * Bit-identical to the registry search6 (RagStoreSpec; re-asserted at
-    * 1× by the prod:search6 probe). MEASURED (sf0.1 base, warm,
-    * prod:search6 on the collision-free 10× corpus, r14 capture):
+    * 1× by ScaleProbe's `prod:search6` arm, last at commit 561c6b9).
+    * MEASURED (sf0.1 base, warm, that arm on the collision-free 10×
+    * corpus, r14 capture):
     * registry rebuild-in-plan 2.22 s vs from-store 0.85 s per query at
     * 1× — and 1.11 s at 10× STORE growth, near-FLAT: the serving cost
     * is the probe + two bounded top-20s over pruned scans, and the
@@ -1665,8 +1672,9 @@ c$r AS (SELECT doc_id,
     * (publishRagStoreFrom's write discipline) — the r13 semi-join read
     * the whole chunklens table per query, the one serving-path term
     * that grew linearly with the store. Bit-identical to the registry
-    * search7 (RagStoreSpec). MEASURED (sf0.1 base, warm, prod:search6
-    * on the collision-free 10× corpus, r14 capture): registry
+    * search7 (RagStoreSpec). MEASURED (sf0.1 base, warm, ScaleProbe
+    * `prod:search6` arm, last at commit 561c6b9, on the collision-free
+    * 10× corpus, r14 capture): registry
     * rebuild-in-plan 4.70 s vs from-store 2.27 s at 1× and 2.79 s at
     * 10× STORE growth — near-FLAT (the r13 scan-per-query shape
     * measured 3.20 → 4.82 s on the same harness); the floor is the K=8
@@ -1865,7 +1873,8 @@ c$r AS (SELECT doc_id,
     * regardless of corpus shape. On a healthy corpus a loose cap is a
     * NO-OP (salient ⇒ rare ⇒ df ≪ cap; Mine1CapSpec pins bit-equality
     * with the uncapped registry query on the gate corpus, and the
-    * skew:mine1 probe shows where the knob earns its keep: on a
+    * ScaleProbe `skew:mine1` arm (last at commit 561c6b9) showed where
+    * the knob earns its keep: on a
     * degenerate-vocabulary corpus uncapped grows 4.86 → 274.1 s for 10×
     * docs — the q×N quadratic — while capped stays 2.05 → 2.30 s,
     * near-flat: at 10× the cap is a 119× speedup on identical inputs,
@@ -1907,7 +1916,7 @@ c$r AS (SELECT doc_id,
     // a real corpus the tf·idf-salient query terms are rare by
     // construction (high score_ppm ⇒ low df), so the term-pruned join
     // emits ~q·df(salient) pairs; [[mine1Capped]] is the production
-    // knob for a corpus that degenerates (skew:mine1 measures it).
+    // knob for a corpus that degenerates (measured in its scaladoc).
     val cand = qterms
       .join(tf.select(col("doc_id").as("cand_id"), col("term"), col("tf")),
         Seq("term"))
@@ -1998,7 +2007,7 @@ c$r AS (SELECT doc_id,
     Q("t8_top_terms", t8TopTerms, Some(t8Sql)),
     Q("t6_stratified_sample", t6StratifiedSample, Some(t6Sql)),
     Q("t1_lang_id", t1LangId, Some(t1Sql)),
-    Q("t2_quality", t2Quality, Some(t2Sql), headline = true),
+    Q("t2_quality", t2Quality, Some(t2Sql)),
     Q("t3_tokens", t3Tokens, Some(t3Sql)),
     Q("t4_fingerprint", t4Fingerprint, Some(t4Sql)),
     Q("t5_repetition", t5Repetition, Some(t5Sql)))

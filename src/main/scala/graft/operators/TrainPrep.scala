@@ -363,6 +363,10 @@ object TrainPrep {
   //     is the built-in salting — same effect as Skew.saltedSum's
   //     two-phase plan, without the salt bookkeeping). The join-back's
   //     hot key is N×1 — linear in one task, never a cross product.
+  //     Measured (ScaleProbe `skew:dd10` arm, last at commit 561c6b9;
+  //     local[32], warm, 100k docs): uniform 2.81 s vs every doc opening
+  //     with one shared boilerplate paragraph 2.11 s — the hot corpus is
+  //     FASTER (fewer distinct paragraphs survive the partial agg).
   //   - exact: keyed on the string, so a 64-bit xxhash64 collision can
   //     no longer silently drop a unique paragraph (dd2/dd6 stance:
   //     candidates may hash, verdicts must be exact).
@@ -1263,8 +1267,9 @@ object TrainPrep {
   // (cnt, tot) scalars. Nothing re-pairs, re-signs, or re-packs the
   // corpus: per-ingest cost is O(batch · bucketDegree) on clean stores,
   // and the stage-3 store-bucket cap bounds it at O(batch · bands · cap)
-  // even on a DIRTY foreign store (the skew:pipe3 hot-store case — see
-  // the guard comment at stage 3). Mixture/packing rebalance is
+  // even on a DIRTY foreign store (the hot-store case of ScaleProbe's
+  // `skew:pipe3` arm, last at commit 561c6b9 — see the guard comment at
+  // stage 3). Mixture/packing rebalance is
   // deliberately OUT of the nightly path (it is a snapshot-time global
   // op — pipe2); production systems append with per-shard offsets
   // exactly so ingest never rewrites history.
@@ -1313,7 +1318,10 @@ object TrainPrep {
     // the batch's fresh signatures, dd11's convention); candidate pairs
     // and shingle sets are pinned because each is consumed twice.
     //
-    // FOREIGN-STORE GUARD (round 11, closing the skew:pipe3 verdict):
+    // FOREIGN-STORE GUARD (round 11, closing the skew:pipe3 verdict —
+    // ScaleProbe's `skew:pipe3` arm, last at commit 561c6b9, 10k docs: a
+    // store of near-copies measured 17.89 s unguarded and 2.32 s capped,
+    // vs 3.73 s uniform in the same session, accepted set unchanged):
     // store-side band buckets larger than pipe3MaxStoreBucket are
     // skipped entirely before the candidate join — dd9's cap, same
     // reasoning: an over-full bucket means that band doesn't
@@ -1515,7 +1523,7 @@ object TrainPrep {
   // store; spans ride the narrow layout frame; the chunks⋈spans join
   // reuses the aggregates' (shard, chunk_id) partitioning. Everything
   // upstream is pipe3's O(batch·bucketDegree) plan. Measured
-  // (ScaleProbe, batch AND store grown together): 5.35 s → 13.68 s at
+  // (ScaleProbe sweep, batch AND store grown together): 5.35 s → 13.68 s at
   // 10× — 2.6×, sub-linear even though the probe re-derives the
   // store-sized manifest each run (production reads it).
   private def pipe5IncrementalChunks(s: SparkSession, d: String): DataFrame = {
@@ -1565,11 +1573,13 @@ object TrainPrep {
   // pipe5FromStore run the same five stages + chunk materialization
   // READING them, touching the raw store only for the O(shards)
   // boundary docs' text. Output is bit-identical to the registry twins
-  // (Pipe5FromStoreSpec; the prod:pipe5 probe re-asserts it per run on
-  // the probe corpus). The probe (ScaleProbe prod:pipe5) grows the
-  // STORE 10× with the batch fixed to measure the incremental-only
-  // cost — the number the registry probe could not isolate because its
-  // plan re-derives the store-sized manifest each run.
+  // (Pipe5FromStoreSpec). ScaleProbe's `prod:pipe5` arm (last at commit
+  // 561c6b9) grew the STORE 10× with the batch fixed to measure the
+  // incremental-only cost — the number the registry probe could not
+  // isolate because its plan re-derives the store-sized manifest each
+  // run. MEASURED (sf0.1 base, warm, r15): rederive-in-plan 4.83 s;
+  // from-store 3.59 s at 1× and 4.44 s at 10× store — 1.24× for 10×
+  // store growth.
   private[graft] def materializeStore(s: SparkSession, d: String,
       storeDir: String): Long =
     materializeStoreFrom(s, Tables.documents(s, d), storeDir)
@@ -1924,7 +1934,8 @@ object TrainPrep {
     * and only the 8-row totals/opens write Full — the "cost of
     * full-version atomicity" the earlier layout paid (a full store
     * re-emit per night) is gone while the one-claim-one-flip atomicity
-    * contract is unchanged. MEASURED (prod:pipe5 advance arm, warm,
+    * contract is unchanged. MEASURED (ScaleProbe `prod:pipe5` advance
+    * arm, last at commit 561c6b9; warm,
     * second capture on a settled machine): 5.83 s at 1× (sf0.1 store)
     * vs 5.63 s at 10× store history — flat, and ~1.3× under the
     * full-version commit it replaces (7.45/7.43 s on the same probe);
@@ -2786,8 +2797,9 @@ object TrainPrep {
           // search7FromStore's per-query candidate lookup filters on ≤15
           // literal doc_ids, and row-group min/max stats on a sorted
           // column prune that scan to O(candidates) row groups instead of
-          // the whole store (measured at prod:search6 — the r13 linear
-          // serving term this removes)
+          // the whole store (measured by ScaleProbe's `prod:search6`
+          // arm, last at commit 561c6b9 — the r13 linear serving term
+          // this removes)
           "chunklens" -> dl.repartition(col("doc_id"))
             .sortWithinPartitions("doc_id", "k"),
           "stats" -> stats), root)
@@ -2841,7 +2853,8 @@ object TrainPrep {
     *
     * Scale: compute is O(batch chunks × k) codegen'd dots against the
     * broadcast centroid frame + batch-sized aggregations; the write is
-    * O(batch) bytes. MEASURED (prod:search6 rag-advance arms, warm): a
+    * O(batch) bytes. MEASURED (ScaleProbe `prod:search6` rag-advance
+    * arms, last at commit 561c6b9; warm): a
     * fixed 20-doc batch advances the sf0.1 store in 2.56 s and the 10×
     * store in 2.24 s — flat in store size. Runs under the root's commit
     * lease (an advance racing the nightly rebuild or a takedown

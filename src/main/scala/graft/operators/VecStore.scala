@@ -60,7 +60,8 @@ import graft.sources.{CommitLock, Snapshots}
   * configurations — the label is a co-key the unfiltered probe simply
   * does not join on.
   *
-  * MEASURED (ScaleProbe prod:vecstore, sf0.1 base, warm, r18 final
+  * MEASURED (ScaleProbe `prod:vecstore` arm, last at commit 561c6b9;
+  * sf0.1 base, warm, r18 final
   * capture on stores REBUILT with this layout — the probe cache is
   * versioned precisely so serve numbers can never ride a stale
   * pre-(cell,vec_id) store; 10× = store built on the 10×-replicated
@@ -84,6 +85,12 @@ import graft.sources.{CommitLock, Snapshots}
   * Takedown+vacuum+evidence: 3.32 / 3.95 s, evidence clean at both
   * scales (the all-Full rewrite is O(store) by design; at these
   * scales fixed costs dominate).
+  *
+  * Degenerate corpus (ScaleProbe `skew:vecstore` arm, last at commit
+  * 561c6b9; one tight blob plus a 1-in-300 label, served from the
+  * committed store): publish 13.3 / 20.7 s at 1× / 10× (the collapsed
+  * Lloyd paid once), serve 4.13 / 7.32 s vs 9.0 / 37.6 s for the
+  * in-plan sim17 — store-served output bit-equal to the in-plan twin.
   */
 object VecStore {
 

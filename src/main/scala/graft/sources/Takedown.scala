@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale: step 1 is purgeKeys' O(touched-partitions) rewrite behind one
   * column-pruned discovery scan; step 2 is pipe6's audited index build
-  * (nightly-rebuild cost, probed at prod:search6); steps 3–4 are
+  * (nightly-rebuild cost, probed by ScaleProbe's `prod:search6` arm,
+  * last at commit 561c6b9); steps 3–4 are
   * rows-sized. TakedownSpec drives the whole flow through the real
   * operators and pins every contract above.
   *
@@ -207,7 +208,8 @@ object Takedown {
     * snapshot root — in production those could be shard-partitioned
     * catalog tables under a table format, where the rewrite is the
     * same touched-partition dynamic overwrite as step 3 with the
-    * format's own commit atomicity. MEASURED (prod:chunks, warm, r15
+    * format's own commit atomicity. MEASURED (ScaleProbe `prod:chunks`
+    * arm, last at commit 561c6b9; warm, r15
     * final surface, same fixed 20-doc takedown incl. a worst-case
     * rebuild-from-shard-head): 7.8/6.7/8.2 s at 1× (sf0.1 store) vs
     * 6.7/7.5 s at 10× store history across repeated captures — FLAT in
@@ -268,7 +270,8 @@ object Takedown {
       spark.table(docsTable).join(idsDf, Seq("doc_id"), "left_anti"))
     // every pinned frame unpersists on ALL exits — a long-lived
     // orchestrator looping takedowns (some of which fail) must not
-    // accumulate checkpoint blocks (the ScaleProbe dropPersisted cliff)
+    // accumulate checkpoint blocks (the cliff Session.dropPersisted
+    // documents)
     val pinned = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame](idsDf)
     try {
       val sman = stored("store_manifest")
@@ -517,7 +520,8 @@ object Takedown {
     * yesterday). O(held-out shingles) — heavier than the semi-join
     * counts but one narrow-column pass per side, and the only id-free
     * layer a regulator would ask about.
-    * MEASURED (prod:chunks, warm, r15): the evidence table — six
+    * MEASURED (ScaleProbe `prod:chunks` arm, last at commit 561c6b9;
+    * warm, r15): the evidence table — six
     * layers with tombstone coverage (documents + manifest/bands/
     * shingles by id + the structural test_shingles derivation + the
     * registry check) — runs 1.2–1.7 s at 1× and 10× store history
@@ -717,7 +721,8 @@ object Takedown {
     * directories; durable-storage replicas/backups are outside any
     * engine's reach. Scale: the compact (when taken) rewrites the
     * latest version only; vacuum and the audit are metadata plus
-    * column-pruned id scans. MEASURED (prod:chunks, warm, r16): after
+    * column-pruned id scans. MEASURED (ScaleProbe `prod:chunks` arm,
+    * last at commit 561c6b9; warm, r16): after
     * the fixed 20-doc takedown plus a nightly advance, completion with
     * keep=1 runs 4.4 s at 1× (compaction taken — the advance's chain
     * pinned the takedown version; 3 versions reclaimed) and 3.5 s at

@@ -97,8 +97,8 @@ object Streams {
     * only within watermark + interval — the 100 TB property again: state
     * scales with the window, not history).
     *
-    * Measured (ScaleProbe `stream` mode, local[32], MemoryStream
-    * micro-batches): median batch latency is FLAT at 1×→10× volume
+    * Measured (ScaleProbe `stream` arm, last at commit 561c6b9;
+    * local[32], MemoryStream micro-batches): median batch latency is FLAT at 1×→10× volume
     * (4.17 → 4.20 s for 5k → 50k clicks/batch, i.e. 1.2k → 11.9k
     * clicks/s — micro-batch overhead dominates, per-row cost is noise),
     * and state rows grow exactly linearly with the retained horizon
@@ -127,7 +127,7 @@ object Streams {
       .dropDuplicatesWithinWatermark(idCols)
 
   /** Click/purchase event record — the input shape of
-    * [[streamClickAttribution]] (used by the ScaleProbe stream mode).
+    * [[streamClickAttribution]].
     */
   case class ClickEv(ts: java.sql.Timestamp, user_id: Long, event_id: Long)
 
@@ -182,8 +182,9 @@ object Streams {
     * more than the TTL after its original is admitted; the batch
     * reconcile pass catches it, same as the single-band misses.
     *
-    * Measured (ScaleProbe `stream` mode, local[32], MemoryStream
-    * micro-batches, every-5th-doc duplicate pressure): 5k docs/batch →
+    * Measured (ScaleProbe `stream` arm, last at commit 561c6b9;
+    * local[32], MemoryStream micro-batches, every-5th-doc duplicate
+    * pressure): 5k docs/batch →
     * median 1.32 s (3.8k docs/s); 50k docs/batch → 2.49 s (20.1k
     * docs/s) — throughput scales super-linearly with batch size while
     * state stays at its cap (2,048 live band codes, ~2.2 MiB at 10×):
@@ -982,7 +983,8 @@ object Streams {
     * snapshot commit (Append deltas + Carry refs; see
     * [[graft.operators.TrainPrep.advanceStoreOver]]): a trigger costs
     * its own rows, never a store re-emit. MEASURED (ScaleProbe
-    * `prod:stream-advance`, sf0.1, the nightly batch split into 4
+    * `prod:stream-advance` arm, last at commit 561c6b9; sf0.1, the
+    * nightly batch split into 4
     * per-file triggers, warm): 7.6 s/trigger against the 1× store vs
     * 4.9 s/trigger against the 10× store — FLAT in store size (the
     * 10× arm is faster on the warmer JVM; the gates dominate, exactly
@@ -1060,7 +1062,8 @@ object Streams {
     * republish) waited out with bounded retries. Same honest contract
     * as the batch advance: freshness between rebuilds, not retraining
     * — the recall ceiling is the nightly rebuild's job. MEASURED
-    * (ScaleProbe `prod:stream-advance`, the fixed 20-doc batch split
+    * (ScaleProbe `prod:stream-advance` arm, last at commit 561c6b9; the
+    * fixed 20-doc batch split
     * into 4 per-file triggers, warm): 2.2–2.4 s/trigger at the 1× and
     * 10× published stores alike — flat in store size, the batch
     * rag-advance's 2.2–2.6 s shape per trigger (compute is O(trigger

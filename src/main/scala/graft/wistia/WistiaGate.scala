@@ -310,5 +310,5 @@ object WistiaGate {
   val queries: Seq[Q] = Seq(
     Q("w1_dim_media", w1DimMedia, Some(w1Sql)),
     Q("w2_dim_visitor", w2DimVisitor, Some(w2Sql)),
-    Q("w3_fact_engagement", w3Fact, Some(w3Sql), headline = true))
+    Q("w3_fact_engagement", w3Fact, Some(w3Sql)))
 }

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   *     every capped candidate shares its query's RARE word (same
   *     id-div-10 block), while the uncapped run's candidates sprawl
   *     across the corpus through the stop-words. The timing half is
-  *     skew:mine1 (ScaleProbe): uncapped 4.86 → 274.1 s for 10× docs,
+  *     ScaleProbe `skew:mine1` arm (last at commit 561c6b9): uncapped
+  *     4.86 → 274.1 s for 10× docs,
   *     capped 2.05 → 2.30 s — the pipe3 hot-store shape.
   */
 class Mine1CapSpec extends graft.SparkSpec {

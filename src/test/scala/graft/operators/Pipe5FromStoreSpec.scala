@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * raw corpus only for batch rows and boundary-doc text) must be
   * bit-identical to the registry twins that re-derive the store
   * in-plan for the oracle's sake. This is the correctness half of the
-  * prod:pipe5 probe (ScaleProbe), pinned at sf0.001 so it runs in the
-  * suite.
+  * ScaleProbe `prod:pipe5` arm (last at commit 561c6b9), pinned at
+  * sf0.001 so it runs in the suite.
   */
 class Pipe5FromStoreSpec extends graft.SparkSpec {
 

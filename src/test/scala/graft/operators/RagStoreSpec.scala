@@ -11,8 +11,9 @@ import graft.sources.{RunLog, Snapshots}
   * sake, and — the reproducibility contract — a reader PINNED to v1
   * keeps reproducing its exact results after the corpus changes and v2
   * is rebuilt, while diffTable names precisely what changed between the
-  * versions. This is the correctness half of the prod:search6 probe
-  * (ScaleProbe), pinned at sf0.001 so it runs in the suite.
+  * versions. This is the correctness half of ScaleProbe's
+  * `prod:search6` arm (last at commit 561c6b9), pinned at sf0.001 so it
+  * runs in the suite.
   */
 class RagStoreSpec extends graft.SparkSpec {
 

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * scoring before the exact rerank), so its recall is bounded above by
   * sim9's IVF-only recall on the same no-gap worst-case corpus (sim9
   * measured 0.650 at sf0.01). The round-12 knob sweep (ScaleProbe
-  * recall:sim14; table in the sim14 scaladoc) moved the shipped rerank
+  * `recall:sim14` arm, last at commit 561c6b9; table in the sim14
+  * scaladoc) moved the shipped rerank
   * pool 50 → 100: measured recall@3 is now 0.650 (195/300) at sf0.01 —
   * the PQ coarse stage costs ZERO recall vs IVF-only, because the
   * top-100 pool fully absorbs ADC ranking noise (pool=50 measured

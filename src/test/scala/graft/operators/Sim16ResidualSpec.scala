@@ -4,12 +4,12 @@ import org.apache.spark.sql.functions._
 
 /** sim16 IVFADC quality: the trained-L2-coarse + residual-PQ stack must
   * beat sim14's untrained-coarse ceiling — training lifts the IVF
-  * recall ceiling itself (0.650 → 0.753 measured at sf0.01, ScaleProbe
-  * recall:sim16 table in the sim16 scaladoc) and residual encoding
-  * restores coarse ADC fidelity where the pool is small. Floor pinned
-  * at ≥0.70 — between sim14's 0.650 ceiling and the measured 0.753,
-  * with slack for corpus regeneration; a regression to the untrained
-  * ceiling fails the spec by construction.
+  * recall ceiling itself (0.650 → 0.753 measured at sf0.01 by ScaleProbe's
+  * `recall:sim16` arm, last at commit 561c6b9; table in the sim16
+  * scaladoc) and residual encoding restores coarse ADC fidelity where
+  * the pool is small. Floor pinned at ≥0.70 — between sim14's 0.650
+  * ceiling and the measured 0.753, with slack for corpus regeneration;
+  * a regression to the untrained ceiling fails the spec by construction.
   */
 class Sim16ResidualSpec extends graft.SparkSpec {
 

@@ -21,7 +21,13 @@ class GraftExtensionsSpec extends SparkSpec {
     val rewritten = DotProductRewrite(df.queryExecution.analyzed)
     assert(hasDotLong(rewritten), "expected DotLong after rewrite")
     val fast = SparkShim.ofRows(spark, rewritten).collect().map(_.getLong(0))
-    val ref = df.collect().map(_.getLong(0))
+    // the test session installs the rule, so the reference runs with it
+    // excluded: aggregate(zip_with) evaluated as written
+    val ref = withoutGraftRules {
+      val plain = declarativeDot
+      assert(!hasDotLong(plain.queryExecution.optimizedPlan))
+      plain.collect().map(_.getLong(0))
+    }
     assert(fast.sameElements(ref))
   }
 
@@ -33,12 +39,11 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(!hasDotLong(DotProductRewrite(df.queryExecution.analyzed)))
   }
 
-  test("rule fires in a live session via experimental.extraOptimizations") {
-    spark.experimental.extraOptimizations = Seq(DotProductRewrite)
-    try {
-      val df = declarativeDot
-      assert(hasDotLong(df.queryExecution.optimizedPlan))
-      assert(df.collect().length === 100)
-    } finally spark.experimental.extraOptimizations = Nil
+  test("rule fires in the default test session") {
+    // Session.local installs GraftExtensions: the default test session
+    // itself rewrites the declarative dot product
+    val df = declarativeDot
+    assert(hasDotLong(df.queryExecution.optimizedPlan))
+    assert(df.collect().length === 100)
   }
 }

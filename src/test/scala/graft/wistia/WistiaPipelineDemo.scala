@@ -1,6 +1,6 @@
 package graft.wistia
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 import java.sql.Timestamp
 
 /** Runnable end-to-end demo of the Wistia star-schema pipeline on a
@@ -9,10 +9,7 @@ import java.sql.Timestamp
   */
 object WistiaPipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
