@@ -38,4 +38,13 @@ object Session {
     */
   def dropPersisted(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+
+  private val names = new java.util.concurrent.atomic.AtomicLong
+
+  /** `prefix` plus a process-unique sequence number: the one source of
+    * `Observation` names. An Observation latches metrics BY NAME from any
+    * completing execution in the session, and Verify runs queries
+    * concurrently, so two builders must never share a name.
+    */
+  def fresh(prefix: String): String = s"$prefix${names.incrementAndGet()}"
 }

@@ -27,12 +27,6 @@ import graft.{Q, Tables}
   */
 object Dedup {
 
-  /** Session-unique suffix source for Observation names (see the
-    * propagateLabels loop): observations latch metrics BY NAME from any
-    * completing execution, so concurrent builders must never share one.
-    */
-  private[operators] val obsSeq = new java.util.concurrent.atomic.AtomicLong
-
   /** doc_id → one row per word-3-gram shingle occurrence (duplicates
     * included — dd2 dedups on hashed longs, dd3's min(md5) is
     * duplicate-insensitive). Built with a codegen-friendly generator:
@@ -503,14 +497,12 @@ object Dedup {
       // and the exchanges were not reused — measured dd7 2.2 → 4.2 s;
       // the single-step round is the cheaper shape). Convergence rides
       // the SAME job as the checkpoint materialization via observe() —
-      // no separate count() pass. The name carries a session-unique
-      // sequence (r20): Observation latches metrics BY NAME from any
-      // completing execution, and Verify runs builders concurrently —
-      // two propagateLabels loops (dd7/dd12 vs pipe2/pipe4, different
-      // pair graphs) at the same iteration index could otherwise latch
-      // each other's n_changed and stop a loop early.
+      // no separate count() pass. The name is session-unique
+      // (Session.fresh): two propagateLabels loops (dd7/dd12 vs
+      // pipe2/pipe4, different pair graphs) at the same iteration index
+      // could otherwise latch each other's n_changed and stop a loop early.
       val obs = new org.apache.spark.sql.Observation(
-        s"lp_conv_${Dedup.obsSeq.incrementAndGet()}_$iter")
+        graft.Session.fresh(s"lp_conv_${iter}_"))
       val next = step(labels.withColumn("old", col("label")))
         .withColumn("changed", col("label") =!= col("old"))
         .observe(obs,

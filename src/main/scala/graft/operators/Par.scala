@@ -41,6 +41,16 @@ private[graft] object Par {
     * same quantity Spark's split packing bounds), floored at 1. Only the
     * byte count is cached; the division runs per call, so a later
     * change of `maxPartitionBytes` is honoured.
+    *
+    * ASSUMES the driver corpus' shape: one small file per table, which
+    * Spark reads in one task whatever the formula. The estimate does not
+    * mirror Spark's packing (`maxSplitBytes = min(maxPartitionBytes,
+    * max(openCostInBytes, bytes / defaultParallelism))`), so a single
+    * file between `maxPartitionBytes` and `target × maxPartitionBytes`
+    * (128 MB–4 GB at 32 cores and the default 128 MB) is estimated below
+    * `target` although Spark already plans it as about `target` splits,
+    * and it still gets the extra exchange. Perf only: the repartition is
+    * semantically a no-op.
     */
   private def scanSplits(s: SparkSession, path: String): Int = {
     val bytes = bytesCache.getOrElseUpdate(path, {

@@ -1028,7 +1028,7 @@ object TrainPrep {
     // concurrently under Verify's thread pool, and Observation latches
     // metrics BY NAME from any completing execution.
     val obs = new org.apache.spark.sql.Observation(
-      s"pipe2_stots_${Dedup.obsSeq.incrementAndGet()}")
+      graft.Session.fresh("pipe2_stots_"))
     val manifest = mixed.withColumn("hkey", hkey)
       .withColumn("shard", pmod(col("hkey"), lit(8L)))
       .withColumn("pos", row_number().over(wSh).cast("long") - 1L)
@@ -1968,11 +1968,11 @@ object TrainPrep {
       pipeline: String, drifts: Seq[SchemaDrift]): Unit =
     runLogPath.filter(_ => drifts.nonEmpty).foreach { p =>
       val ts = new java.sql.Timestamp(System.currentTimeMillis())
+      val now = System.nanoTime()
       graft.sources.RunLog.append(s, p, drifts.map(d =>
-        graft.sources.RunLog.Entry(ts, pipeline,
-          s"schema_drift:${d.table}",
-          (d.dropped.size + d.nullFilled.size).toLong, 0L, "warn",
-          d.describe.take(500))).toSeq)
+        graft.sources.RunLog.entry(ts, pipeline, s"schema_drift:${d.table}",
+          (d.dropped.size + d.nullFilled.size).toLong, now, "warn",
+          d.describe)).toSeq)
     }
 
   private[graft] def advanceStore(s: SparkSession, d: String,
@@ -2772,12 +2772,8 @@ object TrainPrep {
       .select("tok", "doc_id", "k", "tf", "dl")
       .repartition(col("tok")).sortWithinPartitions("tok")
     val stats = dl.agg(sum("dl").as("tt"), count(lit(1)).as("n"))
-    val obs = org.apache.spark.sql.Observation(
-      s"ragstore_${java.util.UUID.randomUUID}")
+    val obs = org.apache.spark.sql.Observation(graft.Session.fresh("ragstore_"))
     val t0 = System.nanoTime()
-    def entry(stage: String, rows: Long, status: String, err: String) =
-      graft.sources.RunLog.Entry(runTs, "rag_index", stage, rows,
-        (System.nanoTime() - t0) / 1000000L, status, err)
     try {
       // under the ROOT's commit lease: a rebuild racing an incremental
       // advance ([[advanceRagStore]]) would otherwise read-latest →
@@ -2804,14 +2800,14 @@ object TrainPrep {
             .sortWithinPartitions("doc_id", "k"),
           "stats" -> stats), root)
       }
-      runLogPath.foreach(p => graft.sources.RunLog.append(s, p,
-        Seq(entry(s"publish_v$v", obs.get("rows").asInstanceOf[Long], "ok", ""))))
+      runLogPath.foreach(p => graft.sources.RunLog.append(s, p, Seq(
+        graft.sources.RunLog.entry(runTs, "rag_index", s"publish_v$v",
+          obs.get("rows").asInstanceOf[Long], t0))))
       v
     } catch {
-      case e: Throwable =>
-        runLogPath.foreach(p => graft.sources.RunLog.append(s, p,
-          Seq(entry("publish", -1L, "failed",
-            Option(e.toString).getOrElse("").take(500)))))
+      case scala.util.control.NonFatal(e) =>
+        runLogPath.foreach(p => graft.sources.RunLog.append(s, p, Seq(
+          graft.sources.RunLog.failed(runTs, "rag_index", "publish", t0, e))))
         throw e
     } finally
       // the build's checkpoint blocks (toks is token-grain — the largest

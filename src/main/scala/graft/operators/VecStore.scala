@@ -487,9 +487,8 @@ object VecStore {
           // filtering on non-empty error must never false-positive on
           // a healthy observation)
           runLogPath.foreach(p => graft.sources.RunLog.append(s, p, Seq(
-            graft.sources.RunLog.Entry(runTs, "vec_store_recall",
-              "recall_probe", math.round(recall * 1e6),
-              (System.nanoTime() - t0) / 1000000L, "ok", ""))))
+            graft.sources.RunLog.entry(runTs, "vec_store_recall",
+              "recall_probe", math.round(recall * 1e6), t0))))
           recall
         } finally exact.unpersist(blocking = false)
       } finally served.unpersist(blocking = false)
@@ -575,19 +574,17 @@ object VecStore {
       keep: Int = 1, runLogPath: String,
       runTs: java.sql.Timestamp = new java.sql.Timestamp(
         System.currentTimeMillis())): DataFrame = {
+    import graft.sources.RunLog
     val t0 = System.nanoTime()
-    def step[T](stage: String)(rows: T => Long)(body: => T): T =
-      graft.sources.RunLog.step[T](s, runLogPath, runTs,
-        "vec_takedown_retention", stage, t0)(rows)(body)
-    step[Long]("vec_takedown")(identity)(takedown(s, vecIds, root))
-    val m = step[Snapshots.Maintenance]("compact_vec")(
-        _.compactedTo.getOrElse(0L))(
+    val pipeline = "vec_takedown_retention"
+    RunLog.step[Long](s, runLogPath, runTs, pipeline, "vec_takedown", t0)(identity)(
+      takedown(s, vecIds, root))
+    val m = RunLog.step[Snapshots.Maintenance](s, runLogPath, runTs, pipeline,
+        "compact_vec", t0)(_.compactedTo.getOrElse(0L))(
       Snapshots.maintain(s, root, Int.MaxValue, keep))
-    graft.sources.RunLog.append(s, runLogPath, Seq(
-      graft.sources.RunLog.Entry(runTs, "vec_takedown_retention",
-        "vacuum_vec", m.vacuumed.size.toLong,
-        (System.nanoTime() - t0) / 1000000L, "ok", "")))
-    step[DataFrame]("erasure_audit")(
+    RunLog.append(s, runLogPath, Seq(
+      RunLog.entry(runTs, pipeline, "vacuum_vec", m.vacuumed.size.toLong, t0)))
+    RunLog.step[DataFrame](s, runLogPath, runTs, pipeline, "erasure_audit", t0)(
         _.agg(sum("rows_remaining")).collect().head.getLong(0))(
       verifyErasure(s, vecIds, root).localCheckpoint())
   }

@@ -210,10 +210,11 @@ object RawZone {
     * instead of a streaming checkpoint: a run directory is pruned only
     * when it is (a) older than the newest `keep` AND (b) every one of
     * its rows sits at-or-below `hwm` on `tsCol`. Under the
-    * HWM-advancing lifecycle (`runIncremental`: `since = hwm + 1s`, so
-    * everything ≤ hwm was either processed by the activation that
-    * advanced the mark past it, or arrived late and is permanently
-    * invisible to every future activation) such a run can never be
+    * HWM-advancing lifecycle (`Pipeline.runIncremental`:
+    * `since = hwm + 1s`, so everything ≤ hwm was either processed by
+    * the activation that advanced the mark past it, or arrived late and
+    * is permanently invisible to every future activation) such a run
+    * can never be
     * read again — pruning it loses nothing replayable. The guard is
     * conservative in both directions: `hwm = None` (no fact rows yet)
     * prunes NOTHING — a fact table lagging its raw zone blocks the

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Pipeline run history — the job-log the reference gets for free from
   * its managed stack (every BigQuery load keeps a job entry with row
@@ -16,9 +17,10 @@ import org.apache.spark.sql.functions._
   * what was just written (the naive post-write `table.count()` is a
   * full re-scan that grows with TABLE size; this is O(0) extra — the
   * metric accumulates on rows already flowing through the writer).
-  * A stage that THROWS still gets its row logged (status=failed, rows
-  * -1 since the action died) before the error propagates — the log is
-  * most valuable precisely when the run does not finish.
+  * A stage that THROWS (NonFatal) still gets its row logged
+  * (status=failed, rows -1 since the action died) before the error
+  * propagates — the log is most valuable precisely when the run does not
+  * finish.
   */
 object RunLog {
 
@@ -26,27 +28,42 @@ object RunLog {
       stage: String, rows: Long, millis: Long, status: String,
       error: String)
 
+  /** The one place an [[Entry]] is built: `millis` since `t0Nanos`
+    * (callers pick the start — a stage's own write, or a flow's start for
+    * a cumulative trail), and `error` truncated to 500 chars.
+    */
+  def entry(runTs: java.sql.Timestamp, pipeline: String, stage: String,
+      rows: Long, t0Nanos: Long, status: String = "ok",
+      error: String = ""): Entry =
+    Entry(runTs, pipeline, stage, rows, (System.nanoTime() - t0Nanos) / 1000000L,
+      status, Option(error).getOrElse("").take(500))
+
+  /** A failed stage's entry: rows -1 (the action died) and the error. */
+  def failed(runTs: java.sql.Timestamp, pipeline: String, stage: String,
+      t0Nanos: Long, e: Throwable): Entry =
+    entry(runTs, pipeline, stage, -1L, t0Nanos, "failed", e.toString)
+
+  // The failure rule every logged flow shares: only NonFatal failures are
+  // logged. Logging a failure row is itself a Spark append — on VM death
+  // (OOM) or an interrupt, submitting more work in a broken JVM masks the
+  // real failure, so fatal throwables propagate unlogged.
+
   /** Run `write` on an observed copy of `df`, returning the stage's log
-    * entry. The observation name is salted per call — Spark requires
-    * uniqueness per query — and `obs.get` returns immediately because
-    * the write action has already completed when it is read.
+    * entry; a NonFatal failure is rethrown as a [[LoggedFailure]] carrying
+    * the failed entry. The observation name is session-unique (Spark
+    * requires uniqueness per query) and `obs.get` returns immediately
+    * because the write action has already completed when it is read.
     */
   def observedWrite(df: DataFrame, runTs: java.sql.Timestamp,
       pipeline: String, stage: String)(write: DataFrame => Unit): Entry = {
-    val obs = Observation(s"runlog_${stage}_${java.util.UUID.randomUUID}")
+    val obs = Observation(graft.Session.fresh(s"runlog_${stage}_"))
     val observed = df.observe(obs, count(lit(1)).as("rows"))
     val t0 = System.nanoTime()
     try {
       write(observed)
-      Entry(runTs, pipeline, stage,
-        obs.get("rows").asInstanceOf[Long],
-        (System.nanoTime() - t0) / 1000000L, "ok", "")
+      entry(runTs, pipeline, stage, obs.get("rows").asInstanceOf[Long], t0)
     } catch {
-      case e: Throwable =>
-        throw LoggedFailure(
-          Entry(runTs, pipeline, stage, -1L,
-            (System.nanoTime() - t0) / 1000000L, "failed",
-            Option(e.toString).getOrElse("").take(500)), e)
+      case NonFatal(e) => throw LoggedFailure(failed(runTs, pipeline, stage, t0, e), e)
     }
   }
 
@@ -57,32 +74,24 @@ object RunLog {
     extends RuntimeException(cause)
 
   /** Run `body`, append ONE ok/failed row for it, rethrow on failure —
-    * the step wrapper the run-logged flows share (one place for the
-    * trail's row shape, the 500-char error truncation, and the
-    * cumulative-from-`t0Nanos` duration convention). `rows` extracts
-    * the logged count from the step's result.
+    * the step wrapper every flow that logs a row as each step finishes
+    * shares (takedowns, erasure completion); the Wistia lifecycles, which
+    * land a run's rows in one append, use [[observedWrite]] instead.
+    * `rows` extracts the logged count from the step's result; millis run
+    * from `t0Nanos`.
     */
   def step[T](spark: SparkSession, path: String,
       runTs: java.sql.Timestamp, pipeline: String, stage: String,
-      t0Nanos: Long)(rows: T => Long)(body: => T): T = {
-    def entry(n: Long, status: String, err: String) =
-      Entry(runTs, pipeline, stage, n,
-        (System.nanoTime() - t0Nanos) / 1000000L, status,
-        Option(err).getOrElse("").take(500))
+      t0Nanos: Long)(rows: T => Long)(body: => T): T =
     try {
       val r = body
-      append(spark, path, Seq(entry(rows(r), "ok", "")))
+      append(spark, path, Seq(entry(runTs, pipeline, stage, rows(r), t0Nanos)))
       r
     } catch {
-      // NonFatal only: logging the failure row is itself a Spark append
-      // — on VM death (OOM) or a job cancellation, submitting more
-      // cluster work in a broken JVM masks the real failure; fatal
-      // throwables propagate unlogged (runRetention's leg rule)
-      case scala.util.control.NonFatal(e) =>
-        append(spark, path, Seq(entry(-1L, "failed", e.toString)))
+      case NonFatal(e) =>
+        append(spark, path, Seq(failed(runTs, pipeline, stage, t0Nanos, e)))
         throw e
     }
-  }
 
   /** Append entries to the path-based run-log table (tiny: one row per
     * stage per run — coalesced to a single file per append).

@@ -73,19 +73,9 @@ object Takedown {
     val before = Snapshots.latestVersion(spark, ragRoot)
     // step 1 — purge the source of truth (logged with the deleted count;
     // a failed purge logs and aborts BEFORE any index work)
-    val t0 = System.nanoTime()
-    val deleted =
-      try Catalog.purgeKeys(spark, docsTable, docIds.toDF("doc_id"), partitionBy)
-      catch {
-        case e: Throwable =>
-          RunLog.append(spark, runLogPath, Seq(RunLog.Entry(runTs, "takedown",
-            s"purge_$docsTable", -1L, (System.nanoTime() - t0) / 1000000L,
-            "failed", Option(e.toString).getOrElse("").take(500))))
-          throw e
-      }
-    RunLog.append(spark, runLogPath, Seq(RunLog.Entry(runTs, "takedown",
-      s"purge_$docsTable", deleted, (System.nanoTime() - t0) / 1000000L,
-      "ok", "")))
+    val deleted = RunLog.step[Long](spark, runLogPath, runTs, "takedown",
+        s"purge_$docsTable", System.nanoTime())(identity)(
+      Catalog.purgeKeys(spark, docsTable, docIds.toDF("doc_id"), partitionBy))
     // step 2 — republish the index from the purged table's CURRENT state
     // (publishRagStoreFrom writes its own run-log row, ok or failed).
     // One retry: a transient publish failure here leaves the serving
@@ -235,16 +225,13 @@ object Takedown {
     import spark.implicits._
     val B = graft.operators.TrainPrep.packBudget
     val t0 = System.nanoTime()
-    def log(stage: String, rows: Long, status: String, err: String): Unit =
-      RunLog.append(spark, runLogPath, Seq(RunLog.Entry(runTs,
-        "takedown_chunks", stage, rows,
-        (System.nanoTime() - t0) / 1000000L, status,
-        Option(err).getOrElse("").take(500))))
+    // each step logs through RunLog.step (millis cumulative from t0); the
+    // failpoint throws BEFORE the step runs, so it logs nothing
     def step[T](stage: String)(body: => (T, Long)): T = {
       if (stage == failpointBefore)
         throw new IllegalStateException(s"failpoint: crash before $stage")
-      try { val (v, rows) = body; log(stage, rows, "ok", ""); v }
-      catch { case e: Throwable => log(stage, -1L, "failed", e.toString); throw e }
+      RunLog.step[(T, Long)](spark, runLogPath, runTs, "takedown_chunks",
+        stage, t0)(_._2)(body)._1
     }
 
     // the whole flow runs under the chunk table's COMMIT LOCK
@@ -319,7 +306,7 @@ object Takedown {
       if (nPurged == 0L && !heldOutDoomed) {
         if (missingTomb == 0L) {
           // never packed, not held-out, already tombstoned ⇒ no-op
-          log("noop", 0L, "ok", "")
+          step("noop")(((), 0L))
           return ChunksResult(0L, 0L, 0L, 0L, v0)
         }
         // never packed ⇒ nothing to ERASE at this grain, but the
@@ -340,7 +327,7 @@ object Takedown {
         val cur = stored("test_shingles")
         val drift = cur.join(der, Seq("h"), "left_anti").count()
         if (drift == 0L && missingTomb == 0L) {
-          log("noop", 0L, "ok", "")
+          step("noop")(((), 0L))
           return ChunksResult(0L, 0L, 0L, 0L, v0)
         }
         if (drift == 0L) {
@@ -740,35 +727,25 @@ object Takedown {
     require(storeDir.nonEmpty || ragRoot.nonEmpty,
       "completeErasure needs at least one snapshot root to complete")
     val t0 = System.nanoTime()
-    def log(stage: String, rows: Long, status: String, err: String): Unit =
-      RunLog.append(spark, runLogPath, Seq(RunLog.Entry(runTs,
-        "takedown_retention", stage, rows,
-        (System.nanoTime() - t0) / 1000000L, status,
-        Option(err).getOrElse("").take(500))))
-    def maintainRoot(root: String, label: String): Snapshots.Maintenance =
-      try {
-        // maxLayers = MaxValue: depth policy is the nightly
-        // orchestrator's business ([[Snapshots.maintain]] with its own
-        // bound); HERE only the pinning rule may force the chain cut
-        val m = Snapshots.maintain(spark, root, Int.MaxValue, keep)
-        log(s"compact_$label", m.compactedTo.getOrElse(0L), "ok", "")
-        log(s"vacuum_$label", m.vacuumed.size.toLong, "ok", "")
-        m
-      } catch {
-        case e: Throwable =>
-          log(s"maintain_$label", -1L, "failed", e.toString); throw e
-      }
+    val pipeline = "takedown_retention"
+    def maintainRoot(root: String, label: String): Snapshots.Maintenance = {
+      // maxLayers = MaxValue: depth policy is the nightly
+      // orchestrator's business ([[Snapshots.maintain]] with its own
+      // bound); HERE only the pinning rule may force the chain cut
+      val m = RunLog.step[Snapshots.Maintenance](spark, runLogPath, runTs,
+          pipeline, s"compact_$label", t0)(_.compactedTo.getOrElse(0L))(
+        Snapshots.maintain(spark, root, Int.MaxValue, keep))
+      RunLog.append(spark, runLogPath, Seq(RunLog.entry(runTs, pipeline,
+        s"vacuum_$label", m.vacuumed.size.toLong, t0)))
+      m
+    }
     val sm = storeDir.map(maintainRoot(_, "store"))
     val rm = ragRoot.map(maintainRoot(_, "rag"))
-    val evidence =
-      try verifyErasure(spark, docIds, docsTable, storeDir, ragRoot,
-        auditRetainedVersions = true).localCheckpoint()
-      catch {
-        case e: Throwable =>
-          log("erasure_audit", -1L, "failed", e.toString); throw e
-      }
-    val residue = evidence.agg(sum("rows_remaining")).first().getLong(0)
-    log("erasure_audit", residue, "ok", "")
+    val evidence = RunLog.step[org.apache.spark.sql.DataFrame](spark,
+        runLogPath, runTs, pipeline, "erasure_audit", t0)(
+        _.agg(sum("rows_remaining")).first().getLong(0))(
+      verifyErasure(spark, docIds, docsTable, storeDir, ragRoot,
+        auditRetainedVersions = true).localCheckpoint())
     Completion(sm, rm, evidence)
   }
 

@@ -1120,13 +1120,12 @@ object Streams {
       }
       if (m.compactedTo.isDefined || m.vacuumed.nonEmpty)
         runLogPath.foreach(p => graft.sources.RunLog.append(s, p, Seq(
-          graft.sources.RunLog.Entry(
+          graft.sources.RunLog.entry(
             new java.sql.Timestamp(System.currentTimeMillis()),
-            "stream_maintain", "maintain", m.vacuumed.size.toLong,
-            (System.nanoTime() - t0) / 1000000L, "ok",
-            (s"root=$root compacted_to=${m.compactedTo.getOrElse(-1L)} " +
+            "stream_maintain", "maintain", m.vacuumed.size.toLong, t0, "ok",
+            s"root=$root compacted_to=${m.compactedTo.getOrElse(-1L)} " +
               s"layers=${m.layersBefore}->${m.layersAfter} " +
-              s"vacuumed=[${m.vacuumed.mkString(",")}]").take(500)))))
+              s"vacuumed=[${m.vacuumed.mkString(",")}]"))))
     }
 
   /** Bounded lease-wait shared by the per-trigger store advancers: a

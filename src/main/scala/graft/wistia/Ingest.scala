@@ -8,9 +8,10 @@ import graft.sources.{RawZone, WistiaHttp}
   * (List endpoint, driver-side — the list is small) and per-media event
   * streams (via the wistia-raw connector's HTTP mode — one executor
   * partition per media), then land both in the raw zone under one run
-  * stamp. Downstream, `Pipeline.runBatch`/`runIncremental` pick up from
-  * the raw zone exactly as the reference's process scripts pick up the
-  * ingestor's blobs.
+  * stamp. Downstream, the `Pipeline` lifecycles (`runBatch` and its
+  * gated/idempotent/catalog variants, `runIncremental`, `runStreaming`
+  * and `runStreamingGated`) pick up from the raw zone exactly as the
+  * reference's process scripts pick up the ingestor's blobs.
   *
   * Failure isolation matches the reference: a media whose pagination
   * errors mid-way contributes the pages it yielded (connector

@@ -1,8 +1,12 @@
 package graft.wistia
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.RawZone
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.types.StructType
+import graft.sources.{Catalog, RawZone, RunLog, Snapshots}
 
 /** End-to-end pipeline lifecycles of the reference, as single callables
   * over the tri-layer lake (SURVEY §3):
@@ -14,6 +18,15 @@ import graft.sources.RawZone
   *  - [[runIncremental]] ≙ `process_wistia_data.py.main()` (§3.2): HWM+1s
   *    source filter → passthrough dim_media (TRUNCATE refresh) →
   *    per-event fact APPEND.
+  *
+  * Every lifecycle keeps run history, the job log the reference gets
+  * from its managed stack: each stage writes through
+  * [[graft.sources.RunLog.observedWrite]] (rows counted on the write
+  * action itself — no post-write re-scan) and lands one row in
+  * `<root>/run_log`, including the stages of a run that FAILS partway
+  * (status=failed, rows -1, logged before the error propagates). Batch
+  * lifecycles return rows written this run per stage — the numbers
+  * their log rows carry; the tables hold the running history.
   *
   * The REST-ingestion boundary (S1–S3) is out of scope offline; callers
   * land API payloads in the raw zone (`RawZone.writeRun`) and these
@@ -39,6 +52,8 @@ object Pipeline {
     val quarantine = s"$root/quarantine"
   }
 
+  private def runLogOf(root: String): String = s"$root/run_log"
+
   /** Historical-backfill start when the fact table is empty/absent
     * (reference process_wistia_data_v2.py:619).
     */
@@ -54,104 +69,124 @@ object Pipeline {
       .getOrElse(historicalStart)
     catch { case _: Exception => historicalStart }
 
-  /** §3.1 canonical batch lifecycle over the latest raw run. Returns the
-    * per-table row counts loaded (the reference logs exactly these).
+  /** Natural keys of the star tables (the fact grain is the reference's
+    * own GROUP BY, process_wistia_data_v2.py:446-452; dims key on their
+    * entity id). Used by [[runBatchIdempotent]]'s merge writes.
     */
-  def runBatch(spark: SparkSession, rawRoot: String, wh: Warehouse,
-      targetHashedIds: Seq[String],
-      ingestionTs: java.sql.Timestamp,
-      scaleDivisor: Double = WatchTime.percentScaleDivisor): Map[String, Long] = {
-    def required(entity: String, schema: org.apache.spark.sql.types.StructType) =
-      RawZone.readLatestRun(spark, rawRoot, entity, schema).getOrElse(
-        throw new IllegalStateException(s"no raw runs under $rawRoot/$entity"))
-    val rawMedia = required("media", Schemas.rawMedia)
-    val rawEvents = required("events", Schemas.rawEvent)
+  val factKey: Seq[String] = Seq("media_id", "visitor_id", "date")
+  val dimMediaKey: Seq[String] = Seq("media_id")
+  val dimVisitorKey: Seq[String] = Seq("visitor_id")
 
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val dimVisitor = Transforms.dimVisitor(rawEvents, ingestionTs)
-    val fact = Transforms.factMediaEngagement(
-      rawEvents,
-      dimMedia.select(col("media_id"), col("duration")),
-      ingestionTs, scaleDivisor)
+  /** Per-event identity the streaming merge sink keys on. date ⊆ key
+    * (derived from event_timestamp) so the merge's existing-keys scan
+    * partition-prunes to the batch's dates.
+    */
+  private val eventKey = Seq("media_id", "visitor_id", "date", "event_timestamp")
 
-    RawZone.warehouseAppend(dimMedia, wh.dimMedia)
-    RawZone.warehouseAppend(dimVisitor, wh.dimVisitor)
-    RawZone.warehouseAppend(fact, wh.fact, partitionBy = Seq("date"))
-    Map(
-      "dim_media" -> RawZone.warehouse(spark, wh.dimMedia).count(),
-      "dim_visitor" -> RawZone.warehouse(spark, wh.dimVisitor).count(),
-      "fact_media_engagement" -> RawZone.warehouse(spark, wh.fact).count())
+  // ------------------------------------------------------------ staging
+
+  private def latestRun(spark: SparkSession, rawRoot: String, entity: String,
+      schema: StructType): DataFrame =
+    RawZone.readLatestRun(spark, rawRoot, entity, schema).getOrElse(
+      throw new IllegalStateException(s"no raw runs under $rawRoot/$entity"))
+
+  /** dim_media of the LATEST media run — the reference fetches current
+    * metadata each activation; duplicated raw history would fan out the
+    * duration join.
+    */
+  private def stagedDimMedia(spark: SparkSession, rawRoot: String,
+      targetHashedIds: Seq[String], ingestionTs: java.sql.Timestamp): DataFrame =
+    Transforms.dimMedia(latestRun(spark, rawRoot, "media", Schemas.rawMedia),
+      targetHashedIds, ingestionTs)
+
+  private def durations(dimMedia: DataFrame): DataFrame =
+    dimMedia.select(col("media_id"), col("duration"))
+
+  private final case class Star(dimMedia: DataFrame, dimVisitor: DataFrame,
+      fact: DataFrame)
+
+  /** The §3.1 star of the latest raw run: both dims and the grouped fact
+    * with watch-time. `pin` localCheckpoints dim_media BEFORE the fact
+    * joins it, and the fact, so a gate's audit actions and the writes
+    * share one computation of the transforms.
+    */
+  private def stageStar(spark: SparkSession, rawRoot: String,
+      targetHashedIds: Seq[String], ingestionTs: java.sql.Timestamp,
+      scaleDivisor: Double, pin: Boolean = false): Star = {
+    def pinned(df: DataFrame) = if (pin) df.localCheckpoint() else df
+    val dimMedia = pinned(stagedDimMedia(spark, rawRoot, targetHashedIds, ingestionTs))
+    val rawEvents = latestRun(spark, rawRoot, "events", Schemas.rawEvent)
+    Star(dimMedia, Transforms.dimVisitor(rawEvents, ingestionTs),
+      pinned(Transforms.factMediaEngagement(rawEvents, durations(dimMedia),
+        ingestionTs, scaleDivisor)))
   }
 
-  /** [[runBatch]] with per-stage run history: each star write is timed
-    * and row-counted via [[graft.sources.RunLog.observedWrite]] (the
-    * count rides the write action — no post-write re-scan) and one row
-    * per stage lands in `<root>/run_log` — including the stages of a
-    * run that FAILS partway (status=failed logged before the error
-    * propagates), which is when a job log earns its keep. Returns rows
-    * written THIS run per stage (unlike [[runBatch]]'s total table
-    * counts — the log row is the per-run number, the table holds the
-    * running history).
+  /** The raw events zone as a stream — the checkpoint replaces the HWM
+    * query entirely (offsets ARE the high-water mark) — as per-event fact
+    * rows against `dimMedia`'s durations.
     */
-  def runBatchLogged(spark: SparkSession, rawRoot: String, wh: Warehouse,
-      targetHashedIds: Seq[String],
-      ingestionTs: java.sql.Timestamp,
-      scaleDivisor: Double = WatchTime.percentScaleDivisor): Map[String, Long] = {
-    def required(entity: String, schema: org.apache.spark.sql.types.StructType) =
-      RawZone.readLatestRun(spark, rawRoot, entity, schema).getOrElse(
-        throw new IllegalStateException(s"no raw runs under $rawRoot/$entity"))
-    val rawMedia = required("media", Schemas.rawMedia)
-    val rawEvents = required("events", Schemas.rawEvent)
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val dimVisitor = Transforms.dimVisitor(rawEvents, ingestionTs)
-    val fact = Transforms.factMediaEngagement(
-      rawEvents,
-      dimMedia.select(col("media_id"), col("duration")),
-      ingestionTs, scaleDivisor)
-    loggedStarWrites(spark, wh, "runBatch", ingestionTs,
-      dimMedia, dimVisitor, fact, Nil)
-  }
+  private def eventFacts(spark: SparkSession, rawRoot: String,
+      dimMedia: DataFrame, ingestionTs: java.sql.Timestamp): DataFrame =
+    Transforms.perEventFact(spark.readStream
+      .schema(Schemas.rawEvent.add(RawZone.RunColumn, "string"))
+      .json(s"$rawRoot/events"), durations(dimMedia), ingestionTs)
 
-  /** The three observed star-table writes shared by [[runBatchLogged]]
-    * and [[runBatchGated]] — ONE copy so the two lifecycles can never
-    * drift: each stage rides [[graft.sources.RunLog.observedWrite]], a
-    * failing stage appends everything logged so far (including any
-    * `prelude` entries, e.g. the gate's) plus its own failed row before
-    * the error propagates, and the returned map is stage → rows written
-    * this run (prelude entries included).
+  // ------------------------------------------------------------ writing
+
+  /** Append `df`, or with `idempotent` merge it first-write-wins on `key`
+    * so a re-run or a replayed trigger converges.
     */
-  private def loggedStarWrites(spark: SparkSession, wh: Warehouse,
-      pipeline: String, ingestionTs: java.sql.Timestamp,
-      dimMedia: org.apache.spark.sql.DataFrame,
-      dimVisitor: org.apache.spark.sql.DataFrame,
-      fact: org.apache.spark.sql.DataFrame,
-      prelude: Seq[graft.sources.RunLog.Entry]): Map[String, Long] = {
-    import graft.sources.RunLog
-    val logPath = s"${wh.root}/run_log"
-    val done = scala.collection.mutable.ArrayBuffer[RunLog.Entry](prelude: _*)
-    def stage(name: String, df: org.apache.spark.sql.DataFrame)(
-        w: org.apache.spark.sql.DataFrame => Unit): Unit =
-      try done += RunLog.observedWrite(df, ingestionTs, pipeline, name)(w)
+  private def land(path: String, key: Seq[String], idempotent: Boolean,
+      partitionBy: Seq[String] = Nil)(df: DataFrame): Unit =
+    if (idempotent) RawZone.warehouseMerge(df.sparkSession, df, path, key, partitionBy)
+    else RawZone.warehouseAppend(df, path, partitionBy)
+
+  /** One logged stage: its name, the staged frame and how it lands. */
+  private final case class Stage(name: String, df: DataFrame,
+      write: DataFrame => Unit)
+
+  private def starStages(star: Star, wh: Warehouse, idempotent: Boolean): Seq[Stage] =
+    Seq(Stage("dim_media", star.dimMedia, land(wh.dimMedia, dimMediaKey, idempotent)),
+      Stage("dim_visitor", star.dimVisitor,
+        land(wh.dimVisitor, dimVisitorKey, idempotent)),
+      Stage("fact_media_engagement", star.fact,
+        land(wh.fact, factKey, idempotent, Seq("date"))))
+
+  /** The ordered observed-write loop every lifecycle shares: each stage
+    * rides [[graft.sources.RunLog.observedWrite]]; a failing stage
+    * appends everything logged so far (the `prelude` entries, e.g. a
+    * gate's, included) plus its own failed row before the error
+    * propagates; a clean run lands all its rows in ONE append. Returns
+    * stage → rows written this run, prelude included.
+    */
+  private def observedWrites(spark: SparkSession, logPath: String,
+      pipeline: String, ingestionTs: java.sql.Timestamp, stages: Seq[Stage],
+      prelude: Seq[RunLog.Entry] = Nil): Map[String, Long] = {
+    val done = prelude.toBuffer
+    stages.foreach { s =>
+      try done += RunLog.observedWrite(s.df, ingestionTs, pipeline, s.name)(s.write)
       catch {
         case f: RunLog.LoggedFailure =>
           RunLog.append(spark, logPath, (done :+ f.entry).toSeq)
           throw f.cause
       }
-    stage("dim_media", dimMedia)(RawZone.warehouseAppend(_, wh.dimMedia))
-    stage("dim_visitor", dimVisitor)(RawZone.warehouseAppend(_, wh.dimVisitor))
-    stage("fact_media_engagement", fact)(
-      RawZone.warehouseAppend(_, wh.fact, partitionBy = Seq("date")))
+    }
     RunLog.append(spark, logPath, done.toSeq)
     done.map(e => e.stage -> e.rows).toMap
   }
 
-  /** Natural keys of the star tables (the fact grain is the reference's
-    * own GROUP BY, process_wistia_data_v2.py:446-452; dims key on their
-    * entity id). Used by [[runBatchIdempotent]] / the streaming merge sink.
+  // ------------------------------------------------------------ batch
+
+  /** §3.1 canonical batch lifecycle over the latest raw run, logged as
+    * `runBatch`.
     */
-  val factKey: Seq[String] = Seq("media_id", "visitor_id", "date")
-  val dimMediaKey: Seq[String] = Seq("media_id")
-  val dimVisitorKey: Seq[String] = Seq("visitor_id")
+  def runBatch(spark: SparkSession, rawRoot: String, wh: Warehouse,
+      targetHashedIds: Seq[String],
+      ingestionTs: java.sql.Timestamp,
+      scaleDivisor: Double = WatchTime.percentScaleDivisor): Map[String, Long] =
+    observedWrites(spark, runLogOf(wh.root), "runBatch", ingestionTs, starStages(
+      stageStar(spark, rawRoot, targetHashedIds, ingestionTs, scaleDivisor),
+      wh, idempotent = false))
 
   /** §3.1 batch lifecycle with CONVERGENT re-runs — the idiomatic fix for
     * the reference's T3 duplication hole (a retried
@@ -161,34 +196,17 @@ object Pipeline {
     * running the same raw input N times yields byte-identical warehouse
     * contents (PipelineSpec asserts exactly this). First-write-wins: a
     * re-run never rewrites history, it only fills missing keys —
-    * at-least-once delivery upgraded to effectively-once.
+    * at-least-once delivery upgraded to effectively-once. Logged as
+    * `runBatchIdempotent`; a stage's rows are the staged rows the merge
+    * was offered, not the keys it added.
     */
   def runBatchIdempotent(spark: SparkSession, rawRoot: String, wh: Warehouse,
       targetHashedIds: Seq[String],
       ingestionTs: java.sql.Timestamp,
-      scaleDivisor: Double = WatchTime.percentScaleDivisor): Map[String, Long] = {
-    def required(entity: String, schema: org.apache.spark.sql.types.StructType) =
-      RawZone.readLatestRun(spark, rawRoot, entity, schema).getOrElse(
-        throw new IllegalStateException(s"no raw runs under $rawRoot/$entity"))
-    val rawMedia = required("media", Schemas.rawMedia)
-    val rawEvents = required("events", Schemas.rawEvent)
-
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val dimVisitor = Transforms.dimVisitor(rawEvents, ingestionTs)
-    val fact = Transforms.factMediaEngagement(
-      rawEvents,
-      dimMedia.select(col("media_id"), col("duration")),
-      ingestionTs, scaleDivisor)
-
-    RawZone.warehouseMerge(spark, dimMedia, wh.dimMedia, dimMediaKey)
-    RawZone.warehouseMerge(spark, dimVisitor, wh.dimVisitor, dimVisitorKey)
-    RawZone.warehouseMerge(spark, fact, wh.fact, factKey,
-      partitionBy = Seq("date"))
-    Map(
-      "dim_media" -> RawZone.warehouse(spark, wh.dimMedia).count(),
-      "dim_visitor" -> RawZone.warehouse(spark, wh.dimVisitor).count(),
-      "fact_media_engagement" -> RawZone.warehouse(spark, wh.fact).count())
-  }
+      scaleDivisor: Double = WatchTime.percentScaleDivisor): Map[String, Long] =
+    observedWrites(spark, runLogOf(wh.root), "runBatchIdempotent", ingestionTs,
+      starStages(stageStar(spark, rawRoot, targetHashedIds, ingestionTs,
+        scaleDivisor), wh, idempotent = true))
 
   /** Catalog-table warehouse: the three star tables as `db.name`
     * identifiers instead of bare paths (reference
@@ -204,141 +222,87 @@ object Pipeline {
     * database/table bootstrap (CREATE IF NOT EXISTS — re-runnable, never
     * destructive), then the same transforms appended by table name. The
     * fact table is date-partitioned in the catalog, so the HWM query and
-    * incremental reads partition-prune through the metastore.
+    * incremental reads partition-prune through the metastore. Logged as
+    * `runBatchCatalog` in `run_log` under the database's location.
     */
   def runBatchCatalog(spark: SparkSession, rawRoot: String, wh: CatalogWarehouse,
       targetHashedIds: Seq[String],
       ingestionTs: java.sql.Timestamp,
       scaleDivisor: Double = WatchTime.percentScaleDivisor,
       dbLocation: Option[String] = None): Map[String, Long] = {
-    def required(entity: String, schema: org.apache.spark.sql.types.StructType) =
-      RawZone.readLatestRun(spark, rawRoot, entity, schema).getOrElse(
-        throw new IllegalStateException(s"no raw runs under $rawRoot/$entity"))
-    val rawMedia = required("media", Schemas.rawMedia)
-    val rawEvents = required("events", Schemas.rawEvent)
-
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val dimVisitor = Transforms.dimVisitor(rawEvents, ingestionTs)
-    val fact = Transforms.factMediaEngagement(
-      rawEvents,
-      dimMedia.select(org.apache.spark.sql.functions.col("media_id"),
-        org.apache.spark.sql.functions.col("duration")),
-      ingestionTs, scaleDivisor)
-
-    graft.sources.Catalog.ensureDatabase(spark, wh.db, dbLocation)
-    graft.sources.Catalog.ensureTable(spark, wh.dimMedia, dimMedia.schema)
-    graft.sources.Catalog.ensureTable(spark, wh.dimVisitor, dimVisitor.schema)
-    graft.sources.Catalog.ensureTable(spark, wh.fact, fact.schema,
-      partitionBy = Seq("date"))
-
-    graft.sources.Catalog.append(dimMedia, wh.dimMedia)
-    graft.sources.Catalog.append(dimVisitor, wh.dimVisitor)
-    graft.sources.Catalog.append(fact, wh.fact, partitionBy = Seq("date"))
-    Map(
-      "dim_media" -> spark.table(wh.dimMedia).count(),
-      "dim_visitor" -> spark.table(wh.dimVisitor).count(),
-      "fact_media_engagement" -> spark.table(wh.fact).count())
+    val star = stageStar(spark, rawRoot, targetHashedIds, ingestionTs, scaleDivisor)
+    Catalog.ensureDatabase(spark, wh.db, dbLocation)
+    Catalog.ensureTable(spark, wh.dimMedia, star.dimMedia.schema)
+    Catalog.ensureTable(spark, wh.dimVisitor, star.dimVisitor.schema)
+    Catalog.ensureTable(spark, wh.fact, star.fact.schema, partitionBy = Seq("date"))
+    observedWrites(spark, runLogOf(spark.catalog.getDatabase(wh.db).locationUri),
+      "runBatchCatalog", ingestionTs, Seq(
+        Stage("dim_media", star.dimMedia, Catalog.append(_, wh.dimMedia)),
+        Stage("dim_visitor", star.dimVisitor, Catalog.append(_, wh.dimVisitor)),
+        Stage("fact_media_engagement", star.fact,
+          Catalog.append(_, wh.fact, partitionBy = Seq("date")))))
   }
 
+  /** §3.2 prod incremental lifecycle: only events past HWM+1s are
+    * processed, dim_media is TRUNCATE-refreshed, fact appends per-event
+    * rows (A9 grain). Logged as `runIncremental`.
+    */
+  def runIncremental(spark: SparkSession, rawRoot: String, wh: Warehouse,
+      targetHashedIds: Seq[String],
+      ingestionTs: java.sql.Timestamp): Map[String, Long] = {
+    // events: all runs, the HWM predicate prunes re-reads
+    val rawEvents = Transforms.incrementalSince(
+      RawZone.readJson(spark, rawRoot, "events", Schemas.rawEvent),
+      effectiveSince(spark, wh))
+    val dimMedia = stagedDimMedia(spark, rawRoot, targetHashedIds, ingestionTs)
+    observedWrites(spark, runLogOf(wh.root), "runIncremental", ingestionTs, Seq(
+      Stage("dim_media", dimMedia, RawZone.warehouseOverwrite(_, wh.dimMedia)),
+      Stage("fact_media_engagement",
+        Transforms.perEventFact(rawEvents, durations(dimMedia), ingestionTs),
+        RawZone.warehouseAppend(_, wh.fact, partitionBy = Seq("date")))))
+  }
+
+  // ------------------------------------------------------------ streaming
+
   /** The §3.2 lifecycle as a Structured Streaming job (SURVEY §2.7 T5):
-    * the raw events zone is the stream source, the checkpoint replaces
-    * the HWM query entirely (offsets ARE the high-water mark), and each
+    * the raw events zone is the stream source and each
     * `Trigger.AvailableNow` activation appends exactly the new files'
     * per-event fact rows. dim_media durations broadcast from the latest
     * media run at start (the reference refreshes media per activation).
     * Returns the started query; callers `awaitTermination`.
+    *
+    * Per-TRIGGER run history: every foreachBatch activation logs one
+    * `fact_trigger_<batchId>` row under `runStreaming`, and a trigger
+    * whose sink write throws logs status=failed BEFORE the error fails
+    * the stream — so the run log tells which trigger died and how many
+    * triggers ran, the exact forensics a checkpoint restart needs.
+    *
+    * `idempotent = true` merges on the per-event natural identity: a
+    * foreachBatch retry (sink failure after a partial append) is the one
+    * at-least-once hole the checkpoint can't close, and the merge makes
+    * the retry converge. `rows` is then the trigger's BATCH size — the
+    * rows it processed, observed on the sink's input; a replayed trigger
+    * may MERGE fewer rows than it processed, so summing `rows` over an
+    * at-least-once replay history intentionally counts the replay.
     */
   def runStreaming(spark: SparkSession, rawRoot: String, wh: Warehouse,
       targetHashedIds: Seq[String],
       ingestionTs: java.sql.Timestamp,
       checkpoint: String,
-      idempotent: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    val rawMedia = RawZone.readLatestRun(spark, rawRoot, "media", Schemas.rawMedia)
-      .getOrElse(throw new IllegalStateException(s"no raw runs under $rawRoot/media"))
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val durations = dimMedia.select(col("media_id"), col("duration"))
-    val eventStream = spark.readStream
-      .schema(Schemas.rawEvent.add(RawZone.RunColumn, "string"))
-      .json(s"$rawRoot/events")
-    // Idempotent mode: a foreachBatch retry (sink failure after a partial
-    // append) is the one at-least-once hole the checkpoint can't close —
-    // merge on the per-event natural identity so the retry converges.
-    // date ⊆ key (derived from event_timestamp) so the merge's
-    // existing-keys scan partition-prunes to the batch's dates
-    val eventKey = Seq("media_id", "visitor_id", "date", "event_timestamp")
+      idempotent: Boolean = false): StreamingQuery = {
+    val logPath = runLogOf(wh.root)
+    val dimMedia = stagedDimMedia(spark, rawRoot, targetHashedIds, ingestionTs)
     graft.streaming.Streams.availableNowSink(
-      Transforms.perEventFact(eventStream, durations, ingestionTs), checkpoint) {
-      (batch, _) =>
-        if (idempotent)
-          RawZone.warehouseMerge(batch.sparkSession, batch, wh.fact, eventKey,
-            partitionBy = Seq("date"))
-        else RawZone.warehouseAppend(batch, wh.fact, partitionBy = Seq("date"))
+      eventFacts(spark, rawRoot, dimMedia, ingestionTs), checkpoint) {
+      (batch, batchId) =>
+        observedWrites(spark, logPath, "runStreaming", ingestionTs,
+          Seq(Stage(s"fact_trigger_$batchId", batch,
+            land(wh.fact, eventKey, idempotent, Seq("date")))))
+        ()
     }.start()
   }
 
-  /** §3.2 prod incremental lifecycle: only events past HWM+1s are
-    * processed, dim_media is TRUNCATE-refreshed, fact appends per-event
-    * rows (A9 grain).
-    */
-  def runIncremental(spark: SparkSession, rawRoot: String, wh: Warehouse,
-      targetHashedIds: Seq[String],
-      ingestionTs: java.sql.Timestamp): Map[String, Long] = {
-    val since = effectiveSince(spark, wh)
-    // media: latest run only — the reference fetches current metadata
-    // each activation (duplicated raw history would fan out the duration
-    // join); events: all runs, the HWM predicate prunes re-reads.
-    val rawMedia = RawZone.readLatestRun(spark, rawRoot, "media", Schemas.rawMedia)
-      .getOrElse(throw new IllegalStateException(s"no raw runs under $rawRoot/media"))
-    val rawEvents = Transforms.incrementalSince(
-      RawZone.readJson(spark, rawRoot, "events", Schemas.rawEvent), since)
-
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val fact = Transforms.perEventFact(
-      rawEvents, dimMedia.select(col("media_id"), col("duration")), ingestionTs)
-
-    RawZone.warehouseOverwrite(dimMedia, wh.dimMedia)
-    RawZone.warehouseAppend(fact, wh.fact, partitionBy = Seq("date"))
-    Map(
-      "dim_media" -> RawZone.warehouse(spark, wh.dimMedia).count(),
-      "fact_media_engagement" -> RawZone.warehouse(spark, wh.fact).count())
-  }
-
-  /** [[runIncremental]] with per-stage run history — [[runBatchLogged]]'s
-    * observed-write discipline on the §3.2 lifecycle: the dim refresh and
-    * the per-event fact append each land one row in `<root>/run_log`
-    * (rows counted ON the write action, no re-scan), and a stage that
-    * fails still logs status=failed (with the stages already done)
-    * before the error propagates. Returns rows written this run per
-    * stage.
-    */
-  def runIncrementalLogged(spark: SparkSession, rawRoot: String,
-      wh: Warehouse, targetHashedIds: Seq[String],
-      ingestionTs: java.sql.Timestamp): Map[String, Long] = {
-    import graft.sources.RunLog
-    val logPath = s"${wh.root}/run_log"
-    val since = effectiveSince(spark, wh)
-    val rawMedia = RawZone.readLatestRun(spark, rawRoot, "media", Schemas.rawMedia)
-      .getOrElse(throw new IllegalStateException(s"no raw runs under $rawRoot/media"))
-    val rawEvents = Transforms.incrementalSince(
-      RawZone.readJson(spark, rawRoot, "events", Schemas.rawEvent), since)
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val fact = Transforms.perEventFact(
-      rawEvents, dimMedia.select(col("media_id"), col("duration")), ingestionTs)
-    val done = scala.collection.mutable.ArrayBuffer[RunLog.Entry]()
-    def stage(name: String, df: org.apache.spark.sql.DataFrame)(
-        w: org.apache.spark.sql.DataFrame => Unit): Unit =
-      try done += RunLog.observedWrite(df, ingestionTs, "runIncremental", name)(w)
-      catch {
-        case f: RunLog.LoggedFailure =>
-          RunLog.append(spark, logPath, (done :+ f.entry).toSeq)
-          throw f.cause
-      }
-    stage("dim_media", dimMedia)(RawZone.warehouseOverwrite(_, wh.dimMedia))
-    stage("fact_media_engagement", fact)(
-      RawZone.warehouseAppend(_, wh.fact, partitionBy = Seq("date")))
-    RunLog.append(spark, logPath, done.toSeq)
-    done.map(e => e.stage -> e.rows).toMap
-  }
+  // ------------------------------------------------------------ gates
 
   /** The staged-batch DQ EXPECTATION SUITE the promotion gate runs —
     * q57's audit posture (one row per expectation: table, check,
@@ -359,16 +323,15 @@ object Pipeline {
     * frames — the audit actions and the subsequent writes must not
     * recompute the transform lineage.
     */
-  def batchExpectations(dimMedia: org.apache.spark.sql.DataFrame,
-      fact: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  def batchExpectations(dimMedia: DataFrame, fact: DataFrame): DataFrame =
     dimExpectations(dimMedia).unionByName(factExpectations(dimMedia, fact))
 
   // coalesce every sum in the audits: over an EMPTY staged frame sum()
   // is NULL, and a null violations/pass row is an expectation that
   // neither passed nor failed — an empty batch must audit as 0
   // violations, checked 0
-  private def reshapeAudit(agg1: org.apache.spark.sql.DataFrame, tbl: String,
-      checks: Seq[String]): org.apache.spark.sql.DataFrame =
+  private def reshapeAudit(agg1: DataFrame, tbl: String,
+      checks: Seq[String]): DataFrame =
     agg1.select(explode(array(checks.map(name =>
       struct(lit(tbl).as("tbl"), lit(name).as("chk"),
         col(name).cast("long").as("violations"),
@@ -380,8 +343,7 @@ object Pipeline {
     * lifetime, so [[runStreamingGated]] audits it once up front instead
     * of re-reporting the identical dim verdict on every trigger.
     */
-  def dimExpectations(
-      dimMedia: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  def dimExpectations(dimMedia: DataFrame): DataFrame =
     reshapeAudit(dimMedia.agg(
       count(lit(1)).as("n"),
       (count(lit(1)) - count_distinct(col("media_id"))).as("dup_media_id"),
@@ -390,39 +352,30 @@ object Pipeline {
       "dim_media", Seq("dup_media_id", "negative_duration"))
 
   /** One fact-side expectation as ONE value: its name, how the gate
-    * AUDITS it, and how the quarantine CAPTURES its violating rows —
-    * packaged together so the two cannot drift (the r15 shape kept the
-    * predicates shared but the audit's name list and the quarantine's
-    * match arms separate: adding an expectation to one without the
-    * other silently degraded quarantine to a logged best-effort
-    * failure). Now the audit derives its names FROM [[factChecks]] and
-    * the quarantine looks its capture up IN [[factChecks]], so every
-    * audited fact expectation has a capture by construction
-    * (PipelineSpec pins the subset relation).
+    * AUDITS it, and how the quarantine CAPTURES its violating rows. The
+    * audit derives its names FROM [[factChecks]] and the quarantine looks
+    * its capture up IN [[factChecks]], so every audited fact expectation
+    * has a capture by construction — an expectation added to one side
+    * only would silently degrade quarantine to a logged best-effort
+    * failure (PipelineSpec pins the subset relation).
     */
   private[wistia] sealed trait FactCheck {
     def name: String
-    def capture(dimMedia: org.apache.spark.sql.DataFrame,
-        fact: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame
+    def capture(dimMedia: DataFrame, fact: DataFrame): DataFrame
   }
   /** Per-row predicate: audited as a conditional sum inside the single
     * fact-scan aggregate, captured as the matching rows.
     */
   private final case class RowCheck(name: String,
       pred: org.apache.spark.sql.Column) extends FactCheck {
-    def capture(dimMedia: org.apache.spark.sql.DataFrame,
-        fact: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      fact.filter(pred)
+    def capture(dimMedia: DataFrame, fact: DataFrame): DataFrame = fact.filter(pred)
   }
   /** Frame-level check (joins against the staged dim): audited as the
     * frame's count, captured as the frame itself.
     */
   private final case class FrameCheck(name: String,
-      frame: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
-        org.apache.spark.sql.DataFrame) extends FactCheck {
-    def capture(dimMedia: org.apache.spark.sql.DataFrame,
-        fact: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      frame(dimMedia, fact)
+      frame: (DataFrame, DataFrame) => DataFrame) extends FactCheck {
+    def capture(dimMedia: DataFrame, fact: DataFrame): DataFrame = frame(dimMedia, fact)
   }
 
   private[wistia] val factChecks: Seq[FactCheck] = Seq(
@@ -435,13 +388,10 @@ object Pipeline {
   /** The fact-side half of [[batchExpectations]] — the per-batch/
     * per-trigger checks (domain + referential integrity vs the staged
     * dim, which rides broadcast in the anti-join). Derived entirely
-    * from [[factChecks]]: the plan shape is unchanged (row predicates
-    * fold into ONE fact scan's conditional sums; each frame check is
-    * its own count), only the definition site is now shared with the
-    * quarantine capture.
+    * from [[factChecks]]: row predicates fold into ONE fact scan's
+    * conditional sums; each frame check is its own count.
     */
-  def factExpectations(dimMedia: org.apache.spark.sql.DataFrame,
-      fact: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def factExpectations(dimMedia: DataFrame, fact: DataFrame): DataFrame = {
     val rowChecks = factChecks.collect { case c: RowCheck => c }
     val frameChecks = factChecks.collect { case c: FrameCheck => c }
     val fAgg = fact.agg(
@@ -466,33 +416,29 @@ object Pipeline {
     */
   private def gateOrThrow(spark: SparkSession, logPath: String,
       pipeline: String, stage: String, ingestionTs: java.sql.Timestamp,
-      audit: Array[org.apache.spark.sql.Row],
-      t0: Long): graft.sources.RunLog.Entry = {
-    import graft.sources.RunLog
+      audit: Array[Row], t0: Long): RunLog.Entry = {
     val bad = audit.filter(_.getAs[Long]("violations") > 0L)
     if (bad.nonEmpty) {
       val msg = bad.map(r => s"${r.getAs[String]("tbl")}.${r.getAs[String]("chk")}" +
         s"=${r.getAs[Long]("violations")}").mkString(", ")
-      RunLog.append(spark, logPath, Seq(RunLog.Entry(ingestionTs,
-        pipeline, stage, bad.map(_.getAs[Long]("violations")).sum,
-        (System.nanoTime() - t0) / 1000000L, "failed",
-        s"expectations failed: $msg".take(500))))
+      RunLog.append(spark, logPath, Seq(RunLog.entry(ingestionTs, pipeline, stage,
+        bad.map(_.getAs[Long]("violations")).sum, t0, "failed",
+        s"expectations failed: $msg")))
       throw new IllegalStateException(
         s"$stage: batch rejected, nothing written — $msg")
     }
-    RunLog.Entry(ingestionTs, pipeline, stage, audit.length.toLong,
-      (System.nanoTime() - t0) / 1000000L, "ok", "")
+    RunLog.entry(ingestionTs, pipeline, stage, audit.length.toLong, t0)
   }
 
-  /** [[runBatchLogged]] behind a PROMOTION GATE — the dbt-test/
-    * Great-Expectations posture the r13 audit asked for: the DQ
-    * expectation suite runs against the STAGED batch BEFORE any
-    * warehouse write, and a violating batch never lands. A failed gate
-    * appends ONE run-log row (stage `dq_gate`, status=failed, rows = the
-    * total violation count, error naming every failing expectation) and
-    * throws; a clean gate logs `dq_gate` ok and proceeds through exactly
-    * [[runBatchLogged]]'s observed-write stages (PipelineSpec pins that
-    * a clean gated run's warehouse bytes equal an ungated run's).
+  /** [[runBatch]] behind a PROMOTION GATE (the dbt-test /
+    * Great-Expectations posture): the DQ expectation suite runs against
+    * the STAGED batch BEFORE any warehouse write, and a violating batch
+    * never lands. A failed gate appends ONE run-log row (stage `dq_gate`,
+    * status=failed, rows = the total violation count, error naming every
+    * failing expectation) and throws; a clean gate logs `dq_gate` ok and
+    * proceeds through exactly [[runBatch]]'s observed-write stages
+    * (PipelineSpec pins that a clean gated run's warehouse rows equal an
+    * ungated run's).
     *
     * Cost: the staged frames are pinned once (localCheckpoint — batch-
     * sized) so the audit actions and the writes share one computation of
@@ -503,92 +449,30 @@ object Pipeline {
       targetHashedIds: Seq[String],
       ingestionTs: java.sql.Timestamp,
       scaleDivisor: Double = WatchTime.percentScaleDivisor): Map[String, Long] = {
-    import graft.sources.RunLog
-    val logPath = s"${wh.root}/run_log"
-    def required(entity: String, schema: org.apache.spark.sql.types.StructType) =
-      RawZone.readLatestRun(spark, rawRoot, entity, schema).getOrElse(
-        throw new IllegalStateException(s"no raw runs under $rawRoot/$entity"))
-    val rawMedia = required("media", Schemas.rawMedia)
-    val rawEvents = required("events", Schemas.rawEvent)
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-      .localCheckpoint()
-    val dimVisitor = Transforms.dimVisitor(rawEvents, ingestionTs)
-    val fact = Transforms.factMediaEngagement(
-      rawEvents,
-      dimMedia.select(col("media_id"), col("duration")),
-      ingestionTs, scaleDivisor).localCheckpoint()
+    val logPath = runLogOf(wh.root)
+    val star = stageStar(spark, rawRoot, targetHashedIds, ingestionTs,
+      scaleDivisor, pin = true)
     try {
       val t0 = System.nanoTime()
-      val audit = batchExpectations(dimMedia, fact)
+      val audit = batchExpectations(star.dimMedia, star.fact)
         .collect() // bounded: one row per expectation
       val gateEntry = gateOrThrow(spark, logPath, "runBatchGated", "dq_gate",
         ingestionTs, audit, t0)
-      loggedStarWrites(spark, wh, "runBatchGated", ingestionTs,
-        dimMedia, dimVisitor, fact, Seq(gateEntry))
+      observedWrites(spark, logPath, "runBatchGated", ingestionTs,
+        starStages(star, wh, idempotent = false), Seq(gateEntry))
     } finally
-      Seq(dimMedia, fact).foreach(_.unpersist(blocking = false))
+      Seq(star.dimMedia, star.fact).foreach(_.unpersist(blocking = false))
   }
 
-  /** [[runStreaming]] with per-TRIGGER run history: every foreachBatch
-    * activation logs one `fact_trigger_<batchId>` row, and a trigger
-    * whose sink write throws logs status=failed BEFORE the error fails
-    * the stream — so the run log tells which trigger died and how many
-    * triggers ran, the exact forensics a checkpoint restart needs. The
-    * micro-batch pattern makes "one Entry per trigger per stage" the
-    * streaming twin of [[runBatchLogged]]'s one-per-stage.
-    *
-    * `rows` semantics: the trigger's BATCH size — the rows the trigger
-    * processed, observed on the sink's input. For the plain append sink
-    * that equals rows landed; under `idempotent = true` a replayed
-    * trigger may MERGE fewer rows than it processed (the merge dedups
-    * against what already landed), so the log row is input accounting,
-    * not a landed-row count — summing `rows` over an at-least-once
-    * replay history intentionally counts the replay.
-    */
-  def runStreamingLogged(spark: SparkSession, rawRoot: String, wh: Warehouse,
-      targetHashedIds: Seq[String],
-      ingestionTs: java.sql.Timestamp,
-      checkpoint: String,
-      idempotent: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.RunLog
-    val logPath = s"${wh.root}/run_log"
-    val rawMedia = RawZone.readLatestRun(spark, rawRoot, "media", Schemas.rawMedia)
-      .getOrElse(throw new IllegalStateException(s"no raw runs under $rawRoot/media"))
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
-    val durations = dimMedia.select(col("media_id"), col("duration"))
-    val eventStream = spark.readStream
-      .schema(Schemas.rawEvent.add(RawZone.RunColumn, "string"))
-      .json(s"$rawRoot/events")
-    val eventKey = Seq("media_id", "visitor_id", "date", "event_timestamp")
-    graft.streaming.Streams.availableNowSink(
-      Transforms.perEventFact(eventStream, durations, ingestionTs), checkpoint) {
-      (batch, batchId) =>
-        val entry =
-          try RunLog.observedWrite(batch, ingestionTs, "runStreaming",
-            s"fact_trigger_$batchId") { b =>
-            if (idempotent)
-              RawZone.warehouseMerge(b.sparkSession, b, wh.fact, eventKey,
-                partitionBy = Seq("date"))
-            else RawZone.warehouseAppend(b, wh.fact, partitionBy = Seq("date"))
-          }
-          catch {
-            case f: RunLog.LoggedFailure =>
-              RunLog.append(spark, logPath, Seq(f.entry))
-              throw f.cause
-          }
-        RunLog.append(spark, logPath, Seq(entry))
-    }.start()
-  }
-
-  /** [[runStreamingLogged]] behind the promotion gate — the streaming
-    * twin of [[runBatchGated]] ("fail the trigger, don't land the
-    * batch"), split along what can actually change per trigger: the
-    * DIM-side expectations ([[dimExpectations]]) run ONCE before the
-    * stream starts, because the staged dim is immutable for the query's
-    * lifetime — a poisoned dim rejects at startup (`dq_gate_dim`
-    * failed row + throw) instead of re-reporting the identical verdict
-    * every trigger; the FACT-side expectations ([[factExpectations]]:
-    * percent domain + orphan-media RI vs the broadcast dim) audit every
+  /** [[runStreaming]] behind the promotion gate — the streaming twin of
+    * [[runBatchGated]] ("fail the trigger, don't land the batch"), split
+    * along what can actually change per trigger: the DIM-side
+    * expectations ([[dimExpectations]]) run ONCE before the stream
+    * starts, because the staged dim is immutable for the query's
+    * lifetime — a poisoned dim rejects at startup (`dq_gate_dim` failed
+    * row + throw) instead of re-reporting the identical verdict every
+    * trigger; the FACT-side expectations ([[factExpectations]]: percent
+    * domain + orphan-media RI vs the broadcast dim) audit every
     * micro-batch before its sink write through the shared
     * [[gateOrThrow]] decision. A violating trigger logs one failed
     * `dq_gate_trigger_<batchId>` row naming the expectations and THROWS
@@ -630,18 +514,15 @@ object Pipeline {
       ingestionTs: java.sql.Timestamp,
       checkpoint: String,
       idempotent: Boolean = false,
-      quarantine: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.RunLog
-    val logPath = s"${wh.root}/run_log"
-    val rawMedia = RawZone.readLatestRun(spark, rawRoot, "media", Schemas.rawMedia)
-      .getOrElse(throw new IllegalStateException(s"no raw runs under $rawRoot/media"))
+      quarantine: Boolean = false): StreamingQuery = {
+    val logPath = runLogOf(wh.root)
     // the immutable dim pins ONCE (localCheckpoint, dim-sized) BEFORE its
     // gate, so the startup verdict covers exactly the frame every trigger
     // then audits against and joins — not a per-trigger recomputation of
     // the raw-JSON-read + transform lineage. The pinned blocks live for
     // the query's lifetime (the returned StreamingQuery owns them); only
     // a REJECTED dim unpersists here, since no query starts.
-    val dimMedia = Transforms.dimMedia(rawMedia, targetHashedIds, ingestionTs)
+    val dimMedia = stagedDimMedia(spark, rawRoot, targetHashedIds, ingestionTs)
       .localCheckpoint()
     // dim gate at startup: one bounded audit of the immutable staged dim
     val tDim = System.nanoTime()
@@ -652,13 +533,8 @@ object Pipeline {
         dimMedia.unpersist(blocking = false); throw e
       }
     RunLog.append(spark, logPath, Seq(dimGate))
-    val durations = dimMedia.select(col("media_id"), col("duration"))
-    val eventStream = spark.readStream
-      .schema(Schemas.rawEvent.add(RawZone.RunColumn, "string"))
-      .json(s"$rawRoot/events")
-    val eventKey = Seq("media_id", "visitor_id", "date", "event_timestamp")
     val query = graft.streaming.Streams.availableNowSink(
-      Transforms.perEventFact(eventStream, durations, ingestionTs), checkpoint) {
+      eventFacts(spark, rawRoot, dimMedia, ingestionTs), checkpoint) {
       (batch0, batchId) =>
         val batch = batch0.localCheckpoint()
         try {
@@ -669,6 +545,7 @@ object Pipeline {
             // per (event, failed expectation), same predicates the
             // audit counted. Best-effort: its own failure logs and
             // yields to the gate verdict below.
+            val stage = s"quarantine_trigger_$batchId"
             try {
               val failing = audit.filter(_.getAs[Long]("violations") > 0L)
                 .map(_.getAs[String]("chk")).toSeq
@@ -685,58 +562,40 @@ object Pipeline {
               }.reduce(_ unionByName _)
                 .withColumn("batch_id", lit(batchId))
                 .withColumn("quarantined_run_ts", lit(ingestionTs))
+              // mirror the fact sink's replay semantics: under
+              // idempotent=true a restarted stream replays the same
+              // poisoned trigger and the dead-letter rows must converge,
+              // not duplicate — keyed on the event key plus the failed
+              // expectation and batch id
               val qEntry = RunLog.observedWrite(qRows, ingestionTs,
-                "runStreamingGated", s"quarantine_trigger_$batchId") { b =>
-                // mirror the fact sink's replay semantics: under
-                // idempotent=true a restarted stream replays the same
-                // poisoned trigger and the dead-letter rows must
-                // converge, not duplicate — keyed on the event key plus
-                // the failed expectation and batch id
-                if (idempotent)
-                  RawZone.warehouseMerge(b.sparkSession, b, wh.quarantine,
-                    eventKey ++ Seq("failed_check", "batch_id"))
-                else RawZone.warehouseAppend(b, wh.quarantine)
-              }
+                "runStreamingGated", stage)(land(wh.quarantine,
+                  eventKey ++ Seq("failed_check", "batch_id"), idempotent))
               RunLog.append(spark, logPath, Seq(qEntry))
             } catch {
               case f: RunLog.LoggedFailure =>
                 RunLog.append(spark, logPath, Seq(f.entry))
-              case scala.util.control.NonFatal(qe) =>
-                RunLog.append(spark, logPath, Seq(RunLog.Entry(ingestionTs,
-                  "runStreamingGated", s"quarantine_trigger_$batchId", -1L,
-                  (System.nanoTime() - t0) / 1000000L, "failed",
-                  Option(qe.toString).getOrElse("").take(500))))
+              case NonFatal(qe) =>
+                RunLog.append(spark, logPath, Seq(RunLog.failed(ingestionTs,
+                  "runStreamingGated", stage, t0, qe)))
             }
           }
           val gateEntry = gateOrThrow(spark, logPath, "runStreamingGated",
             s"dq_gate_trigger_$batchId", ingestionTs, audit, t0)
-          val entry =
-            try RunLog.observedWrite(batch, ingestionTs, "runStreamingGated",
-              s"fact_trigger_$batchId") { b =>
-              if (idempotent)
-                RawZone.warehouseMerge(b.sparkSession, b, wh.fact, eventKey,
-                  partitionBy = Seq("date"))
-              else RawZone.warehouseAppend(b, wh.fact, partitionBy = Seq("date"))
-            }
-            catch {
-              case f: RunLog.LoggedFailure =>
-                RunLog.append(spark, logPath, Seq(gateEntry, f.entry))
-                throw f.cause
-            }
-          RunLog.append(spark, logPath, Seq(gateEntry, entry))
+          observedWrites(spark, logPath, "runStreamingGated", ingestionTs,
+            Seq(Stage(s"fact_trigger_$batchId", batch,
+              land(wh.fact, eventKey, idempotent, Seq("date")))), Seq(gateEntry))
+          ()
         } finally batch.unpersist(blocking = false)
     }.start()
     // the pinned dim lives exactly as long as its query: an orchestrator
     // looping activations in one session must not accumulate dim-sized
     // checkpoint blocks (the dropPersisted cliff) — release on
     // termination, then retire the listener
-    val dimRelease = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
+    val dimRelease = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         if (e.id == query.id) {
           dimMedia.unpersist(blocking = false)
           spark.streams.removeListener(this)
@@ -794,8 +653,7 @@ object Pipeline {
   final case class RetentionPolicy(
       rawRuns: Seq[(String, String, Int)] = Nil,
       rawRunsLanded: Seq[(String, String, Int, String)] = Nil,
-      rawRunsHwm: Seq[(String, String, Int, String,
-        org.apache.spark.sql.types.StructType)] = Nil,
+      rawRunsHwm: Seq[(String, String, Int, String, StructType)] = Nil,
       warehousePartitions: Seq[(String, String, String)] = Nil,
       stores: Seq[(String, Int, Int)] = Nil,
       vecRecall: Seq[(String, Int, Long)] = Nil)
@@ -819,24 +677,14 @@ object Pipeline {
   def runRetention(spark: SparkSession, policy: RetentionPolicy,
       runLogPath: String,
       runTs: java.sql.Timestamp = new java.sql.Timestamp(
-        System.currentTimeMillis())): Seq[graft.sources.RunLog.Entry] = {
-    import graft.sources.{Catalog, RawZone, RunLog, Snapshots}
+        System.currentTimeMillis())): Seq[RunLog.Entry] = {
     val entries = scala.collection.mutable.Buffer[RunLog.Entry]()
+    // RunLog's failure rule: an ordinary failed leg is logged and the
+    // walk continues; a fatal throwable propagates unlogged
     def leg(stage: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()
-      // NonFatal only: an ordinary failed leg is logged and the walk
-      // continues, but VM death (OOM) or a job cancellation must
-      // propagate — demoting those to a routine "failed" row and then
-      // submitting three more Spark legs in a broken JVM masks them
-      val e = try RunLog.Entry(runTs, "retention", stage, body,
-          (System.nanoTime() - t0) / 1000000L, "ok", "")
-        catch {
-          case scala.util.control.NonFatal(err) =>
-            RunLog.Entry(runTs, "retention", stage,
-              -1L, (System.nanoTime() - t0) / 1000000L, "failed",
-              Option(err.toString).getOrElse("").take(500))
-        }
-      entries += e
+      entries += (try RunLog.entry(runTs, "retention", stage, body, t0)
+        catch { case NonFatal(err) => RunLog.failed(runTs, "retention", stage, t0, err) })
     }
     policy.rawRuns.foreach { case (root, entity, keep) =>
       leg(s"prune_raw:$entity") {
@@ -851,7 +699,7 @@ object Pipeline {
       leg(s"prune_raw_hwm:$entity") {
         // a fact table not yet created is the extreme lagging consumer:
         // hwm = None and the prune is blocked, not failed
-        val fp = new org.apache.hadoop.fs.Path(factPath)
+        val fp = new Path(factPath)
         val hwm =
           if (!fp.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .exists(fp)) None
@@ -865,13 +713,13 @@ object Pipeline {
           .size.toLong }
     }
     policy.stores.foreach { case (root, maxLayers, keep) =>
-      leg(s"maintain_store:${new org.apache.hadoop.fs.Path(root).getName}") {
+      leg(s"maintain_store:${new Path(root).getName}") {
         val m = Snapshots.maintain(spark, root, maxLayers, keep)
         m.vacuumed.size.toLong
       }
     }
     policy.vecRecall.foreach { case (root, sampleN, floorE6) =>
-      val name = new org.apache.hadoop.fs.Path(root).getName
+      val name = new Path(root).getName
       var measured = -1L
       leg(s"vec_recall:$name") {
         measured = math.round(graft.operators.VecStore.recallProbe(
@@ -889,7 +737,7 @@ object Pipeline {
           // rows = vectors retrained — the trail's units-of-work shape
           // (every other leg reports work done, never an opaque
           // version number)
-          graft.sources.Snapshots.readTable(spark, root, "vec_params")
+          Snapshots.readTable(spark, root, "vec_params")
             .collect().head.getAs[Long]("n_corpus")
         }
     }

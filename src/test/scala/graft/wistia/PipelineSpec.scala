@@ -45,9 +45,10 @@ class PipelineSpec extends SparkSpec {
       eventJson("e2", "v1", "abc", "2024-03-01T10:00:20Z", 0.5),
       eventJson("e3", "v2", "xyz", "2024-03-02T09:00:00Z", 0.0)))
 
-    val counts = Pipeline.runBatch(spark, s"$dir/raw", wh,
+    val written = Pipeline.runBatch(spark, s"$dir/raw", wh,
       targetHashedIds = Seq("abc", "xyz"), ingestionTs = ts0, scaleDivisor = 1.0)
-    assert(counts === Map(
+    // returns per-RUN rows (== table totals on a first run)
+    assert(written === Map(
       "dim_media" -> 2L, "dim_visitor" -> 2L, "fact_media_engagement" -> 2L))
 
     val fact = RawZone.warehouse(spark, wh.fact)
@@ -65,11 +66,13 @@ class PipelineSpec extends SparkSpec {
       .filter(col("media_id") === "abc").select("channel").collect().head.getString(0)
       === "Facebook")
 
-    // second run appends (faithful T3 duplication)
-    val counts2 = Pipeline.runBatch(spark, s"$dir/raw", wh,
+    // second run appends (faithful T3 duplication): the tables double,
+    // the run reports its own rows
+    val written2 = Pipeline.runBatch(spark, s"$dir/raw", wh,
       Seq("abc", "xyz"), ts0, scaleDivisor = 1.0)
-    assert(counts2("fact_media_engagement") === 4L)
-    assert(counts2("dim_media") === 4L)
+    assert(written2 === written)
+    assert(RawZone.warehouse(spark, wh.fact).count() === 4L)
+    assert(RawZone.warehouse(spark, wh.dimMedia).count() === 4L)
   }
 
   test("runBatchLogged: per-stage run history rides the writes; failures are logged too") {
@@ -80,9 +83,9 @@ class PipelineSpec extends SparkSpec {
       eventJson("e1", "v1", "abc", "2024-03-01T10:00:00Z", 0.2),
       eventJson("e2", "v1", "abc", "2024-03-01T10:00:20Z", 0.5),
       eventJson("e3", "v2", "xyz", "2024-03-02T09:00:00Z", 0.0)))
-    val written = Pipeline.runBatchLogged(spark, s"$dir/raw", wh,
+    // every runBatch is logged: no separate logged variant
+    val written = Pipeline.runBatch(spark, s"$dir/raw", wh,
       targetHashedIds = Seq("abc", "xyz"), ingestionTs = ts0, scaleDivisor = 1.0)
-    // returns per-RUN rows (== table totals on a first run)
     assert(written === Map(
       "dim_media" -> 2L, "dim_visitor" -> 2L, "fact_media_engagement" -> 2L))
     val log1 = graft.sources.RunLog.read(spark, s"${wh.root}/run_log")
@@ -93,7 +96,7 @@ class PipelineSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap === written)
     assert(log1.filter(col("millis") < 0L).count() === 0L)
     // second run appends 3 more history rows (T3-faithful writes)
-    Pipeline.runBatchLogged(spark, s"$dir/raw", wh, Seq("abc", "xyz"), ts0,
+    Pipeline.runBatch(spark, s"$dir/raw", wh, Seq("abc", "xyz"), ts0,
       scaleDivisor = 1.0)
     assert(graft.sources.RunLog.read(spark, s"${wh.root}/run_log").count() === 6L)
 
@@ -107,7 +110,7 @@ class PipelineSpec extends SparkSpec {
     Files.createDirectories(java.nio.file.Paths.get(wh2.root))
     Files.createFile(java.nio.file.Paths.get(wh2.fact))
     intercept[Exception] {
-      Pipeline.runBatchLogged(spark, s"$dir2/raw", wh2, Seq("abc"), ts0,
+      Pipeline.runBatch(spark, s"$dir2/raw", wh2, Seq("abc"), ts0,
         scaleDivisor = 1.0)
     }
     val log2 = graft.sources.RunLog.read(spark, s"${wh2.root}/run_log")
@@ -144,7 +147,12 @@ class PipelineSpec extends SparkSpec {
     // re-run: CREATE IF NOT EXISTS is a no-op, appends accumulate (T3)
     val counts2 = Pipeline.runBatchCatalog(spark, s"$dir/raw", wh,
       Seq("abc", "xyz"), ts0, scaleDivisor = 1.0, dbLocation = Some(s"$dir/db"))
-    assert(counts2("fact_media_engagement") === 4L)
+    assert(counts2 === counts) // rows written this run
+    assert(spark.table(wh.fact).count() === 4L)
+    // both runs logged their stages under the database's location
+    val log = graft.sources.RunLog.read(spark, s"$dir/db/run_log").collect()
+    assert(log.length === 6)
+    assert(log.forall(_.getAs[String]("status") == "ok"))
 
     // K5 catalog analogue: TRUNCATE + reload keeps the table object
     // (detach the reload frame from the table — TRUNCATE invalidates
@@ -182,6 +190,57 @@ class PipelineSpec extends SparkSpec {
       .count() === 1)
   }
 
+  test("runStreamingLogged: one run-log row per trigger incl. a failed trigger") {
+    val dir = Files.createTempDirectory("pipeline_strlog").toString
+    val wh = Pipeline.Warehouse(s"$dir/wh")
+    val ts0 = Timestamp.valueOf("2025-05-01 00:00:00")
+    writeRaw(s"$dir/raw", "20250501_000000", Seq(
+      eventJson("e1", "v1", "abc", "2024-03-01T10:00:00Z", 0.2),
+      eventJson("e2", "v1", "abc", "2024-03-01T10:00:20Z", 0.5)))
+    // every runStreaming trigger is logged: no separate logged variant
+    val q1 = Pipeline.runStreaming(spark, s"$dir/raw", wh,
+      Seq("abc", "xyz"), ts0, s"$dir/ckpt")
+    q1.awaitTermination(60000)
+    assert(RawZone.warehouse(spark, wh.fact).count() === 2)
+    val log1 = graft.sources.RunLog.read(spark, s"${wh.root}/run_log")
+      .filter(col("pipeline") === "runStreaming").collect()
+    assert(log1.length === 1)
+    assert(log1(0).getAs[String]("stage").startsWith("fact_trigger_"))
+    assert(log1(0).getAs[String]("status") === "ok")
+    assert(log1(0).getAs[Long]("rows") === 2L)
+
+    // second activation = a new trigger, a new log row with the new
+    // batch's own count
+    writeRaw(s"$dir/raw", "20250502_000000", Seq(
+      eventJson("e3", "v2", "abc", "2024-03-01T11:00:00Z", 0.6)))
+    val q2 = Pipeline.runStreaming(spark, s"$dir/raw", wh,
+      Seq("abc", "xyz"), ts0, s"$dir/ckpt")
+    q2.awaitTermination(60000)
+    val log2 = graft.sources.RunLog.read(spark, s"${wh.root}/run_log")
+      .filter(col("pipeline") === "runStreaming")
+      .orderBy("stage").collect()
+    assert(log2.length === 2)
+    assert(log2.map(_.getAs[Long]("rows")).toSeq === Seq(2L, 1L))
+
+    // failed trigger: block the fact path — the stream dies AND the
+    // failed trigger is in the log (status=failed, rows=-1), which is
+    // exactly the forensic a checkpoint restart needs
+    val dir2 = Files.createTempDirectory("pipeline_strlogfail").toString
+    val wh2 = Pipeline.Warehouse(s"$dir2/wh")
+    writeRaw(s"$dir2/raw", "20250501_000000", Seq(
+      eventJson("e1", "v1", "abc", "2024-03-01T10:00:00Z", 0.2)))
+    Files.createDirectories(java.nio.file.Paths.get(wh2.root))
+    Files.createFile(java.nio.file.Paths.get(wh2.fact))
+    val q3 = Pipeline.runStreaming(spark, s"$dir2/raw", wh2,
+      Seq("abc"), ts0, s"$dir2/ckpt")
+    intercept[Exception] { q3.awaitTermination(60000); q3.stop() }
+    val log3 = graft.sources.RunLog.read(spark, s"${wh2.root}/run_log").collect()
+    assert(log3.length === 1)
+    assert(log3(0).getAs[String]("status") === "failed")
+    assert(log3(0).getAs[Long]("rows") === -1L)
+    assert(log3(0).getAs[String]("stage") === "fact_trigger_0")
+  }
+
   test("runBatchIdempotent: re-running the same input converges (T3 fixed)") {
     val dir = Files.createTempDirectory("pipeline_idem").toString
     val wh = Pipeline.Warehouse(s"$dir/wh")
@@ -203,8 +262,9 @@ class PipelineSpec extends SparkSpec {
     val f1 = snapshot(wh.fact); val m1 = snapshot(wh.dimMedia)
     val v1 = snapshot(wh.dimVisitor)
 
-    // re-run the SAME raw input: counts and contents must be unchanged
-    // (the faithful runBatch doubles everything here — see the T3 test)
+    // re-run the SAME raw input: the same rows are offered and the
+    // contents must be unchanged (the faithful runBatch doubles
+    // everything here — see the T3 test)
     val c2 = Pipeline.runBatchIdempotent(spark, s"$dir/raw", wh,
       Seq("abc", "xyz"), ts0, scaleDivisor = 1.0)
     assert(c2 === c1)
@@ -219,8 +279,11 @@ class PipelineSpec extends SparkSpec {
       eventJson("e5", "v3", "xyz", "2024-03-03T08:00:00Z", 0.4))) // new key
     val c3 = Pipeline.runBatchIdempotent(spark, s"$dir/raw", wh,
       Seq("abc", "xyz"), ts0, scaleDivisor = 1.0)
-    assert(c3("fact_media_engagement") === 3L)
-    assert(c3("dim_visitor") === 3L)
+    // the run reports the staged rows it offered the merge; the tables
+    // gained only the new keys
+    assert(c3("fact_media_engagement") === 2L)
+    assert(RawZone.warehouse(spark, wh.fact).count() === 3L)
+    assert(RawZone.warehouse(spark, wh.dimVisitor).count() === 3L)
     // overlap kept its first-run values (e4's 0.9 did not overwrite)
     val kept = RawZone.warehouse(spark, wh.fact)
       .filter(col("media_id") === "abc" && col("visitor_id") === "v1")
@@ -396,8 +459,7 @@ class PipelineSpec extends SparkSpec {
 
     // first incremental run: empty warehouse → historical start, both events land
     val c1 = Pipeline.runIncremental(spark, s"$dir/raw", wh, Seq("abc", "xyz"), ts0)
-    assert(c1("fact_media_engagement") === 2L)
-    assert(c1("dim_media") === 2L)
+    assert(c1 === Map("dim_media" -> 2L, "fact_media_engagement" -> 2L))
 
     // new run adds one event strictly after the HWM (+1s buffer excludes
     // the old ones) — only it is appended; dim stays truncate-refreshed
@@ -406,8 +468,10 @@ class PipelineSpec extends SparkSpec {
       eventJson("e2", "v1", "abc", "2024-03-01T10:00:20Z", 0.5), // old (= HWM)
       eventJson("e3", "v2", "abc", "2024-03-01T10:00:25Z", 0.6))) // new
     val c2 = Pipeline.runIncremental(spark, s"$dir/raw", wh, Seq("abc", "xyz"), ts0)
-    assert(c2("fact_media_engagement") === 3L)
-    assert(c2("dim_media") === 2L)
+    // per-RUN rows: only the new event counts
+    assert(c2 === Map("dim_media" -> 2L, "fact_media_engagement" -> 1L))
+    assert(RawZone.warehouse(spark, wh.fact).count() === 3L)
+    assert(RawZone.warehouse(spark, wh.dimMedia).count() === 2L)
 
     // per-event grain: play_count null unless name='play' (A9)
     val fact = RawZone.warehouse(spark, wh.fact)
@@ -421,7 +485,8 @@ class PipelineSpec extends SparkSpec {
     writeRaw(s"$dir/raw", "20250501_000000", Seq(
       eventJson("e1", "v1", "abc", "2024-03-01T10:00:00Z", 0.2),
       eventJson("e2", "v1", "abc", "2024-03-01T10:00:20Z", 0.5)))
-    val written = Pipeline.runIncrementalLogged(spark, s"$dir/raw", wh,
+    // every runIncremental is logged: no separate logged variant
+    val written = Pipeline.runIncremental(spark, s"$dir/raw", wh,
       Seq("abc", "xyz"), ts0)
     assert(written === Map("dim_media" -> 2L, "fact_media_engagement" -> 2L))
     val log1 = graft.sources.RunLog.read(spark, s"${wh.root}/run_log")
@@ -433,7 +498,7 @@ class PipelineSpec extends SparkSpec {
     // second activation logs per-RUN rows: only the new event counts
     writeRaw(s"$dir/raw", "20250502_000000", Seq(
       eventJson("e3", "v2", "abc", "2024-03-01T10:00:25Z", 0.6)))
-    val w2 = Pipeline.runIncrementalLogged(spark, s"$dir/raw", wh,
+    val w2 = Pipeline.runIncremental(spark, s"$dir/raw", wh,
       Seq("abc", "xyz"), ts0)
     assert(w2("fact_media_engagement") === 1L)
     assert(graft.sources.RunLog.read(spark, s"${wh.root}/run_log")
@@ -448,7 +513,7 @@ class PipelineSpec extends SparkSpec {
     Files.createDirectories(java.nio.file.Paths.get(wh2.root))
     Files.createFile(java.nio.file.Paths.get(wh2.fact))
     intercept[Exception] {
-      Pipeline.runIncrementalLogged(spark, s"$dir2/raw", wh2, Seq("abc"), ts0)
+      Pipeline.runIncremental(spark, s"$dir2/raw", wh2, Seq("abc"), ts0)
     }
     val log2 = graft.sources.RunLog.read(spark, s"${wh2.root}/run_log")
       .select("stage", "status", "rows").collect()
@@ -458,54 +523,47 @@ class PipelineSpec extends SparkSpec {
     assert(log2("fact_media_engagement")._2 === -1L)
   }
 
-  test("runStreamingLogged: one run-log row per trigger incl. a failed trigger") {
-    val dir = Files.createTempDirectory("pipeline_strlog").toString
-    val wh = Pipeline.Warehouse(s"$dir/wh")
+  test("every lifecycle leaves only ok run-log rows carrying the rows it wrote") {
     val ts0 = Timestamp.valueOf("2025-05-01 00:00:00")
-    writeRaw(s"$dir/raw", "20250501_000000", Seq(
+    val events = Seq(
       eventJson("e1", "v1", "abc", "2024-03-01T10:00:00Z", 0.2),
-      eventJson("e2", "v1", "abc", "2024-03-01T10:00:20Z", 0.5)))
-    val q1 = Pipeline.runStreamingLogged(spark, s"$dir/raw", wh,
-      Seq("abc", "xyz"), ts0, s"$dir/ckpt")
-    q1.awaitTermination(60000)
-    assert(RawZone.warehouse(spark, wh.fact).count() === 2)
-    val log1 = graft.sources.RunLog.read(spark, s"${wh.root}/run_log")
-      .filter(col("pipeline") === "runStreaming").collect()
-    assert(log1.length === 1)
-    assert(log1(0).getAs[String]("stage").startsWith("fact_trigger_"))
-    assert(log1(0).getAs[String]("status") === "ok")
-    assert(log1(0).getAs[Long]("rows") === 2L)
-
-    // second activation = a new trigger, a new log row with the new
-    // batch's own count
-    writeRaw(s"$dir/raw", "20250502_000000", Seq(
-      eventJson("e3", "v2", "abc", "2024-03-01T11:00:00Z", 0.6)))
-    val q2 = Pipeline.runStreamingLogged(spark, s"$dir/raw", wh,
-      Seq("abc", "xyz"), ts0, s"$dir/ckpt")
-    q2.awaitTermination(60000)
-    val log2 = graft.sources.RunLog.read(spark, s"${wh.root}/run_log")
-      .filter(col("pipeline") === "runStreaming")
-      .orderBy("stage").collect()
-    assert(log2.length === 2)
-    assert(log2.map(_.getAs[Long]("rows")).toSeq === Seq(2L, 1L))
-
-    // failed trigger: block the fact path — the stream dies AND the
-    // failed trigger is in the log (status=failed, rows=-1), which is
-    // exactly the forensic a checkpoint restart needs
-    val dir2 = Files.createTempDirectory("pipeline_strlogfail").toString
-    val wh2 = Pipeline.Warehouse(s"$dir2/wh")
-    writeRaw(s"$dir2/raw", "20250501_000000", Seq(
-      eventJson("e1", "v1", "abc", "2024-03-01T10:00:00Z", 0.2)))
-    Files.createDirectories(java.nio.file.Paths.get(wh2.root))
-    Files.createFile(java.nio.file.Paths.get(wh2.fact))
-    val q3 = Pipeline.runStreamingLogged(spark, s"$dir2/raw", wh2,
-      Seq("abc"), ts0, s"$dir2/ckpt")
-    intercept[Exception] { q3.awaitTermination(60000); q3.stop() }
-    val log3 = graft.sources.RunLog.read(spark, s"${wh2.root}/run_log").collect()
-    assert(log3.length === 1)
-    assert(log3(0).getAs[String]("status") === "failed")
-    assert(log3(0).getAs[Long]("rows") === -1L)
-    assert(log3(0).getAs[String]("stage") === "fact_trigger_0")
+      eventJson("e2", "v1", "abc", "2024-03-01T10:00:20Z", 0.5),
+      eventJson("e3", "v2", "xyz", "2024-03-02T09:00:00Z", 0.0))
+    val targets = Seq("abc", "xyz")
+    // a streaming lifecycle's one trigger processes every event; its
+    // gates check 2 dim and 2 fact expectations
+    def streamed(q: org.apache.spark.sql.streaming.StreamingQuery,
+        gates: Map[String, Long]): Map[String, Long] = {
+      assert(q.awaitTermination(60000))
+      gates + ("fact_trigger_0" -> events.size.toLong)
+    }
+    // (lifecycle, run over <dir>/raw into <dir>/wh → the per-stage rows
+    // its run-log rows must carry)
+    val cases: Seq[(String, String => Map[String, Long])] = Seq(
+      "runBatch" -> (d => Pipeline.runBatch(spark, s"$d/raw",
+        Pipeline.Warehouse(s"$d/wh"), targets, ts0, scaleDivisor = 1.0)),
+      "runBatchIdempotent" -> (d => Pipeline.runBatchIdempotent(spark,
+        s"$d/raw", Pipeline.Warehouse(s"$d/wh"), targets, ts0, scaleDivisor = 1.0)),
+      "runBatchGated" -> (d => Pipeline.runBatchGated(spark, s"$d/raw",
+        Pipeline.Warehouse(s"$d/wh"), targets, ts0, scaleDivisor = 1.0)),
+      "runIncremental" -> (d => Pipeline.runIncremental(spark, s"$d/raw",
+        Pipeline.Warehouse(s"$d/wh"), targets, ts0)),
+      "runStreaming" -> (d => streamed(Pipeline.runStreaming(spark, s"$d/raw",
+        Pipeline.Warehouse(s"$d/wh"), targets, ts0, s"$d/ckpt"), Map.empty)),
+      "runStreamingGated" -> (d => streamed(Pipeline.runStreamingGated(spark,
+        s"$d/raw", Pipeline.Warehouse(s"$d/wh"), targets, ts0, s"$d/ckpt"),
+        Map("dq_gate_dim" -> 2L, "dq_gate_trigger_0" -> 2L))))
+    for ((name, run) <- cases) {
+      val dir = Files.createTempDirectory(s"pipeline_logged_$name").toString
+      writeRaw(s"$dir/raw", "20250501_000000", events)
+      val want = run(dir)
+      val log = graft.sources.RunLog.read(spark, s"$dir/wh/run_log").collect()
+      assert(log.forall(_.getAs[String]("pipeline") == name), name)
+      assert(log.forall(_.getAs[String]("status") == "ok"), name)
+      assert(log.map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows"))
+        .toMap === want, name)
+      assert(log.length === want.size, name)
+    }
   }
 
   test("runBatchGated: each planted violation kind blocks the load and is named in the run log") {
@@ -704,7 +762,7 @@ class PipelineSpec extends SparkSpec {
     assert(log(0).getAs[String]("status") === "failed")
   }
 
-  test("runBatchGated: a clean batch lands identically to runBatchLogged") {
+  test("runBatchGated: a clean batch lands identically to runBatch") {
     val ts0 = Timestamp.valueOf("2025-05-01 00:00:00")
     val events = Seq(
       eventJson("e1", "v1", "abc", "2024-03-01T10:00:00Z", 0.2),
@@ -718,7 +776,7 @@ class PipelineSpec extends SparkSpec {
     val whU = Pipeline.Warehouse(s"$dirU/wh")
     val gated = Pipeline.runBatchGated(spark, s"$dirG/raw", whG,
       Seq("abc", "xyz"), ts0, scaleDivisor = 1.0)
-    val ungated = Pipeline.runBatchLogged(spark, s"$dirU/raw", whU,
+    val ungated = Pipeline.runBatch(spark, s"$dirU/raw", whU,
       Seq("abc", "xyz"), ts0, scaleDivisor = 1.0)
     assert(gated - "dq_gate" === ungated)
     assert(gated("dq_gate") === 4L) // all four expectations checked
